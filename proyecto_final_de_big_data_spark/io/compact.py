@@ -120,7 +120,9 @@ def compact_dataset(
         df.repartition(n).write.mode("overwrite").parquet(out_path)
     # Re-list through the scan API so the count is filesystem-agnostic
     # (os.listdir would be local-only and would miscount _SUCCESS etc.).
-    written = len(spark.read.parquet(out_path).inputFiles())
+    # The output has the input's schema; passing it skips the footer-
+    # reading inference job a bare read launches.
+    written = len(spark.read.schema(df.schema).parquet(out_path).inputFiles())
     return CompactionReport(
         n_input_files=len(sizes),
         input_bytes=sum(sizes),
