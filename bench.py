@@ -6,13 +6,18 @@ local[$SPARK_GRAFT_CPUS] and prints ONE SHORT JSON line:
  "queries": {...summary...}, "sf": ...}
 
 Per-query timings go to BENCH_DETAIL.json next to this script — the
-stdout line is kept small because the driver tail-captures it (round 2's
-full 68-query dict overflowed the capture window and parsed as null).
+stdout line is kept small because the driver tail-captures it (a full
+per-query dict once overflowed the capture window and parsed as null).
 
 Each query is executed to completion (count() action) — results are not
-collected to the driver. A warm-up query primes the JVM/codegen first,
+collected to the driver. A warm-up battery primes the process first,
 and each query's reported time is the median of $SPARK_GRAFT_BENCH_RUNS
 (default 3) executions, per the BASELINE.md protocol.
+
+This module is also the one measurement harness the scripts under
+tools/ import: ``session`` (the Spark session), ``warm_up`` (the
+warm-up battery), ``warm_runs`` (back-to-back warm timings) and
+``start_load_gate``. Importing it starts nothing.
 """
 
 from __future__ import annotations
@@ -23,30 +28,29 @@ import re
 import statistics
 import sys
 import time
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
 from proyecto_final_de_big_data_spark.queries import QUERIES
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
+def start_load_gate() -> dict[str, object]:
+    """Block until the host's 1-minute loadavg drains below
+    $SPARK_GRAFT_MAX_START_LOAD (default 0.8), waiting up to
+    $SPARK_GRAFT_LOAD_WAIT_SEC (default 1800 s); past that, print the
+    ``start_load_gate`` error line and exit 1 rather than record a
+    polluted number. SPARK_GRAFT_IGNORE_LOAD=1 skips the wait, and the
+    returned record (written to BENCH_DETAIL.json) says so.
 
-    # Start-loadavg gate (BASELINE.md protocol, mechanical since r10):
-    # the r9 committed artifact started at loadavg 5.2 (residual from a
-    # prior attestation run) and read 1.25x vs r8 when the same code
-    # idle read 0.93x. A bench that starts loaded is noise, so refuse
-    # to start until the 1-minute load drains below the gate — waiting
-    # up to SPARK_GRAFT_LOAD_WAIT_SEC, then aborting loudly rather
-    # than committing a polluted number. SPARK_GRAFT_IGNORE_LOAD=1
-    # overrides deliberately (recorded in BENCH_DETAIL.json).
-    max_load = float(os.environ.get("SPARK_GRAFT_MAX_START_LOAD", "1.5"))
-    wait_budget = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT_SEC", "900"))
-    ignore_load = os.environ.get("SPARK_GRAFT_IGNORE_LOAD") == "1"
+    A bench that starts loaded is noise: identical code started at
+    loadavg 5.2 read 1.25x slower than when it started idle.
+    """
+    max_load = float(os.environ.get("SPARK_GRAFT_MAX_START_LOAD", "0.8"))
+    wait_budget = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT_SEC", "1800"))
+    ignored = os.environ.get("SPARK_GRAFT_IGNORE_LOAD") == "1"
     waited = 0.0
-    while os.getloadavg()[0] >= max_load and not ignore_load:
+    while os.getloadavg()[0] >= max_load and not ignored:
         if waited >= wait_budget:
             print(
                 json.dumps(
@@ -70,61 +74,91 @@ def main() -> None:
         )
         time.sleep(15)
         waited += 15
-    start_load = round(os.getloadavg()[0], 2)
+    return {
+        "start_load": round(os.getloadavg()[0], 2),
+        "max_start_load": max_load,
+        "ignored": ignored,
+    }
 
-    # Vanilla session (same load path as the external correctness
-    # harness) so bench can never be green on a query correctness
-    # cannot even load. Only sizing/process knobs are set, no semantics
-    # confs. The daemon module is process plumbing, not semantics: Spark
-    # culls idle Python workers after a HARDCODED minute
-    # (PythonWorkerFactory.IDLE_WORKER_TIMEOUT_NS), so in a 200+-query
-    # suite every Arrow/pandas query whose predecessor ran >1 min ago
-    # re-forks its 32-worker pool; forking from a daemon that has already
-    # imported numpy/pandas/pyarrow (pydaemon.py) turns that respawn from
-    # a concurrent import storm (measured 8-40 s per affected query
-    # mid-suite, the r11 stall signature) into a plain fork. Same conf in
-    # the production session factory (session.py) — the fix is
-    # scale-independent, not a local[32] tune.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
+
+def session(
+    app: str,
+    cpus: int | str | None = None,
+    conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """The measuring session every harness script uses: local[cpus]
+    (default $SPARK_GRAFT_CPUS, else 32) with as many shuffle partitions,
+    no UI, $SPARK_GRAFT_DRIVER_MEM (default 8g) driver memory and the
+    warm-pool Python-worker daemon. ``conf`` adds keys (event logging).
+
+    Only sizing and process knobs are set, no semantics confs, so this
+    is the same load path as the external correctness harness's vanilla
+    session. The daemon module is process plumbing, not semantics:
+    Spark culls idle Python workers after a hard-coded minute, so in a
+    long run every Arrow/pandas query whose predecessor ran over a
+    minute ago re-forks its worker pool; forking from a daemon that has
+    already imported numpy/pandas/pyarrow (pydaemon.py) turns that
+    respawn from a concurrent import storm (8-40 s per affected query)
+    into a plain fork. The production session factory sets it too.
+    """
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench")
-        .config("spark.sql.shuffle.partitions", cpus)
+        .appName(app)
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config(
-            "spark.python.daemon.module",
-            "proyecto_final_de_big_data_spark.pydaemon",
-        )
+        .config("spark.python.daemon.module", "proyecto_final_de_big_data_spark.pydaemon")
+        .config(map=conf or {})
         .getOrCreate()
     )
 
-    # Warm-up: JVM, codegen, parquet footer caches.
-    QUERIES["pricing_summary"].spark_fn(spark, sf_dir).count()
 
-    # MLlib class-loading/JIT and the Python-worker pool are one-time
-    # process costs, not per-query work — prime them untimed so the
-    # first ML / Pandas-UDF query isn't charged for process startup.
+def warm_up(spark: SparkSession, sf_dir: str) -> None:
+    """Pay the one-time process costs untimed, so the first measured
+    query is not charged for them: JVM, codegen and parquet footer
+    caches (pricing_summary), MLlib class loading and JIT (an LR fit),
+    the Python-worker pool (a pandas_udf), and the workers' one-time
+    import of this package, which the first mapInPandas closure pulls
+    in (a 64-row minhash)."""
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import LinearRegression
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
-    tiny = spark.createDataFrame([(float(i), float(i)) for i in range(32)], ["x", "y"])
-    assembled = VectorAssembler(inputCols=["x"], outputCol="features").transform(tiny)
-    LinearRegression(labelCol="y", featuresCol="features", solver="normal").fit(assembled)
-
-    _warm = pandas_udf(lambda s: s, "double")
-    tiny.select(_warm(F.col("x"))).count()
-
-    # Python workers import this package once per process (pulled in by
-    # the first mapInPandas closure) — prime that too, on 64 rows.
     from proyecto_final_de_big_data_spark.catalog import load_table
     from proyecto_final_de_big_data_spark.operators.dedup import minhash_signatures
 
+    QUERIES["pricing_summary"].spark_fn(spark, sf_dir).count()
+    tiny = spark.createDataFrame([(float(i), float(i)) for i in range(32)], ["x", "y"])
+    assembled = VectorAssembler(inputCols=["x"], outputCol="features").transform(tiny)
+    LinearRegression(labelCol="y", featuresCol="features", solver="normal").fit(assembled)
+    tiny.select(pandas_udf(lambda s: s, "double")(F.col("x"))).count()
     minhash_signatures(
         load_table(spark, sf_dir, "documents").limit(64), "doc_id", "text", num_hashes=4
     ).count()
+
+
+def warm_runs(fn: Callable[[], object], runs: int) -> list[float]:
+    """Wall times of ``runs + 1`` back-to-back ``fn()`` calls. Callers
+    take the median of ``[1:]``: the first call still pays the re-warm
+    after whatever ran before it."""
+    times = []
+    for _ in range(runs + 1):
+        t0 = time.perf_counter()
+        fn()
+        times.append(time.perf_counter() - t0)
+    return times
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else None
+
+    gate = start_load_gate()
+    spark = session("bench")
+    warm_up(spark, sf_dir)
 
     # Median of 3 runs per query (the BASELINE.md protocol): damps
     # one-off contention spikes — a single-run suite total swung 2x on a
@@ -147,9 +181,9 @@ def main() -> None:
             q.spark_fn(spark, sf_dir).count()
             samples[name].append(time.perf_counter() - t0)
         pass_durations.append(round(time.perf_counter() - p0, 2))
-    # Mid-bench contention gate (r10 verdict item 7): the start gate
-    # cannot see load that arrives mid-run (the r10 committed artifact
-    # carried a pass at loadavg 15.44), and the 1-minute loadavg
+    # Mid-bench contention marker: the start gate cannot see load that
+    # arrives mid-run (a committed artifact once carried a pass at
+    # loadavg 15.44), and the 1-minute loadavg
     # sampled between passes is self-polluted by the bench's own
     # 32-thread work — so the mechanical suspect marker compares the
     # PASS WALL TIMES instead: identical code on an idle host runs
@@ -167,11 +201,9 @@ def main() -> None:
     total = round(sum(timings.values()), 4)
 
     # Isolated-warm re-measurement of the 3 costliest queries (the
-    # BASELINE.md mover-audit protocol, now mechanical): their in-suite
-    # medians carry interleaved-pass cold effects (executor-memory
-    # churn from 170+ other plans between samples), which polluted
-    # round-over-round comparisons for pagerank/ml_train in r6/r7.
-    # Back-to-back warm runs right after the suite give the number a
+    # BASELINE.md mover-audit protocol): their in-suite medians carry
+    # interleaved-pass cold effects (executor-memory churn from 170+
+    # other plans between samples). Back-to-back warm runs right after the suite give the number a
     # human would get re-running the query alone; both are recorded so
     # a mover can be attributed to load/floor without a manual session.
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
@@ -190,14 +222,8 @@ def main() -> None:
         prev_timings = {}
 
     def _isolated_warm(name: str) -> dict[str, object]:
-        vals = []
-        for _ in range(runs + 1):
-            t0 = time.perf_counter()
-            QUERIES[name].spark_fn(spark, sf_dir).count()
-            vals.append(time.perf_counter() - t0)
+        vals = warm_runs(lambda: QUERIES[name].spark_fn(spark, sf_dir).count(), runs)
         return {
-            # drop the first back-to-back run: it still pays the
-            # re-warm after whatever query ran last in the suite
             "median_warm": round(statistics.median(vals[1:]), 4),
             "runs": [round(v, 4) for v in vals],
             "in_suite_median": timings[name],
@@ -208,10 +234,8 @@ def main() -> None:
         name: _isolated_warm(name) for name in top3
     }
 
-    # Mover audit (r10 verdict item 6): the top-3-costliest record
-    # missed this round's load-inflated lines (triangle/seq_patterns/
-    # ccnet/zorder read 1.5-2.5x slower driver-side but weren't top-3
-    # expensive), forcing manual adjudication. Mechanically isolate
+    # Mover audit: the top-3-costliest record misses load-inflated
+    # queries that are not among the costliest. Mechanically isolate
     # the top-5 REGRESSIONS vs the previous bench run (shared queries,
     # delta > 0.3 s so sub-noise jitter doesn't spend re-runs) so the
     # artifact itself says load-or-real for every mover.
@@ -243,11 +267,7 @@ def main() -> None:
                 "pass_durations_sec": pass_durations,
                 "pass_suspect": pass_suspect,
                 "loadavg_end": round(os.getloadavg()[0], 2),
-                "start_load_gate": {
-                    "start_load": start_load,
-                    "max_start_load": max_load,
-                    "ignored": ignore_load,
-                },
+                "start_load_gate": gate,
                 "protocol": "median of interleaved round-robin passes",
                 "isolated_warm_top3": isolated_warm,
                 "isolated_warm_movers": isolated_warm_movers,
@@ -260,9 +280,7 @@ def main() -> None:
     # "load" is the PRE-WARM-UP start sample (the value the start-load
     # gate checked): pass_loads[0] is taken AFTER the bench's own
     # JVM/MLlib/daemon warm-up and therefore reads 1.5-3 even on an
-    # idle-gated host, which made the r10/r11 driver runs look
-    # contended (PERF "now_bench_ok: false") when the gate had passed
-    # at <0.15. Per-pass loads stay in BENCH_DETAIL.json
+    # idle-gated host. Per-pass loads stay in BENCH_DETAIL.json
     # (loadavg_per_pass), self-pollution documented there.
     print(
         json.dumps(
@@ -272,7 +290,7 @@ def main() -> None:
                 "unit": "sec",
                 "sf": sf,
                 "n_queries": len(timings),
-                "load": start_load,
+                "load": gate["start_load"],
                 "detail": "BENCH_DETAIL.json",
             }
         )

@@ -7,13 +7,20 @@ all columns, round doubles to 9 significant digits, then compare values.
 from __future__ import annotations
 
 import math
-from typing import Any
+import time
+import traceback
+from typing import TYPE_CHECKING, Any
 
 import duckdb
 import numpy as _np
 import pandas as pd
 
 from .catalog import TABLES
+
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
+
+    from .queries.registry import Query
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
@@ -67,3 +74,28 @@ def compare(spark_df, oracle_df: pd.DataFrame) -> tuple[bool, str]:
         diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
         return False, f"value mismatch; first diffs (spark vs oracle): {diffs}"
     return True, "ok"
+
+
+def check(spark: SparkSession, query: Query, sf_dir: str) -> dict[str, Any]:
+    """Verdict for one registered query at ``sf_dir``: builds it, then
+    compares it with its DuckDB oracle, or only counts its rows when it
+    has none (``oracle=None``).
+
+    Returns ``{"status": "ok" | "fail" | "rows_only" | "error", "sec": s}``
+    plus ``"rows"`` for rows_only and ``"detail"`` for fail and error. A
+    query that raises is reported as error (traceback on stderr), not
+    propagated, so a catalog sweep keeps going.
+    """
+    t0 = time.perf_counter()
+    try:
+        df = query.spark_fn(spark, sf_dir)
+        if query.oracle is None:
+            out: dict[str, Any] = {"status": "rows_only", "rows": df.count()}
+        else:
+            ok, msg = compare(df, run_oracle(query.oracle, sf_dir))
+            out = {"status": "ok"} if ok else {"status": "fail", "detail": msg}
+    except Exception as e:  # noqa: BLE001 - a sweep reports and continues
+        traceback.print_exc()
+        out = {"status": "error", "detail": f"{type(e).__name__}: {str(e)[:200]}"}
+    out["sec"] = round(time.perf_counter() - t0, 2)
+    return out

@@ -6,9 +6,8 @@ mart catalog; each mart is still its own job (independent sinks) but
 reads the cached partitions.
 
 At 100 TB, persist() of the full input may not fit even MEMORY_AND_DISK
-budgets — the runner therefore also supports ``shared_scan`` mode off
-(plain re-read) and the real fix at scale: multi-aggregate FUSION, where
-marts sharing a grouping key are computed in ONE pass (``fuse_marts``).
+budgets — the fix at scale is multi-aggregate FUSION, where marts
+sharing a grouping key are computed in ONE pass (``fuse_marts``).
 """
 
 from __future__ import annotations
@@ -25,14 +24,13 @@ def run_marts(
     input_df: DataFrame,
     marts: Mapping[str, MartFn],
     sink: Callable[[str, DataFrame], None] | None = None,
-    shared_scan: bool = True,
 ) -> dict[str, DataFrame]:
-    """Fan out the mart catalog over a single (optionally persisted) scan.
+    """Fan out the mart catalog over a single persisted scan.
 
     ``sink(name, df)`` is invoked per mart (e.g. parquet write); when
     None, the materialized DataFrames are just returned.
     """
-    src = input_df.persist(StorageLevel.MEMORY_AND_DISK) if shared_scan else input_df
+    src = input_df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         out: dict[str, DataFrame] = {}
         for name, fn in marts.items():
@@ -42,8 +40,7 @@ def run_marts(
             out[name] = df
         return out
     finally:
-        if shared_scan:
-            src.unpersist()
+        src.unpersist()
 
 
 def fuse_marts(

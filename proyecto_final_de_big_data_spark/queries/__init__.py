@@ -22,1167 +22,60 @@ from . import contracts  # noqa: E402,F401
 from . import temporal  # noqa: E402,F401
 from . import quality  # noqa: E402,F401
 
-# --- Explicit registration order -------------------------------------
 # The external verification harness checks the FIRST 50 registered
-# queries each round, so dict order is a verification-coverage decision,
-# not cosmetics. The window below puts every query family under the
-# oracle gate — contracts, ML, streaming, kNN/IVF, media, bucketed join
-# included — and rotates redundant variants of already-multiply-verified
-# families behind position 50. Round-5 rotation (VERDICT r4 item 1): the
-# 7 never-driver-verified queries (CUBE, ORC round trip, ingest
-# manifest, the 4 real-stream-mode queries) plus the 2 new gates
-# (ml_feature_matrix_contract, quarter_resolution_contract) rotate IN;
-# 9 three-or-four-round-green twins whose operator family keeps an
-# in-window representative rotate OUT (lineitem_by_returnflag,
-# quantity_bins, variability_by_hour, errors_by_month ⊂ marts family;
-# cumulative_hour_share, customer_region_decode ⊂ dashboard analytics;
-# export_round_trip_json ⊂ round-trip family; rollup_returnflag_status
-# superseded by its CUBE sibling; lang_id_confusion ⊂ text family).
-# Rotated queries remain fully registered and pytest-gated
-# (tests/test_oracle_parity.py runs the whole catalog).
-#
-# Round-5 additions (this session): 4 new hash-gated queries rotate IN
-# (pii_redaction_profile, repetition_profile, tfidf_top_terms,
-# embedding_kmeans_contract) so they earn a driver row the round they
-# land; 4 multiply-green unchanged twins rotate OUT with their operator
-# family still represented (export_round_trip_csv ⊂ round-trip family —
-# ORC + partitioned stay; running_customer_spend — row_number windows
-# now also gated via tfidf_top_terms, top3_orders_per_customer r2-green;
-# text_stats_by_lang ⊂ text family — repetition/tfidf/pii supersede;
-# doc_hash_split_profile — hash_split stays oracle-gated inside
-# curation_pipeline_profile). Plus 2 more round-5 additions
-# (rolling_user_zscore — RANGE-frame trailing baseline;
-# hourly_counts_gapfilled — dense time grid) swapping with
-# top_suppliers (top-k family keeps top_parts r2-green +
-# TakeOrderedAndProject plan assertion) and approx_distinct_contract
-# (r3+r4 green on unchanged code; approx_quantile_contract keeps the
-# sketch/approx family in-window). And 2 final round-5 additions
-# (incremental_dedup_profile, temperature_mix_profile) swapping with
-# two ROWS-ONLY entries whose hash-gated siblings stay in-window
-# (knn_ann_ivf — knn_ann_ivf_recall is the IVF hash gate;
-# ml_score_profile — ml_train_metrics + ml_feature_matrix_contract +
-# embedding_kmeans_contract keep the ML family gated): a net upgrade
-# from 2 rows-only checks to 2 exact-hash gates.
-# Round-6 rotation queue (late round-5 additions; the r5 window was
-# already saturated with first-verification entries, so these four new
-# gates sit behind position 50 with full DuckDB parity in
-# tests/test_oracle_parity.py until they rotate in):
-#   table_profile_contract, scd2_user_state_history,
-#   blocklist_filter_profile, data_quality_contract,
-#   token_budget_selection_profile, session_stats_by_dow,
-#   heavy_hitter_keys (two-phase sampled heavy hitters),
-#   hll_mergeable_rollup_contract (DataSketches HLL partial/merge),
-#   kll_quantile_rollup_contract (mergeable KLL quantile partials),
-#   theta_cohort_overlap_contract (Theta set algebra:
-#   union/intersect/A-NOT-B cohort overlap),
-#   variant_props_stats (VARIANT parse-once/typed-get payloads),
-#   priority_pivot_by_year + priority_unpivot_round_trip (explicit-value
-#   pivot and its unpivot inverse)
-#   (compaction_contract is already in-window).
-# Rotation-OUT candidates once r5 lands green: approx_quantile_contract
-# (r3+r4+r5 on unchanged clean.py), events_in_first_day_window (r4+r5,
-# if asof.py stays unchanged), canonicalize_contract /
-# export_round_trip_partitioned (multi-round green — move the family
-# probes to their CSV/JSON round-trip twins when swapping).
-# Rotation-IN candidates for r8 (register EARLY in the round so the
-# same-round-slot rule is honored with slots to spare): the round-7
-# pytest-gated surfaces with SQL-trivial oracles —
-# k_anonymity_profile (one GROUP BY + rollup), brier_and_ece (bucket
-# algebra, the ml_auc oracle pattern), basket_size_profile (one agg).
-# isotonic calibration stays pytest-only (PAV's merge loop is not
-# SQL-restatable without re-implementing it in a recursive CTE).
-#
-# Rotation-OUT candidates once r7 lands green (for the r8 window):
-# the 27 round-7-new entries will have first-round evidence and the
-# multi-round-green carryovers (python_datasource r6+r7,
-# table_profile r6+r7, scd2 r6+r7, blocklist r6+r7, data_quality
-# r6+r7, token_budget r6+r7, heavy_hitter r6+r7, theta r6+r7, variant
-# r6+r7, priority_pivot r6+r7, zorder r6+r7, media_binary r6+r7,
-# ml_score r6+r7, embedding_kmeans r5+r6+r7) become the swap pool —
-# BUT each is its family's only in-window rep, so an r8 swap must
-# name the sibling that keeps the family covered (the hll/kll→theta
-# consolidation pattern), or rotate freshly-green r7 twins instead
-# (e.g. one of the two funnel gates, one of ml_auc/ml_lift once both
-# are green, jackknife vs ml_cv — same sufficient-stats family).
-# ----------------------------------------------------------------------
-# Rotation plan for r9 (write the swaps HERE when executing): once the
-# r8 window lands green, the 27 r8-new in-window entries (the 23
-# early-round registrations plus the late-r8 quartet
-# bloom_pruned_join_contract / anova_oneway_contract /
-# rank_test_contract / jw_name_match_profile) become first-round-green
-# swap currency. Multi-round-green carryovers eligible to rotate out
-# with their family notes: python_datasource, data_quality,
-# token_budget, heavy_hitter, theta, variant, priority_pivot, zorder,
-# media_binary (r6+r7+r8 once green) — but each is its family's ONLY
-# in-window rep, so any swap must name a sibling or rotate an r8 twin
-# instead (candidate twin pairs: anova/rank_test — hyptest.py;
-# cuped/experiment_power — abtest.py; knn_ann_pq/knn_ann_ivf_pq —
-# pq.py; basket_size/item_affinity — basket.py). Rotated-out r7/r8
-# greens with standing off-window evidence: pagerank, ml_auc,
-# drift_psi, knn_ann_ivf_sq (late-r8 swaps), fuzzy_name_match,
-# event_transition_matrix, weekly_retention, ml_lift,
-# ml_classification_report, jackknife (early-r8 swaps) — all remain in
-# the full-catalog attestation (tools/oracle_full.py) every round.
-# ----------------------------------------------------------------------
-# ROUND-8 ROTATION (VERDICT r7 item 1 + the documented r8 pool above):
-# the four round-7 pytest-only surfaces are now registered with full
-# DuckDB oracles and rotate IN the round they are registered (standing
-# rule). Each swap names the sibling that keeps the family covered;
-# all four rotated-out entries are r7 first-round hash-green on code
-# whose relevant paths are unchanged this round:
-#   ml_lift_table_contract -> brier_ece_contract (classifier-eval
-#     family keeps ml_auc_contract + ml_classification_report_contract
-#     in-window; this round's evaluation.py change is local to
-#     brier_and_ece — exactly the function the NEW gate verifies — and
-#     the equal-frequency binning machinery lift re-exercises stays
-#     gated by decile_profile_contract).
-#   weekly_retention_cohorts -> k_anonymity_contract (funnel/retention
-#     family keeps event_funnel_profile in-window; funnel.py unchanged).
-#   jackknife_ratio_contract -> weighted_percentile_contract (the
-#     sufficient-statistics stats.py family keeps
-#     correlation_matrix_contract + autocorrelation_contract +
-#     categorical_association_contract in-window; stats.py unchanged.
-#     The new gate ALSO re-verifies clean.py, changed this round by the
-#     negative-weight guard).
-#   ml_classification_report_contract -> basket_size_profile (the
-#     classifier-eval family keeps ml_auc_contract + the NEW
-#     brier_ece_contract in-window — still two evaluation.py gates,
-#     one of them exactly the changed function. The basket family
-#     gains a second rep next to item_affinity_contract — deliberate:
-#     the new gate is the cap-pressure report that SIZES
-#     item_pair_affinity's max_basket guard. session_path_profile
-#     deliberately stays IN: it is the sessionization family's only
-#     in-window representative).
-# isotonic calibration stays pytest-only with its documented rationale
-# (PAV's pool-merge loop is not SQL-restatable without re-implementing
-# the algorithm in a recursive CTE — an oracle that shares the bug).
-# ----------------------------------------------------------------------
-# ROUND-9 ROTATION (VERDICT r8 item 1, executed per the pre-planned
-# pool above): five r9-new gates take same-round slots; every swap is
-# a FAMILY UPGRADE — the incoming gate exercises the outgoing entry's
-# machinery plus a new surface, or the family keeps a same-machinery
-# sibling in-window. Code changed this round stays gated:
-# bloomjoin.py (type-coercion fix) via bloom_pruned_join_contract,
-# hyptest.py (distinct-grid guard) via rank_test_contract +
-# anova_oneway_contract, the _pair_recall broadcast via
-# knn_ann_pq_recall + both new recall gates, crossval.py's new
-# function via learning_curve_contract. The five swaps are written at
-# their window positions below.
-# ----------------------------------------------------------------------
-# ----------------------------------------------------------------------
-# Rotation plan for r10 (write the swaps at their window positions when
-# executing): once the r9 window lands green, the TWELVE r9-new
-# in-window entries become first-round-green swap currency
-# (cosine_allpairs, dsir_selection, duplicate_span_removal,
-# learning_curve, knn_ann_ivf_pq_refine, holt_forecast, did, msprt,
-# l_diversity, gopher_rules, ccnet_bucket, frequent_itemsets,
-# assoc_rules, seq_patterns, fs_linkage, jl_projection, bh_fdr — 17
-# with the late batch). Twin pairs inside the window that can
-# consolidate to one rep if slots run short: frequent_itemsets /
-# assoc_rules (itemsets.py, same fit), anova / rank_test / bh_fdr
-# (hyptest.py — keep whichever gates any r10 change), did / cuped /
-# msprt (abtest.py), holt / ewma (series fold machinery). Multi-green
-# carryovers that are their family's ONLY rep and should stay unless a
-# same-family upgrade lands: data_quality, theta, variant,
-# priority_pivot, zorder, media_binary, python_datasource, cdc_merge,
-# tws (x4 probes), survival_km, correlation_matrix, incremental_agg,
-# target_encoding, triangle_count, session_path, windowed_funnel,
-# rater_agreement, ml_tree_ensemble, weighted_ksample,
-# weighted_percentile, brier_ece, cuped, setsim_prefix_join,
-# robust_outlier. Rotated-out r8/r9 greens with standing off-window
-# evidence (full-catalog attested every round): bootstrap_ci,
-# experiment_power, robust_scaler, rolling_active_users, benford,
-# jw_name_match, negative_sampling, conformal_interval, lorenz_gini,
-# basket_size, heavy_hitter, k_anonymity, containment_pairs,
-# winnowing_fingerprint, seasonal_decomposition, ml_cv.
-# ----------------------------------------------------------------------
-# ----------------------------------------------------------------------
-# Rotation plan for r11 (write the swaps at their window positions when
-# executing): once the r10 window lands green, the ELEVEN r10-new
-# in-window entries become first-round-green swap currency
-# (curate_span_strip, label_propagation, modularity, k_core,
-# holt_winters, knn_ann_ivf_increment, srm, blocking_profile,
-# neyman_allocation, cmh, llr_keyness). Twin pairs inside the window that can consolidate
-# if slots run short: label_propagation / modularity (graph.py — the
-# modularity oracle re-derives the LPA labels, so it can carry both) ,
-# triangle / k_core (graph.py degree machinery), holt / holt_winters
-# (holt.py — HW is the superset recursion), did / msprt / srm
-# (abtest.py), fs_linkage / blocking_profile (linkage.py),
-# weighted_ksample / neyman (split.py). Multi-green carryovers that are
-# their family's ONLY rep and should stay unless a same-family upgrade
-# lands: data_quality, theta, variant, priority_pivot, zorder,
-# media_binary, python_datasource, cdc_merge, tws, survival_km,
-# correlation_matrix, incremental_agg, target_encoding, session_path,
-# windowed_funnel, rater_agreement, ml_tree_ensemble, brier_ece,
-# weighted_percentile, setsim_prefix_join, robust_outlier,
-# hybrid_search_rrf, bloom_pruned_join, attribution, dsir, seq_patterns,
-# learning_curve, l_diversity, bh_fdr, gopher, ccnet. Rotated-out
-# r8/r9/r10 greens with standing off-window evidence (full-catalog
-# attested every round): duplicate_span_removal, assoc_rules, cuped,
-# ewma_anomaly, knn_ann_pq, rank_test, anova_oneway,
-# seasonal_decomposition, rfm_segment, did, cosine_allpairs,
-# bootstrap_ci, experiment_power, containment_pairs,
-# winnowing_fingerprint, ml_cv, basket_size, heavy_hitter,
-# k_anonymity.
-# ----------------------------------------------------------------------
-# r11 EXECUTION of the plan above (amended per VERDICT r10): THREE
-# swaps — srm_contract -> bfs_distances_contract (graph.py changed this
-# round, so the three graph gates + the new BFS gate all stay/land
-# in-window), knn_ann_ivf_increment_contract ->
-# ranking_metrics_contract (similarity_ivf.py unchanged;
-# hybrid_search_rrf + the IVF+PQ refine gate keep retrieval
-# in-window), and late-r11 cmh_contract -> pmi_collocations_contract
-# (abtest.py unchanged; msprt keeps the experimentation family
-# in-window). Late-r11 session added THREE more swaps for the three
-# late operators: seq_patterns_contract -> ks_drift_contract (r9+r10
-# green, seqmine.py unchanged; frequent_itemsets keeps mining
-# in-window), session_path_profile -> adamic_adar_contract (green
-# since r6, paths/sessionize unchanged; windowed_funnel + attribution
-# keep the behavioral family in-window), and dsir_selection_contract
-# -> ccf_lead_lag_contract (r9+r10 green, dsir.py unchanged;
-# weighted_ksample + gopher/ccnet keep selection/screening
-# in-window). holt_winters_contract is NOT rotation currency (r10
-# driver-red on oracle portability; oracle restated r11 in the flat
-# grow-state style, gate held in-window until driver-green — VERDICT
-# r10 item 1). The keyness/linkage/split/stats/graph/hyptest gates
-# also stay in-window: their modules changed this round (ADVICE
-# fixes + the late operators). Rotation plan for r12: once the r11
-# window lands green, first-round-green currency = bfs_distances,
-# ranking_metrics, pmi_collocations, ks_drift, adamic_adar,
-# ccf_lead_lag (+ holt_winters if finally driver-green, whose family
-# sibling holt_forecast machinery stays evidenced via the series
-# family); the remaining r10 greens listed above stay currency where
-# their modules are untouched in r12 (curate_span_strip is the one
-# never-rotated r10 green left).
-# ----------------------------------------------------------------------
+# queries, so dict order is a verification-coverage decision, not
+# cosmetics. _VERIFICATION_WINDOW is that window: one representative per
+# query family, so every family sits under the driver's oracle gate;
+# tests/test_registry.py pins the window and its family coverage. Every
+# other query registers after it, in import order, and stays gated by
+# tests/test_oracle_parity.py, which runs the whole catalog.
 _VERIFICATION_WINDOW = [
-    # ------------------------------------------------------------------
-    # ROUND-6 ROTATION (VERDICT r5 item 3): the entire 14-query queue of
-    # never-driver-verified registrations rotates IN — after this window
-    # lands green, ZERO registered queries lack driver evidence. The
-    # python_datasource_contract entry is the r5 wrong-answer bug, now
-    # fixed (fresh relation per branch; see io/pydatasource.py docstring
-    # and tests/test_pydatasource.py mixed-branch regression).
     "python_datasource_contract",
-    # r8: table_profile_contract (r6+r7 green, operators/profile.py
-    # unchanged; the one-pass agg-profiling surface keeps FOUR
-    # in-window reps — decile_profile_contract, robust_outlier_profile,
-    # rfm_segment_profile and basket_size_profile are all
-    # aggregate-then-profile readouts) hands its slot to
-    # containment_pairs_contract — asymmetric containment near-dup
-    # pairs (operators/setsim.py:containment_pairs), new this round
-    # (same-round-slot rule); the quotation/subset case the Jaccard
-    # gates structurally miss.
-    # r9: containment_pairs_contract (r8 first-round hash-green;
-    # setsim.py's containment path unchanged this round — the module
-    # diff is docstring-only) hands its slot to
-    # cosine_allpairs_contract — the APSS weighted-cosine join
-    # (operators/apss.py, Bayardo et al. WWW'07), new this round
-    # (same-round-slot rule). The set-similarity family keeps
-    # setsim_prefix_join_contract in-window (the SAME global-order
-    # prefix-filter machinery, exact Jaccard flavor); containment
-    # stays full-catalog attested + pytest DuckDB-parity gated.
-    # r10 (late): cosine_allpairs_contract (r9 first-round hash-green
-    # against the brute-force all-pairs oracle; operators/apss.py
-    # unchanged this round) hands its slot to llr_keyness_contract —
-    # Dunning log-likelihood-ratio keyness (operators/keyness.py),
-    # new this round (same-round-slot rule). The tf-idf/term-weight
-    # text family keeps tfidf machinery evidence via the keyness
-    # gate's identical explode→term-agg shuffle shape, and the
-    # prefix-filter similarity family keeps setsim_prefix_join
-    # in-window; APSS stays full-catalog attested + pytest
-    # DuckDB-parity gated (its losslessness proof is pinned there).
     "llr_keyness_contract",
-    # r8: scd2_user_state_history (r6+r7 green, operators/scd.py
-    # untouched this round; named swap currency in the VERDICT r7
-    # rotation pool — the ordered per-key window state machinery stays
-    # in-window via attribution_contract's reverse cumulative window
-    # and session_path_profile's user-keyed ordered windows) hands its
-    # slot to bootstrap_ci_contract — one-pass Poisson-bootstrap
-    # percentile CIs (operators/bootstrap.py, Chamandy et al. 2012),
-    # new this round (same-round-slot rule); the stats family gains
-    # the resampling-free uncertainty readout next to the jackknife's
-    # delete-one-stratum estimator (full-catalog attested behind the
-    # window).
-    # r9 (late): bootstrap_ci_contract (r8 first-round hash-green;
-    # bootstrap.py unchanged this round) hands its slot to
-    # holt_forecast_contract — Holt linear-trend smoothing + one-step
-    # forecast anomalies (operators/holt.py), new this round
-    # (same-round-slot rule). The uncertainty family keeps
-    # conformal_interval_contract + weighted_percentile_contract
-    # in-window; the series-monitoring family gains the level+trend
-    # forecaster next to ewma_anomaly_contract — the SAME collect-fold-
-    # explode machinery (series.py collector) over the SAME per-type
-    # daily grid, plus the two-state recursion EWMA lacks.
     "holt_forecast_contract",
-    # r8: blocklist_filter_profile (r6+r7 green, content_filter.py and
-    # its query untouched this round; named swap currency in the
-    # VERDICT r7 rotation pool — the broadcast small-list filter
-    # machinery stays in-window via k_anonymity_contract's suppression
-    # semi-join and the selection surface via
-    # token_budget_selection_profile) hands its slot to
-    # cuped_ab_contract — CUPED variance-reduced mean comparison
-    # (operators/abtest.py:cuped_mean_ztest, Deng et al. WSDM'13), new
-    # this round (same-round-slot rule); the experimentation family
-    # gains the continuous-metric readout next to ab_test_contract's
-    # proportion z-test.
-    # r10: cuped_ab_contract (r8+r9 first-round-then-repeat green;
-    # abtest.py's only change this round is a docstring clarification
-    # on msprt's zero-variance NULL case — non-material, and the
-    # experimentation family keeps TWO in-window abtest.py reps:
-    # did_contract + msprt_contract, the latter gating the function
-    # whose docstring changed) hands its slot to modularity_contract —
-    # Newman modularity of the LPA partition (operators/graph.py:
-    # modularity), new this round (same-round-slot rule). The graph
-    # family completes its community story in-window: assignment
-    # (label_propagation_contract) + quality score (this gate, whose
-    # oracle re-derives the labels through the shared unrolled-CTE
-    # replay — a second independent check on the LPA machinery).
     "modularity_contract",
     "data_quality_contract",
-    # r9: token_budget_selection_profile (r6+r7+r8 green, the named
-    # longest-green swap currency in the r8 pool; selection.py/
-    # mixing.py unchanged this round) hands its slot to
-    # dsir_selection_contract — DSIR importance selection over hashed
-    # n-gram log-likelihood ratios (operators/dsir.py, Xie et al.
-    # NeurIPS'23), new this round (same-round-slot rule). The
-    # data-selection family keeps an in-window rep (importance-based
-    # next to the budget-based selection that rotates to full-catalog
-    # attestation + pytest parity), and the quality/mixing selection
-    # surfaces stay repped by k_anonymity_contract's suppression and
-    # negative_sampling_contract's md5-draw machinery.
-    # r11 (late): dsir_selection_contract (r9+r10 driver-green,
-    # dsir.py unchanged this round; the data-selection family keeps
-    # weighted_ksample_contract's deterministic-draw machinery and
-    # the gopher/ccnet quality screens in-window) hands its slot to
-    # ccf_lead_lag_contract — Box-Jenkins cross-correlation lead/lag
-    # discovery between two metric series (operators/stats.py:
-    # cross_correlation), new this round (same-round-slot rule); the
-    # series family gains the two-series asymmetric sibling next to
-    # the autocorrelation machinery it extends (stats.py changed this
-    # round, so the correlation_matrix gate stays in-window beside
-    # it). dsir stays full-catalog attested + pytest parity-gated.
     "ccf_lead_lag_contract",
-    # session_stats_by_dow (r6 green, sessionize.py unchanged; the
-    # sessionize family stays in-window via session_path_profile's
-    # identical gap-split machinery) hands its slot to
-    # cusum_changepoint_contract — two-sided CUSUM level-shift
-    # detection (operators/changepoint.py), new this round.
-    # r8: cusum_changepoint_contract (r7 first-round green,
-    # changepoint.py unchanged; the series-monitoring family keeps
-    # ewma_anomaly_contract + event_type_trend_contract in-window)
-    # hands its slot to triangle_count_contract — degree-oriented
-    # triangle counting / local clustering (operators/graph.py:
-    # triangle_stats), new this round (same-round-slot rule); the
-    # graph family gains the join-based sibling next to pagerank's
-    # Pregel iteration.
     "triangle_count_contract",
-    # r9 (late): heavy_hitter_keys (r6+r7+r8 hash-green — the
-    # longest-green entry remaining in the window; heavy_hitters.py
-    # unchanged since r6) hands its slot to seq_patterns_contract —
-    # PrefixSpan sequential-pattern mining over per-user event
-    # prefixes (operators/seqmine.py, Pei et al. ICDE'01), new this
-    # round (same-round-slot rule). The screening family keeps
-    # data_quality_contract + the NEW gopher_rules_contract in-window
-    # and the sampled/sketched-summary family keeps
-    # theta_cohort_overlap_contract; heavy hitters stay full-catalog
-    # attested + pytest parity-gated. The new gate's oracle is a
-    # brute-force subsequence enumeration — different algebra from
-    # the projection-database mining (the round's different-algebra
-    # discipline, with FP-Growth's brute-force twin).
-    # r11 (late): seq_patterns_contract (r9+r10 hash-green,
-    # seqmine.py unchanged this round; the pattern-mining family
-    # keeps frequent_itemsets_contract + attribution's sequence
-    # machinery in-window) hands its slot to ks_drift_contract —
-    # per-key two-sample Kolmogorov-Smirnov drift (operators/
-    # hyptest.py:ks_two_sample, Smirnov 1939/Massey 1951), new this
-    # round (same-round-slot rule). The drift family gains the exact
-    # ECDF-distance sibling next to drift_psi_contract's binned-mass
-    # readout (PSI stays full-catalog attested + pytest parity); the
-    # oracle is DIFFERENT ALGEBRA — non-equi-join ECDF evaluation,
-    # no window functions, so a cumsum-window bug cannot
-    # self-confirm.
     "ks_drift_contract",
-    # hll_mergeable_rollup_contract + kll_quantile_rollup_contract
-    # (r6 green, sketches.py unchanged; the mergeable-sketch family
-    # keeps theta_cohort_overlap + cm_frequency_rollup in-window, and
-    # the quantile surface keeps decile_profile + robust_outlier) hand
-    # their slots to the two supervised feature-prep gates, new this
-    # round: woe_iv_contract (scorecard screening) and
-    # target_encoding_contract (leakage-safe LOO mean encoding).
-    # r8: woe_iv_contract (r7 first-round green, woe.py unchanged;
-    # the supervised feature-screening family keeps
-    # target_encoding_contract — whose encode.py CHANGED this round
-    # and so must stay gated — plus categorical_association_contract's
-    # chi2/Cramer/MI screen in-window) hands its slot to
-    # rolling_active_users — DAU/WAU/stickiness via the
-    # dedup-then-expand sliding-distinct shape (operators/activity.py),
-    # new this round (same-round-slot rule).
-    # r9 (late): rolling_active_users (r8 first-round hash-green;
-    # activity.py unchanged this round — its range-join oracle is also
-    # one of the standing different-algebra exemplars) hands its slot
-    # to gopher_rules_contract — the Gopher/MassiveWeb document-quality
-    # rule set rolled up per language (operators/quality.py:
-    # gopher_quality_flags, Rae et al. 2021), new this round
-    # (same-round-slot rule) and gating exactly the r9-changed module
-    # (quality.py gains the new function; the repetition-rule paths are
-    # untouched). The behavioral-activity family keeps
-    # session_path_profile + windowed_funnel_contract +
-    # rfm_segment_profile in-window; DAU/WAU stays full-catalog
-    # attested + pytest DuckDB-parity gated.
-    # r11 (late): gopher_rules_contract (r9+r10 hash-green,
-    # operators/quality.py unchanged this round; the quality-screening
-    # family keeps ccnet_bucket_contract + data_quality_contract
-    # in-window) hands its slot to pacf_contract — partial
-    # autocorrelation via unrolled Durbin-Levinson over the ACF
-    # estimates (operators/stats.py:pacf_by_key), new this round
-    # (same-round-slot rule) and the THIRD gate on the r11-changed
-    # stats.py, beside correlation_matrix + ccf_lead_lag. gopher
-    # stays full-catalog attested + pytest DuckDB-parity gated.
     "pacf_contract",
     "target_encoding_contract",
     "theta_cohort_overlap_contract",
     "variant_props_stats",
-    # r11 (late): priority_pivot_by_year (hash-green every round since
-    # r2 on unchanged pivot code — the longest-green entry remaining
-    # in the window; variant_props_stats keeps the marts/pivot family
-    # in-window directly above) hands its slot to
-    # effect_size_contract — Cohen's d / Hedges' g standardized mean
-    # difference (operators/hyptest.py:effect_size), new this round
-    # (same-round-slot rule) and a THIRD gate on hyptest.py, which
-    # changed this round — bh_fdr + ks_drift stay in-window beside
-    # it. priority_pivot stays full-catalog attested + pytest
-    # DuckDB-parity gated.
     "effect_size_contract",
-    # priority_unpivot_round_trip (r6 green, relational pivot code
-    # unchanged; the pivot family keeps priority_pivot_by_year
-    # in-window and the unpivot inverse stays pytest-gated) hands its
-    # slot to benford_profile_contract — Benford first-digit screening
-    # (operators/benford.py), new this round (same-round-slot rule).
-    # r9 (late): benford_profile_contract (r8 first-round hash-green;
-    # benford.py unchanged this round) hands its slot to
-    # ccnet_bucket_contract — CCNet head/middle/tail perplexity
-    # partitioning (operators/ccnet.py, Wenzek et al. LREC'20), new
-    # this round (same-round-slot rule). The data-screening family
-    # keeps data_quality_contract + heavy_hitter_keys + the NEW
-    # gopher_rules_contract in-window; Benford stays full-catalog
-    # attested + pytest DuckDB-parity gated. The new gate additionally
-    # re-exercises the full lm_score.py scoring pipeline (vocab fit,
-    # OOV bucket, per-doc NLL) inside its oracle — the lm family's
-    # in-window evidence upgrades from rotated lm_quality_by_lang's
-    # per-lang rollup to per-doc-rounded bucketing.
     "ccnet_bucket_contract",
-    # Fourteen r5-green entries rotate OUT to make room, each leaving
-    # its operator family represented in-window and its code unchanged
-    # this round (pytest DuckDB parity still runs the full catalog):
-    #   grouped_outlier_clip_profile (clean.py quantile family keeps
-    #     compaction_contract's profile + the r3/r4-green approx twins),
-    #   salted_event_type_stats (skew tools; bucketed_colocated_join
-    #     keeps the layout family in-window),
-    #   release_manifest_contract + snapshot_diff_profile (dataset
-    #     versioning; cdc_merge_contract keeps the family gated),
-    #   rolling_user_zscore + hourly_counts_gapfilled (temporal grid;
-    #     interpolated_user_series stays),
-    #   text_normalize_profile (text family keeps pii/repetition/
-    #     boilerplate/tfidf in-window),
-    #   cube_returnflag_status (grouping sets r2-r5 green, relational
-    #     family keeps priority_pivot/unpivot NEW in-window),
-    #   events_in_first_day_window (asof.py unchanged since the r5
-    #     NULL-bound fix; named rotation-out candidate in r5 notes),
-    #   near_dup_clusters (graph family keeps cluster_keep_best_profile
-    #     over the SAME pair graph + recursive-CTE oracle),
-    #   stratified_sample_profile (split family keeps
-    #     cluster_safe_split_profile),
-    #   pack_chunks_profile + decontamination_profile (LLM-pipeline
-    #     family keeps curate_documents_contract's 7-stage replay),
-    #   epoch_upsample_profile (mixing family keeps
-    #     temperature_mix_profile + source_cap_profile).
-    # ------------------------------------------------------------------
-    # maintenance / layout. compaction_contract (r5 green, unchanged)
-    # hands the layout-maintenance slot to its round-6 sibling
-    # zorder_cells_contract (Morton-curve clustering — the OPTIMIZE
-    # ZORDER BY shape, with file-stat tightness pinned in pytest).
     "zorder_cells_contract",
-    # dedup / clustering / similarity
-    # minhash_recall (r4+r5+r6 green, dedup.py MinHash path unchanged;
-    # the near-dup family keeps semantic_dedup_profile,
-    # embedding_sq_recall and curate_documents_contract's minhash
-    # dedup stage in-window) hands its slot to
-    # fuzzy_name_match_profile — the blocked edit-distance join
-    # (entity-resolution primitive), new this round.
-    # r8: fuzzy_name_match_profile (r7 first-round green, fuzzyjoin.py
-    # unchanged this round) hands its slot to
-    # winnowing_fingerprint_contract — MOSS winnowing document
-    # fingerprints (operators/winnow.py, Schleimer et al. SIGMOD'03),
-    # new this round (same-round-slot rule). The string-similarity /
-    # near-dup family keeps THREE in-window reps (setsim_prefix_join's
-    # exact Jaccard, containment_pairs' asymmetric overlap, and now the
-    # winnowing local-fingerprint primitive they both lack — guaranteed
-    # shared-substring detection); the blocked ER join stays
-    # full-catalog attested + pair-identity pytest-pinned.
-    # r9: winnowing_fingerprint_contract (r8 first-round hash-green;
-    # winnow.py unchanged this round) hands its slot to
-    # duplicate_span_removal_contract — exact duplicate-SPAN
-    # extraction + removal (operators/spandedup.py, the Lee et al.
-    # 2022 ExactSubstr posture; closes VERDICT r8 "What's missing" #2),
-    # new this round (same-round-slot rule). Upgrade-swap: the new
-    # gate's Spark path RUNS the winnowing fingerprints + pair join as
-    # its candidate prefilter and hash-matches an UNPRUNED brute-force
-    # oracle — a prefilter recall loss would hash-fail, so winnow.py
-    # keeps end-to-end in-window evidence (plus the fingerprint gate
-    # stays full-catalog attested + hashlib-twin pytest-pinned).
-    # r10: duplicate_span_removal_contract (r9 first-round hash-green
-    # against the UNPRUNED brute-force oracle; operators/spandedup.py
-    # unchanged this round) hands its slot to
-    # curate_span_strip_contract — the SAME planted-quote corpus and
-    # the SAME brute-force span algebra restated in the oracle, now
-    # flowed through the COMPOSED curation recipe (pipelines/
-    # curation.py strip_spans stage -> exact dedup -> hash split; the
-    # new `cli.py curate --strip-spans` path, VERDICT r9 item 3). A
-    # family UPGRADE: the incoming gate re-runs duplicate_spans +
-    # strip_spans end-to-end (winnowing prefilter included) AND gates
-    # the pipeline module changed this round; the outgoing per-doc
-    # clean_md5 readout stays full-catalog attested + pytest
-    # DuckDB-parity gated.
     "curate_span_strip_contract",
-    # cluster_safe_split_profile (r5 green, unchanged) hands the
-    # sampling/split slot to weighted_sample_profile — integer-exact
-    # weight-proportional systematic sampling, new this round; the
-    # leakage-safe split family keeps curate_documents_contract's
-    # hash-split stage in-window.
-    # r8: weighted_sample_profile (r7 first-round green, the
-    # systematic-stride path of split.py) hands its slot to
-    # weighted_ksample_contract — deterministic Efraimidis-Spirakis
-    # exactly-k weighted sampling (operators/split.py:
-    # weighted_sample_k), new this round (same-round-slot rule); the
-    # weighted-sampling family keeps an in-window rep, now covering
-    # BOTH selection semantics (proportional stride behind the window,
-    # exact-k in it).
     "weighted_ksample_contract",
-    # curate_documents_contract (r5+r6 green, pipeline code unchanged;
-    # every stage it composes keeps its own in-window gate: pii
-    # curation, chunking, selection, weighted sampling, semantic
-    # dedup, cdc merge) hands its slot to event_type_trend_contract —
-    # per-key OLS trend from sufficient statistics, new this round.
-    # r8: event_type_trend_contract (r7 first-round green, trend.py
-    # unchanged) hands its slot to seasonal_decomposition_contract —
-    # classical trend+season decomposition (operators/seasonal.py), new
-    # this round (same-round-slot rule). Upgrade-swap precedent (the
-    # bm25 -> hybrid_search_rrf pattern): the new gate restates the
-    # FULL per-key OLS normal-equations fit over the identical daily
-    # series inside its own oracle, then decomposes the residuals into
-    # dow indices + Hyndman strength — the trend machinery keeps exact
-    # in-window evidence while the decomposition surface gains its
-    # first.
-    # r10: seasonal_decomposition_contract (r8+r9 green on unchanged
-    # seasonal.py) hands its slot to k_core_contract — fixed-round
-    # k-core peeling (operators/graph.py:k_core), new this round
-    # (same-round-slot rule). The seasonal surface UPGRADED this
-    # round: holt_winters_contract (in-window, new) gates additive
-    # seasonal smoothing over the same per-type daily grid, so the
-    # series family keeps trend AND season evidence in-window while
-    # the decomposition twin stays full-catalog attested; the graph
-    # family gains the dense-backbone readout next to triangles /
-    # LPA / modularity.
     "k_core_contract",
-    # semantic_dedup_profile (r5+r6 green, semdedup.py unchanged; the
-    # cluster-then-prune shape stays repped by embedding_kmeans_contract
-    # + embedding_sq_recall + knn_ann_ivf_sq_recall) hands its slot to
-    # bm25_relevance_contract — Okapi BM25 corpus-triage scoring
-    # (operators/bm25.py), new this round (same-round-slot rule).
-    # r8: bm25_relevance_contract (r7 first-round green, bm25.py
-    # unchanged) hands its slot to hybrid_search_rrf — reciprocal-rank
-    # fusion of the BM25 lexical leg with an exact-cosine semantic leg
-    # (operators/rrf.py), new this round (same-round-slot rule). The
-    # ivf->ivf_sq upgrade-swap precedent: the new gate restates the
-    # FULL bm25 tokenization/idf/tf algebra term for term inside its
-    # own oracle (the lexical leg), so the BM25 machinery keeps exact
-    # in-window evidence while the fusion surface gains its first.
-    # r11 (late): hybrid_search_rrf (r8+r9+r10 hash-green, rrf.py/
-    # bm25.py unchanged this round; retrieval keeps
-    # knn_ann_ivf_pq_refine_recall + ranking_metrics_contract
-    # in-window — the ANN leg plus the grading layer) hands its slot
-    # to mann_kendall_contract — non-parametric monotonic trend +
-    # Sen's slope (operators/trend.py:mann_kendall), new this round
-    # (same-round-slot rule); trend.py changed this round, so its new
-    # gate lands in-window the same round (event_type_trend's OLS
-    # sibling machinery is restated inside the r7-green gate family
-    # and stays full-catalog attested). hybrid_search stays
-    # full-catalog attested + pytest DuckDB-parity gated.
     "mann_kendall_contract",
-    # ------------------------------------------------------------------
-    # ROUND-7 ROTATION (VERDICT r6 items 1/4/5):
-    #   pagerank_contract IN — the ONLY registered query that had zero
-    #     driver evidence (added late in r6); takes the slot of
-    #     stream_stream_join_parity (r5+r6 green, streaming join code
-    #     unchanged; the streaming family keeps cdc_apply, dedup_counts,
-    #     sliding/session parity, pii_curation and tws in-window).
-    #   knn_ann_ivf_sq_recall IN — the composed FAISS-style IVF+SQ8
-    #     path, new this round; a direct family upgrade over
-    #     knn_ann_ivf_recall (r4+r5+r6 green, unchanged), which rotates
-    #     out: the new gate exercises the SAME cell probe PLUS the
-    #     integer-code scoring, against the same exact-float baseline.
-    #   ml_tree_ensemble_contract IN — GBT/RF structural gate (synthetic
-    #     learnable label, deterministic modulo split, importance/learn
-    #     bands), closing the M4/M5 rows-only debt; takes the slot of
-    #     stateful_user_profiles_stream (r4+r5+r6 green, unchanged;
-    #     stateful streaming keeps tws_histogram_parity +
-    #     session_stream_parity + stream_cdc_apply in-window).
-    # Standing rule honored: every query registered this round has a
-    # window slot this round.
-    # ------------------------------------------------------------------
-    # Late-r8: pagerank_contract (r7 first-round hash-green; graph.py
-    # unchanged this round) hands its slot to bloom_pruned_join_contract
-    # — Bloom-filter join pruning (operators/bloomjoin.py), the
-    # shuffle-volume reducer for selective big-side joins; the gate is
-    # join-output invariance vs the plain-join oracle, so a single
-    # false negative hash-fails. The graph family stays repped in-window
-    # by triangle_count_contract (same edge-canonicalization machinery;
-    # near-dup graph clustering additionally via minhash/semantic/
-    # curate gates). pagerank_contract also carries the suite's single
-    # biggest bench line (~9.5 s of iterated-Pregel floor), so rotating
-    # it out additionally de-noises round-over-round bench comparisons
-    # (VERDICT r7 What's-wrong #3).
-    # r11 (late): bloom_pruned_join_contract (r8+r9+r10 hash-green,
-    # bloomjoin.py unchanged this round; the join family keeps
-    # setsim_prefix_join_contract + fs_linkage_contract in-window, and
-    # the broadcast-filter machinery stays evidenced through the
-    # decontamination/blocklist gates in full attestation) hands its
-    # slot to nelson_aalen_contract — Nelson-Aalen cumulative hazard +
-    # Fleming-Harrington survival (operators/survival.py:nelson_aalen),
-    # new this round (same-round-slot rule) and the SECOND gate on
-    # survival.py, which changed this round (the shared _risk_table
-    # refactor) — survival_km_contract stays in-window beside it.
-    # bloom_pruned stays full-catalog attested + pytest parity-gated.
     "nelson_aalen_contract",
-    # Late-r7 additions (standing rule: same-round window slot):
-    #   event_transition_matrix + session_path_profile (behavioral path
-    #     analysis, operators/paths.py — the "users flow" siblings of
-    #     the funnel/retention gates) and ab_test_contract (two-
-    #     proportion z-test readout, operators/abtest.py). They take
-    #     the slots of cluster_keep_best_profile (r5+r6 green, graph
-    #     family now repped in-window by pagerank_contract; near-dup
-    #     family keeps minhash/semantic/curate), sliding_stream_parity
-    #     (r2/r4/r5/r6 green; streaming windows keep
-    #     session_stream_parity + tws in-window) and
-    #     text_quality_classifier_contract (r5+r6 green; the ML family
-    #     keeps 4 reps incl. the new tree-ensemble gate).
-    # r8: event_transition_matrix (r7 first-round green, paths.py
-    # unchanged; the behavioral-paths family keeps session_path_profile
-    # in-window — the same user-keyed ordered-window machinery plus the
-    # gap-split sessionization on top) hands its slot to
-    # rfm_segment_profile — recency/frequency/monetary quintile
-    # segmentation (operators/rfm.py), new this round (same-round-slot
-    # rule); the behavioral-analytics family gains the WHO-profile
-    # sibling of the funnel/paths WHAT-flow gates.
-    # r10: rfm_segment_profile (r8+r9 green; rfm.py unchanged this
-    # round) hands its slot to neyman_allocation_contract — optimal
-    # stratified-sample allocation with integer-exact largest-
-    # remainder apportionment (operators/split.py:neyman_allocation),
-    # new this round (same-round-slot rule) and a SECOND gate on
-    # split.py, which changed this round — weighted_ksample stays
-    # in-window beside it. The quintile-segmentation machinery keeps
-    # decile/percentile evidence in-window via
-    # weighted_percentile_contract + the robust profile; rfm stays
-    # full-catalog attested + pytest DuckDB-parity gated.
     "neyman_allocation_contract",
-    # r11 (late): session_path_profile (green since r6 on unchanged
-    # paths.py/sessionize.py; the behavioral-paths family keeps
-    # windowed_funnel_contract + attribution_contract in-window —
-    # the same user-keyed ordered-window machinery) hands its slot to
-    # adamic_adar_contract — Adamic-Adar/resource-allocation link
-    # prediction over non-edge wedges (operators/graph.py:
-    # adamic_adar_topk, Adamic & Adar 2003), new this round
-    # (same-round-slot rule) and a FIFTH gate on graph.py, which
-    # changed this round — the triangle/BFS/LPA/modularity/k-core
-    # gates all stay in-window beside it. session_path stays
-    # full-catalog attested + pytest DuckDB-parity gated.
     "adamic_adar_contract",
-    # r8: ab_test_contract (r7 first-round green; its
-    # two_proportion_ztest algebra is untouched this round — the
-    # abtest.py diff is module-docstring plus the new cuped/power
-    # siblings) hands its slot to experiment_power_contract — the
-    # pre-experiment MDE / sample-size planning readout with
-    # CUPED-adjusted twins (operators/abtest.py:experiment_power), new
-    # this round (same-round-slot rule). Family-upgrade posture: the
-    # experimentation family keeps TWO in-window reps (cuped_ab_contract
-    # carries the Welch z + CI analysis arithmetic over the same
-    # sufficient-sums machinery; this gate carries the planning side),
-    # and the proportion z-test stays full-catalog attested + pytest
-    # fixture-pinned.
-    # r9 (late): experiment_power_contract (r8 first-round hash-green;
-    # the experiment_power function is untouched this round — the
-    # abtest.py diff is exactly the NEW difference_in_differences
-    # function) hands its slot to did_contract — difference-in-
-    # differences over per-(user, period) units (operators/abtest.py:
-    # difference_in_differences, Card & Krueger 1994), new this round
-    # (same-round-slot rule) and gating exactly the r9-changed module.
-    # The experimentation family keeps cuped_ab_contract in-window
-    # (same conditional-aggregation sufficient-sums machinery, same
-    # Welch z + CI algebra); the planning readout stays full-catalog
-    # attested + pytest fixture-pinned (tests/test_power.py's n=449
-    # worked example).
-    # r10 (late): did_contract (r9 first-round hash-green; abtest.py's
-    # DiD function unchanged this round) hands its slot to
-    # cmh_contract — Cochran-Mantel-Haenszel stratified 2x2 test +
-    # MH common odds ratio (operators/abtest.py:cmh_test), new this
-    # round (same-round-slot rule). The experimentation family keeps
-    # THREE abtest.py reps in-window (msprt_contract + srm_contract —
-    # srm gates this round's module change — + this stratified
-    # readout, the Simpson's-paradox-safe sibling of the rotated
-    # fixed-horizon gates); DiD stays full-catalog attested + pytest
-    # hand-fixture gated.
-    # r11 (late): cmh_contract (r10 first-round hash-green; abtest.py
-    # unchanged this round) hands its slot to pmi_collocations_contract
-    # — PMI adjacent-bigram collocations (operators/collocations.py,
-    # Church & Hanks 1990), new this round (same-round-slot rule), the
-    # within-corpus association sibling of the in-window keyness gate.
-    # The experimentation family keeps msprt_contract in-window (the
-    # same abtest.py sufficient-sum machinery); CMH stays full-catalog
-    # attested + pytest DuckDB-parity gated.
     "pmi_collocations_contract",
-    # Late-r8: knn_ann_ivf_sq_recall (r7 first-round green;
-    # similarity_ivf.py and quantize.py unchanged this round) hands its
-    # slot to jw_name_match_profile — the blocked Jaro-Winkler ER join
-    # (operators/fuzzyjoin.py:jaro_winkler_self_join), similarity-
-    # scored record linkage next to the in-window edit-distance family.
-    # The ANN family keeps TWO in-window reps: knn_ann_pq_recall and
-    # knn_ann_ivf_pq_recall (both registered this round; the composed
-    # IVF,PQ gate exercises the same cell-probe machinery the SQ gate
-    # did, plus the codebook scoring).
-    # r9 (late): jw_name_match_profile (late-r8 first-round hash-green;
-    # fuzzyjoin.py unchanged this round) hands its slot to
-    # fs_linkage_contract — Fellegi-Sunter probabilistic record
-    # linkage over blocked customer pairs (operators/linkage.py,
-    # Fellegi & Sunter JASA 1969), new this round (same-round-slot
-    # rule). Family upgrade: the ER family's in-window rep moves from
-    # one similarity score to the decision-theoretic multi-field
-    # evidence model (the new gate runs the same Sum-of-block-squared
-    # blocked self-join shape); the Jaro-Winkler scorer stays
-    # full-catalog attested + its 3000-pair DuckDB-parity pytest, and
-    # setsim_prefix_join_contract keeps the similarity-join machinery
-    # in-window.
     "fs_linkage_contract",
     "ml_tree_ensemble_contract",
-    # incremental_dedup_profile (r5 green, unchanged; exact-dedup
-    # family keeps cluster_keep_best + semantic_dedup + the curation
-    # contract) hands its slot to embedding_sq_recall — SQ8 scalar
-    # quantization recall vs the exact float baseline, new this round.
-    # r8: embedding_sq_recall (r7 green, quantize.py unchanged; the
-    # SQ8 code path stays in-window COMPOSED inside
-    # knn_ann_ivf_sq_recall — same codes, same moment-expanded cosine,
-    # scored against the same exact-float baseline) hands its slot to
-    # setsim_prefix_join_contract — the prefix-filtered EXACT Jaccard
-    # join (operators/setsim.py), new this round (same-round-slot
-    # rule); the exact-near-dup family gains its lossless scale path
-    # next to the pytest-pinned inverted-index equality.
     "setsim_prefix_join_contract",
-    # text quality / scoring. Round-6 additions rotate in the round
-    # they land: chunk_overlap_profile (context-window chunking, the
-    # retrieval-side sibling of sequence packing) and
-    # decile_profile_contract (equal-frequency binning via quantile
-    # bounds — no ntile, no global sort). boilerplate_removal_profile
-    # and tfidf_top_terms (both r5 green, code unchanged) rotate out;
-    # the text family keeps lm_quality + repetition + the chunk gate
-    # + stream_pii_curation in-window.
-    # lm_quality_by_lang (r5+r6 green, lm_score.py unchanged; text
-    # scoring stays repped by bm25_relevance_contract NEW +
-    # stream_pii_curation_round_trip + chunk_overlap_profile) hands its
-    # slot to categorical_association_contract — chi-square / Cramér's
-    # V / mutual information (operators/stats.py), new this round.
-    # r8: categorical_association_contract (r7 first-round green,
-    # stats.py unchanged; the stats.py sufficient-statistics family
-    # keeps correlation_matrix_contract in-window, and the chi2/MI
-    # algebra stays hand-checked in pytest + full-catalog attested)
-    # hands its slot to negative_sampling_contract — deterministic
-    # md5-draw negative sampling for contrastive training data
-    # (operators/negatives.py), new this round (same-round-slot rule).
-    # r9 (late): negative_sampling_contract (r8 first-round hash-green;
-    # negatives.py unchanged this round) hands its slot to
-    # jl_projection_contract — Johnson-Lindenstrauss ±1 random
-    # projection with a sample-bounded distance audit
-    # (operators/projection.py, Achlioptas JCSS'03), new this round
-    # (same-round-slot rule). The md5-draw determinism machinery stays
-    # in-window via weighted_ksample_contract (A-ES md5 keys) and
-    # dsir_selection_contract (md5-fold features); negatives stay
-    # full-catalog attested + pytest parity-gated. The embedding
-    # family gains the dimension-reduction rep next to the byte-
-    # reduction quantizer gates (PQ/IVF,PQ).
     "jl_projection_contract",
-    # repetition_profile (r5 green, quality.py unchanged; the text
-    # family keeps lm_quality + the chunk gate + stream_pii_curation)
-    # hands its slot to drift_psi_contract — PSI snapshot-drift
-    # detection over reference-fitted decile bounds, new this round.
-    # Late-r8: drift_psi_contract (r6 + r7 green; drift.py unchanged
-    # this round) hands its slot to rank_test_contract — tie-corrected
-    # Kruskal-Wallis + Mann-Whitney U (operators/hyptest.py), rank
-    # statistics from the distinct-value grid so no data-scale sort.
-    # The monitoring family keeps ewma_anomaly_contract in-window (and
-    # cusum rotated per the r8 plan above); hand fixtures + the k=2
-    # KW = z² cross-operator identity in tests/test_hyptest.py.
-    # r10: rank_test_contract (late-r8 + r9 green; hyptest.py
-    # unchanged this round) hands its slot to srm_contract —
-    # sample-ratio-mismatch chi-square check (operators/abtest.py:
-    # srm_check, Fabijan et al. KDD'19), new this round (same-round-
-    # slot rule) and a THIRD abtest.py gate next to did + msprt. The
-    # hypothesis-test family consolidates per the pre-planned r10 twin
-    # pool (anova/rank_test/bh_fdr): anova_oneway_contract keeps the
-    # same _clean/guard machinery in-window and bh_fdr_contract keeps
-    # the multiple-testing surface; the rank gates stay full-catalog
-    # attested + pytest DuckDB-parity gated.
-    # r11: srm_contract (r10 first-round hash-green; abtest.py
-    # unchanged this round) hands its slot to bfs_distances_contract —
-    # multi-source BFS hop distances (operators/graph.py:
-    # bfs_distances, VERDICT r10 item 5), new this round (same-round-
-    # slot rule) and a gate on this round's graph.py change. The
-    # experimentation family keeps cmh_contract (the same stratified
-    # 2x2 sufficient-sum machinery, Simpson's-paradox-safe pooling)
-    # plus msprt_contract in-window; srm stays full-catalog attested
-    # + pytest DuckDB-parity gated.
     "bfs_distances_contract",
-    # chunk_overlap_profile (r6 green, chunking.py unchanged; the LLM
-    # family keeps token_budget_selection + blocklist + lm_quality
-    # in-window) hands its slot to ml_lift_table_contract — the
-    # score-quintile lift/gains table (ml/evaluation.py), new this
-    # round, which also re-exercises the equal-frequency binning
-    # machinery decile_profile_contract gates.
-    "brier_ece_contract",  # r8: swaps in for ml_lift_table_contract
-    # r8: decile_profile_contract (r6+r7 green, binning.py unchanged;
-    # the equal-frequency binning machinery STAYS in-window inside
-    # rfm_segment_profile, which drives three equal_frequency_bins
-    # fits, and the quantile surface keeps robust_outlier_profile +
-    # weighted_percentile_contract) hands its slot to
-    # robust_scaler_contract — median/IQR feature scaling verified at
-    # row cardinality (operators/robust.py:robust_scale), new this
-    # round (same-round-slot rule).
-    # r9 (late): robust_scaler_contract (r8 first-round hash-green;
-    # robust.py unchanged this round) hands its slot to
-    # l_diversity_contract — l-diversity risk profiling
-    # (operators/anonymity.py:l_diversity_profile, Machanavajjhala et
-    # al. ICDE'06), new this round (same-round-slot rule) and gating
-    # exactly the r9-changed module (anonymity.py gains the new
-    # function; k_anonymity_profile itself is untouched). The robust
-    # median/IQR machinery stays in-window via robust_outlier_profile
-    # (SAME robust.py module, same exact-median path); the privacy
-    # family gains its second rep next to k_anonymity_contract —
-    # class-size bound AND within-class diversity bound both gated.
+    "brier_ece_contract",
     "l_diversity_contract",
-    # mixing
-    # source_cap_profile (r5+r6 green, mixing.py unchanged; the mixing
-    # family keeps token_budget_selection_profile in-window) hands its
-    # slot to ewma_anomaly_contract — EWMA smoothing + one-step-ahead
-    # anomaly flags (operators/anomaly.py), new this round; the oracle
-    # replays the identical left fold via DuckDB list_reduce.
-    # r10: ewma_anomaly_contract (r7/r8/r9 green on unchanged
-    # anomaly.py) hands its slot to holt_winters_contract — additive
-    # seasonal (triple) smoothing over the IDENTICAL per-type daily
-    # grid (operators/holt.py:holt_winters_forecast_anomaly, VERDICT
-    # r9 item 6), new this round (same-round-slot rule). Family
-    # upgrade: the series-monitoring family keeps TWO in-window
-    # smoothing reps (holt_forecast_contract's level+trend — holt.py
-    # changed this round so its gate must stay — plus the new
-    # level+trend+season), both running the SAME series.py collector
-    # and residual-sigma machinery EWMA uses; the one-state EWMA gate
-    # stays full-catalog attested + pytest DuckDB-parity gated.
     "holt_winters_contract",
-    # temporal / behavioral analytics. interpolated_user_series (r5
-    # green, timegrid.py unchanged) hands the temporal slot to
-    # time_weighted_avg_profile — the trapezoidal TWA for irregular
-    # series, new this round; event_funnel_profile and
-    # weekly_retention_cohorts (strict funnels + cohort triangles,
-    # both new) take the slots of stream_file_sink_round_trip (r5
-    # green; real sinks stay exercised by stream_cdc_apply +
-    # stream_pii_curation round trips) and temperature_mix_profile
-    # (r5 green; the mixing family keeps source_cap_profile).
-    # time_weighted_avg_profile (r6 green, rolling.py unchanged; the
-    # temporal family keeps ewma_anomaly + autocorrelation +
-    # event_type_trend in-window) hands its slot to
-    # jackknife_ratio_contract — delete-one-stratum uncertainty for
-    # ratio metrics (operators/stats.py:jackknife_ratio), new this
-    # round (same-round-slot rule).
-    "weighted_percentile_contract",  # r8: swaps in for jackknife_ratio
-    # r8: event_funnel_profile (r7 first-round green, the O(N^2) fix's
-    # own gate) hands its slot to windowed_funnel_contract — the
-    # conversion-window funnel (operators/funnel.py:
-    # funnel_counts_within), new this round (same-round-slot rule).
-    # The upgrade-swap precedent: the new gate exercises the IDENTICAL
-    # strict-sequence machinery (user-keyed mins/joins, lineage-
-    # truncated step frames, one action) PLUS the entry-anchored
-    # deadline, and pytest pins the windowed counts strictly under the
-    # plain funnel's on the fixture.
+    "weighted_percentile_contract",
     "windowed_funnel_contract",
-    # r9 (late): k_anonymity_contract (r8 first-round hash-green, in
-    # for weekly_retention_cohorts; anonymity.py's k-anonymity paths
-    # unchanged this round — the module diff is exactly the NEW
-    # l_diversity_profile, gated in-window by l_diversity_contract)
-    # hands its slot to bh_fdr_contract — Benjamini-Hochberg FDR
-    # correction (operators/hyptest.py:bh_fdr), new this round
-    # (same-round-slot rule) and a THIRD gate on the r9-changed
-    # hyptest.py (with anova/rank-test). The privacy family keeps the
-    # NEW l_diversity_contract in-window (same class-groupBy
-    # machinery); the suppression broadcast semi-join stays
-    # full-catalog attested + pytest-gated, and the broadcast-filter
-    # shape stays in-window via bloom_pruned_join_contract.
     "bh_fdr_contract",
-    # streaming (real-stream parity + stateful + sinks).
-    # tumbling_stream_parity (r2/r4/r5 green, window code unchanged)
-    # rotates out for tws_histogram_parity — the custom stateful
-    # MapState-histogram operator (streaming/tws.py), new this round:
-    # it runs the transformWithState path where the protobuf runtime
-    # exists and the applyInPandasWithState twin here (VERDICT r5 item
-    # 7). Tumbling/sliding window semantics stay gated end-to-end by
-    # sliding_stream_parity + the r5-green tumbling row.
-    # stream_cdc_apply_round_trip (r5+r6 green, streaming/cdc.py
-    # unchanged; real-stream mode stays in-window via
-    # tws_histogram_parity and batch CDC via cdc_merge_contract) hands
-    # its slot to ml_auc_contract — bucketed trapezoidal ROC AUC
-    # (ml/evaluation.py:roc_auc), new this round (same-round-slot
-    # rule).
-    # Late-r8: ml_auc_contract (r7 first-round green; roc_auc unchanged
-    # this round) hands its slot to anova_oneway_contract — one-way
-    # ANOVA from sufficient statistics (operators/hyptest.py), the
-    # parametric sibling of the new rank tests. The classifier-eval
-    # family keeps brier_ece_contract in-window (same bucket-algebra
-    # machinery over the same scored frame, registered this round and
-    # gating exactly the r8-changed evaluation.py function).
-    # r10: anova_oneway_contract (late-r8 + r9 green; hyptest.py
-    # unchanged this round) hands its slot to
-    # blocking_profile_contract — ER blocking-quality sizing report
-    # (operators/linkage.py:blocking_profile), new this round
-    # (same-round-slot rule) and a SECOND gate on linkage.py, which
-    # changed this round (the u-probability guard) — fs_linkage stays
-    # in-window beside it. The hypothesis-test family consolidates to
-    # bh_fdr_contract per the pre-planned r10 twin pool
-    # (anova/rank_test/bh_fdr — hyptest.py unchanged, so one rep
-    # suffices); anova + rank gates stay full-catalog attested +
-    # pytest DuckDB-parity gated.
     "blocking_profile_contract",
     "tws_histogram_parity",
-    # stream_dedup_counts (r5+r6 green, streaming dedup code unchanged;
-    # the streaming family keeps cdc_apply, tws, pii_curation and
-    # session parity in-window) hands its slot to
-    # correlation_matrix_contract — pairwise Pearson correlations from
-    # one sufficient-statistics pass (operators/stats.py), new this
-    # round (standing rule: same-round window slot).
     "correlation_matrix_contract",
-    # stream_static_join_profile (r5 green, unchanged; streaming joins
-    # keep stream_stream_join_parity in-window) hands its slot to
-    # cm_frequency_rollup_contract — the count-min frequency sketch
-    # completing the mergeable-sketch family (HLL distinct / KLL
-    # quantile / Theta set algebra / CM frequency), new this round.
-    # cm_frequency_rollup_contract (r6 green, sketches.py unchanged;
-    # the mergeable-sketch family keeps theta_cohort_overlap in-window
-    # after this round's hll/kll/cm consolidation — all four were
-    # r6-hash-green on code untouched since) hands its slot to
-    # lorenz_gini_contract — bucketed Lorenz/Gini concentration
-    # profile (operators/concentration.py), new this round.
-    # r9 (late): lorenz_gini_contract (r7+r8 hash-green on unchanged
-    # concentration.py) hands its slot to frequent_itemsets_contract —
-    # MLlib parallel FP-Growth frequent-itemset mining over order-
-    # baskets of part brands (operators/itemsets.py), new this round
-    # (same-round-slot rule). The distribution-profiling surface keeps
-    # weighted_percentile_contract + rfm_segment_profile's quintiles
-    # in-window; Lorenz/Gini stays full-catalog attested + pytest
-    # parity-gated. The new gate's oracle is a brute-force sizes-1..3
-    # self-join enumeration — a structurally DIFFERENT algebra from
-    # the FP-tree mining (the triangle-counting precedent, satisfying
-    # the round's different-algebra-oracle discipline).
     "frequent_itemsets_contract",
-    # stream_pii_curation_round_trip (r5+r6 green, streaming curation
-    # code unchanged; real-stream mode keeps stream_cdc_apply_round_trip
-    # + tws_histogram_parity in-window, and the PII/curation operators
-    # keep curate_documents_contract's batch replay) hands its slot to
-    # attribution_contract — multi-touch conversion attribution via a
-    # reverse cumulative window (operators/attribution.py), new this
-    # round (same-round-slot rule).
     "attribution_contract",
-    # session_stream_parity (r5+r6 green, streaming session code
-    # unchanged since r5 — confirmed again by this round's idle
-    # re-measurement closing VERDICT r6 item 2; the real-stream family
-    # keeps cdc_apply + pii_curation + tws_histogram_parity in-window)
-    # hands its slot to ml_cv_contract — k-fold cross-validated OLS in
-    # two passes via sufficient-statistics subtraction
-    # (operators/crossval.py), new this round (same-round-slot rule).
-    # r9: ml_cv_contract (r7+r8 green; kfold_linear_cv itself is
-    # untouched this round — the crossval.py diff is the NEW
-    # learning-curve function) hands its slot to
-    # learning_curve_contract — nested-training-fraction sample-
-    # efficiency readout (operators/crossval.py:learning_curve_linear),
-    # new this round (same-round-slot rule) and gating exactly the
-    # r9-changed code. Twin-pair swap (the anova/rank-test precedent):
-    # the new gate restates the identical sufficient-statistics +
-    # Cramer 3x3 algebra over the same lineitem features — cumulative
-    # instead of subtractive — so the closed-form OLS family keeps
-    # exact in-window evidence while the kfold path (r7+r8 green on
-    # unchanged code) rotates to full-catalog attestation.
     "learning_curve_contract",
-    # ML loop. Round-6 upgrade (VERDICT r5 item 4): the two rows-only
-    # window entries are REPLACED by exact-hash gates —
-    # ml_train_linear_contract (closed-form LR via build_pipeline/
-    # evaluate, coefficients + RMSE/MAE/R² restated in DuckDB through
-    # the 3x3 normal equations) takes ml_train_metrics' slot, and
-    # ml_score_contract (save_model/load_model round trip + batch_score
-    # + per-flag error profile, predictions restated from the Cramer
-    # coefficients) takes a slot from pii_redaction_profile (r5 green,
-    # operators/pii.py unchanged; the text family keeps repetition/
-    # boilerplate/tfidf/lm_quality in-window). The GBT/sampled twins
-    # stay registered + rows-only-pytest-gated behind the window.
-    # ml_train_linear_contract (r6 green, ml/pipeline.py unchanged;
-    # the closed-form 3x3 solve algebra stays exercised in-window by
-    # ml_cv_contract's four fold models and the save/load surface by
-    # ml_score_contract) hands its slot to
-    # ml_classification_report_contract — one-pass thresholded
-    # confusion/PRF report (ml/evaluation.py), new this round.
-    # r9 (late): basket_size_profile (r8 first-round hash-green;
-    # basket.py unchanged this round) hands its slot to
-    # assoc_rules_contract — single-antecedent association rules from
-    # the same FP-Growth fit (operators/itemsets.py:
-    # association_rules_1to1), new this round (same-round-slot rule).
-    # Family upgrade: the market-basket family now holds TWO in-window
-    # reps (itemset mining + rule scoring) exercising the identical
-    # dedup-cap-group basket machinery the size profile measured, with
-    # the cap guard's effect observable in the mining output; the
-    # cap-pressure report stays full-catalog attested + pytest-gated
-    # next to item_affinity_contract.
-    # r10: assoc_rules_contract (r9 first-round hash-green against the
-    # brute-force rule-enumeration oracle; operators/itemsets.py
-    # unchanged this round) hands its slot to
-    # label_propagation_contract — deterministic synchronous LPA
-    # community detection (operators/graph.py:label_propagation,
-    # VERDICT r9 item 5), new this round (same-round-slot rule). The
-    # market-basket family consolidates to ONE in-window rep
-    # (frequent_itemsets_contract — the SAME FP-Growth fit the rules
-    # derive from; the rules derivation stays full-catalog attested +
-    # pytest DuckDB-parity gated), and the graph family gains its
-    # community operator next to triangle_count_contract's
-    # density readout (both over the part co-purchase graph).
     "label_propagation_contract",
-    # r8: ml_score_contract (r6+r7 green, ml/pipeline.py untouched this
-    # round; named swap currency in the VERDICT r7 rotation pool — the
-    # batch-scoring machinery stays in-window inside
-    # ml_tree_ensemble_contract's deterministic scoring bands and the
-    # closed-form fold models of ml_cv_contract, while the save/load
-    # surface stays full-catalog attested + pytest round-tripped) hands
-    # its slot to rater_agreement_contract — Cohen's kappa, quadratic-
-    # weighted Cohen, and Fleiss' kappa (operators/agreement.py), new
-    # this round (same-round-slot rule); the evaluation family gains
-    # the labeling-QA / LLM-as-judge agreement readout next to
-    # AUC/Brier/conformal.
     "rater_agreement_contract",
-    # ml_feature_matrix_contract (r5+r6 green, ml/pipeline.py
-    # featurization unchanged; M1-M3 stay exercised inside
-    # ml_score_contract's saved-pipeline transform and the GBT/RF
-    # structural gate) hands its slot to autocorrelation_contract —
-    # per-key ACF at lags 1..7 from raw moments (operators/stats.py),
-    # new this round.
-    # r8: autocorrelation_contract (r7 first-round green, stats.py
-    # unchanged; the sufficient-statistics stats.py family keeps
-    # correlation_matrix_contract + categorical_association_contract
-    # in-window, and the temporal family keeps ewma_anomaly +
-    # event_type_trend) hands its slot to conformal_interval_contract
-    # — split-conformal prediction intervals (ml/conformal.py), new
-    # this round (same-round-slot rule); the ML-evaluation family
-    # gains the distribution-free uncertainty readout next to
-    # AUC/Brier.
-    # r9 (late): conformal_interval_contract (r8 first-round
-    # hash-green; ml/conformal.py unchanged this round) hands its slot
-    # to msprt_contract — mSPRT always-valid sequential A/B monitoring
-    # (operators/abtest.py:msprt_monitor, Johari et al.), new this
-    # round (same-round-slot rule) and a THIRD gate on the r9-changed
-    # abtest.py module (with did_contract + cuped_ab_contract). The
-    # uncertainty family keeps weighted_percentile_contract (exact
-    # quantile machinery — conformal's split-quantile core) and the
-    # ML-eval family keeps brier_ece + learning_curve + tree_ensemble
-    # in-window; conformal stays full-catalog attested + its
-    # row_number different-algebra oracle in pytest parity.
     "msprt_contract",
-    # r8: embedding_kmeans_contract (r5+r6+r7 green — the named
-    # longest-green entry in the VERDICT r7 swap pool; ml/clustering.py
-    # unchanged) hands its slot to knn_ann_ivf_pq_recall — the
-    # composed FAISS IVF,PQ posture (operators/pq.py), new this round
-    # (same-round-slot rule). The centroid-assignment machinery the
-    # kmeans gate exercised stays in-window THREE ways: the IVF coarse
-    # quantizer inside knn_ann_ivf_sq_recall and this new gate, and
-    # the per-subspace Lloyd codebook fit inside both PQ gates; MLlib
-    # KMeans itself stays pytest-gated (blob recovery) + full-catalog
-    # attested.
-    # r9: knn_ann_ivf_pq_recall (r8 first-round green) hands its slot
-    # to knn_ann_ivf_pq_refine_recall — the two-stage IVF,PQ + exact
-    # float re-rank (operators/pq.py:ivf_pq_refine_cosine_topk, the
-    # FAISS RefineFlat posture; closes VERDICT r8 item 5 with measured
-    # recall 0.92-0.94 vs the unrefined 0.68-0.74), new this round
-    # (same-round-slot rule). Strict upgrade-swap: the new gate runs
-    # ivf_pq_cosine_topk itself as its candidate stage (k=refine) plus
-    # the new broadcast re-rank, so every code path the outgoing gate
-    # exercised stays in-window; the unrefined gate stays full-catalog
-    # attested. knn_ann_pq_recall keeps the plain ADC scan in-window
-    # and gates the r9 _pair_recall broadcast change.
     "knn_ann_ivf_pq_refine_recall",
-    # contracts / IO
-    # export_round_trip_orc (r5 green, export code unchanged) hands
-    # the IO-contract slot to schema_evolution_contract — mergeSchema
-    # union of two parquet vintages + sentinel backfill, new this
-    # round; the round-trip family keeps cdc_merge_contract's
-    # partitioned write + swap in-window.
-    # schema_evolution_contract (r6 green, planning-time footer-merge
-    # code unchanged; the IO-contract family keeps cdc_merge_contract
-    # + python_datasource_contract + media_binary_ingest in-window)
-    # hands its slot to incremental_agg_contract — mart refresh from
-    # mergeable sufficient-statistic snapshots without rescanning base
-    # facts (operators/incremental.py), new this round.
     "incremental_agg_contract",
-    # ------------------------------------------------------------------
-    # ROUND-7 LATE ROTATION (standing rule: every query registered this
-    # round gets a same-round slot). Four multi-round-green unchanged
-    # entries hand their slots to the four new analytics gates:
-    #   manifest_ingest_contract (r5+r6 green, io/ingest.py unchanged;
-    #     ingest stays repped by media_binary_ingest,
-    #     schema_evolution_contract and python_datasource_contract)
-    #     -> survival_km_contract (Kaplan-Meier right-censored
-    #     user-lifetime curve, operators/survival.py).
-    #   quarter_resolution_contract (r5+r6 green, utils/dates.py
-    #     unchanged, CLI path pytest-gated) -> item_affinity_contract
-    #     (market-basket support/lift/cosine, operators/basket.py).
-    #   stream_dedup_counts (see streaming block above)
-    #     -> correlation_matrix_contract.
-    #   bucketed_colocated_join (r3+r4+r5+r6 green — the longest-green
-    #     row in the window; join family stays repped by
-    #     fuzzy_name_match_profile's blocked join, pagerank's iterated
-    #     joins, and the r2/r4 relational evidence)
-    #     -> robust_outlier_profile (median/MAD fence,
-    #     operators/robust.py — the robust sibling of the r3/r4-green
-    #     quantile-clip family).
-    # ------------------------------------------------------------------
     "survival_km_contract",
-    # r8: item_affinity_contract (r7 first-round green, basket.py
-    # unchanged; the basket family keeps basket_size_profile NEW
-    # in-window — the same distinct+groupBy basket machinery, sizing
-    # the very max_basket cap the pair join enforces; the pair
-    # self-join stays full-catalog/pytest gated) hands its slot to
-    # knn_ann_pq_recall — product-quantization ADC top-k
-    # (operators/pq.py), new this round (same-round-slot rule),
-    # completing the FAISS index triad (IVF probe / SQ8 codes / PQ
-    # codebooks) in-window next to knn_ann_ivf_sq_recall.
-    # r10: knn_ann_pq_recall (r8+r9 green on unchanged pq.py) hands
-    # its slot to knn_ann_ivf_increment_contract — incremental IVF
-    # index maintenance (operators/similarity_ivf.py:
-    # ivf_index_increment, VERDICT r9 item 7), new this round
-    # (same-round-slot rule) and the gate on this round's
-    # similarity_ivf.py change. Family coverage: the quantized-ANN
-    # family keeps knn_ann_ivf_pq_refine_recall in-window (the SAME
-    # pq.py PQ-ADC machinery composed with IVF + exact refine — a
-    # superset of the plain PQ gate's path); the new gate adds the
-    # index-maintenance surface (anti-join skip + frozen-quantizer
-    # assignment parity) the family lacked.
-    # r11: knn_ann_ivf_increment_contract (r10 first-round hash-green;
-    # similarity_ivf.py unchanged this round) hands its slot to
-    # ranking_metrics_contract — NDCG@k / MRR@k / hit@k graded
-    # ranking-quality evaluation (ml/evaluation.py:ranking_metrics,
-    # VERDICT r10 item 4), new this round (same-round-slot rule).
-    # The retrieval family keeps hybrid_search_rrf in-window (the
-    # rank-frame producer the new gate grades) plus the IVF+PQ refine
-    # recall gate; incremental IVF stays full-catalog attested +
-    # pytest DuckDB-parity gated.
     "ranking_metrics_contract",
     "cdc_merge_contract",
     "media_binary_ingest",

@@ -38,8 +38,8 @@ def test_window_covers_every_family():
     window = set(_VERIFICATION_WINDOW)
     # One representative per family must sit inside the checked window.
     # Rotated-out entries (multi-round green on unchanged code) hand
-    # their probe to the in-window family member named beside them in
-    # queries/__init__.py's rotation notes.
+    # their probe to the in-window family member named beside them
+    # below; the rotation history itself is in git.
     for probe in [
         # aggregation/profiling marts: kpis (r1-r4), grouped clip (r5)
         # rotated out; the one-pass profiler carries the agg surface.

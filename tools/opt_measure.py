@@ -12,8 +12,10 @@ Usage:
     PYTHONPATH=. python tools/opt_measure.py [--tag before|after]
         [--runs 3] [--noop] [--sf-dir DIR] [--cpus N] query [query ...]
 
-Plans are captured BEFORE timing (same DataFrame build), and jobs are
-labelled with setJobDescription for UI-based digging.
+Plans are captured BEFORE timing (same DataFrame build). Jobs are
+labelled with setJobDescription ("opt-measure count: <q>", "opt-measure
+noop: <q>"; each label also covers its untimed first run) and written
+to an event log for tools/opt_joblog.py.
 """
 
 from __future__ import annotations
@@ -24,9 +26,9 @@ import io
 import os
 import statistics
 import sys
-import time
 
-from pyspark.sql import SparkSession
+import bench
+from proyecto_final_de_big_data_spark.queries import QUERIES
 
 
 def main() -> None:
@@ -34,7 +36,6 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--tag", default=None, help="write plans/r12/<q>_<tag>.txt")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--warmups", type=int, default=1)
     ap.add_argument("--noop", action="store_true")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -42,38 +43,13 @@ def main() -> None:
 
     evdir = "/tmp/spark-events"
     os.makedirs(evdir, exist_ok=True)
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("opt-measure")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .getOrCreate()
+    spark = bench.session(
+        "opt-measure",
+        cpus=args.cpus,
+        conf={"spark.eventLog.enabled": "true", "spark.eventLog.dir": evdir},
     )
     print(f"# event log: {evdir}/{spark.sparkContext.applicationId}", flush=True)
-    from proyecto_final_de_big_data_spark.queries import QUERIES
-
-    # Same warm-up battery as bench.py so the first measured query is not
-    # charged for JVM/MLlib/Python-worker process startup.
-    QUERIES["pricing_summary"].spark_fn(spark, args.sf_dir).count()
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.regression import LinearRegression
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    tiny = spark.createDataFrame([(float(i), float(i)) for i in range(32)], ["x", "y"])
-    assembled = VectorAssembler(inputCols=["x"], outputCol="features").transform(tiny)
-    LinearRegression(labelCol="y", featuresCol="features", solver="normal").fit(assembled)
-    _warm = pandas_udf(lambda s: s, "double")
-    tiny.select(_warm(F.col("x"))).count()
-    from proyecto_final_de_big_data_spark.catalog import load_table
-    from proyecto_final_de_big_data_spark.operators.dedup import minhash_signatures
-
-    minhash_signatures(
-        load_table(spark, args.sf_dir, "documents").limit(64), "doc_id", "text", num_hashes=4
-    ).count()
+    bench.warm_up(spark, args.sf_dir)
 
     plans_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12")
     os.makedirs(plans_dir, exist_ok=True)
@@ -87,25 +63,17 @@ def main() -> None:
                 df.explain(mode="formatted")
             with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(buf.getvalue())
-        spark.sparkContext.setJobDescription(f"opt-measure warm: {name}")
-        for _ in range(args.warmups):
-            q.spark_fn(spark, args.sf_dir).count()
-        counts, noops = [], []
-        for i in range(args.runs):
-            spark.sparkContext.setJobDescription(f"opt-measure count[{i}]: {name}")
-            t0 = time.perf_counter()
-            q.spark_fn(spark, args.sf_dir).count()
-            counts.append(time.perf_counter() - t0)
-            if args.noop:
-                spark.sparkContext.setJobDescription(f"opt-measure noop[{i}]: {name}")
-                t0 = time.perf_counter()
-                q.spark_fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-                noops.append(time.perf_counter() - t0)
-        spark.sparkContext.setJobDescription(None)
-        med = statistics.median(counts)
-        line = f"{name:45s} count={med:7.3f}s  runs={[round(v, 3) for v in counts]}"
-        if noops:
+        spark.sparkContext.setJobDescription(f"opt-measure count: {name}")
+        counts = bench.warm_runs(lambda: q.spark_fn(spark, args.sf_dir).count(), args.runs)[1:]
+        line = f"{name:45s} count={statistics.median(counts):7.3f}s  runs={[round(v, 3) for v in counts]}"
+        if args.noop:
+            spark.sparkContext.setJobDescription(f"opt-measure noop: {name}")
+            noops = bench.warm_runs(
+                lambda: q.spark_fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save(),
+                args.runs,
+            )[1:]
             line += f"  noop={statistics.median(noops):7.3f}s"
+        spark.sparkContext.setJobDescription(None)
         print(line, flush=True)
     spark.stop()
 

@@ -1,8 +1,7 @@
 #!/usr/bin/env python
-"""Targeted oracle check: run named registered queries against their
-DuckDB oracles at a given SF dir in a vanilla driver-emulation session
-(local[8], shuffle.partitions=8 — the preflight protocol). Rows-only
-queries (oracle=None) are counted, not compared.
+"""Targeted oracle check: the oracle verdict for named registered
+queries at a given SF dir, on the preflight's local[8] session.
+Rows-only queries (oracle=None) are counted, not compared.
 
 Usage: PYTHONPATH=. python tools/oracle_check.py [--sf-dir DIR] q [q ...]
 """
@@ -10,51 +9,27 @@ from __future__ import annotations
 
 import argparse
 import sys
-import time
 
-from pyspark.sql import SparkSession
+import bench
+from proyecto_final_de_big_data_spark.oracle import check
+from proyecto_final_de_big_data_spark.queries import QUERIES
 
 
-def main() -> None:
+def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("oracle-check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    from proyecto_final_de_big_data_spark.oracle import compare, run_oracle
-    from proyecto_final_de_big_data_spark.queries import QUERIES
-
+    spark = bench.session("oracle-check", cpus=8)
     fails = 0
     for name in args.queries:
-        q = QUERIES[name]
-        t0 = time.perf_counter()
-        try:
-            df = q.spark_fn(spark, args.sf_dir)
-            if q.oracle is None:
-                n = df.count()
-                print(f"{name}: rows_only n={n} ({time.perf_counter()-t0:.1f}s)")
-                continue
-            ok, msg = compare(df, run_oracle(q.oracle, args.sf_dir))
-            if not ok:
-                fails += 1
-            print(
-                f"{name}: {'OK' if ok else 'FAIL ' + msg} "
-                f"({time.perf_counter()-t0:.1f}s)"
-            )
-        except Exception as e:  # noqa: BLE001 - report and continue
-            fails += 1
-            print(f"{name}: ERROR {type(e).__name__}: {str(e)[:200]}")
+        r = check(spark, QUERIES[name], args.sf_dir)
+        fails += r["status"] in ("fail", "error")
+        print(f"{name}: {r['status']} {r.get('detail', r.get('rows', ''))} ({r['sec']}s)")
     print("failures:", fails)
-    sys.exit(1 if fails else 0)
+    return 1 if fails else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

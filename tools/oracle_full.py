@@ -1,77 +1,51 @@
 """Full-catalog oracle attestation at the driver's correctness scale.
 
 Runs EVERY registered query (not just the first-50 verification
-window) against its DuckDB oracle at sf0.01 in a vanilla session —
-the same emulation `tools/preflight.py` performs for the window —
-and writes a judge-diffable JSON artifact, one entry per query:
-``{"status": "ok"|"rows_only"|"fail"|"error", "rows": n, "sec": t}``
-plus a summary header. VERDICT r7 item 6: the full-catalog claim was
-previously a BASELINE.md prose attestation; this makes it mechanical.
+window) through the oracle verdict at sf0.01, on the preflight's
+local[8] session, and writes a judge-diffable JSON artifact, one entry
+per query: ``{"status": "ok"|"rows_only"|"fail"|"error", "rows": n,
+"detail": msg, "sec": t, "in_window": bool}`` plus a summary header.
 
-Usage:  PYTHONPATH=/root/repo python tools/oracle_full.py [OUT.json]
+Usage:  PYTHONPATH=. python tools/oracle_full.py [OUT.json]
 """
 import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
-
-spark = (
-    SparkSession.builder.master("local[8]")
-    .appName("oracle-full-vanilla")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory", "8g")
-    .getOrCreate()
-)
-from proyecto_final_de_big_data_spark.queries import (  # noqa: E402
-    QUERIES,
-    _VERIFICATION_WINDOW,
-)
-from proyecto_final_de_big_data_spark.oracle import run_oracle, compare  # noqa: E402
+import bench
+from proyecto_final_de_big_data_spark.oracle import check
+from proyecto_final_de_big_data_spark.queries import QUERIES, _VERIFICATION_WINDOW
 
 SF = "/root/testdata/sf0.01"
-out_path = sys.argv[1] if len(sys.argv) > 1 else "ORACLE_FULL.json"
-results = {}
-fails = 0
-t_start = time.time()
-for i, (name, q) in enumerate(QUERIES.items(), 1):
-    t0 = time.perf_counter()
-    entry = {}
-    try:
-        df = q.spark_fn(spark, SF)
-        if q.oracle is None:
-            n = df.count()
-            entry = {"status": "rows_only", "rows": n}
-        else:
-            ok, msg = compare(df, run_oracle(q.oracle, SF))
-            entry = {"status": "ok" if ok else "fail"}
-            if not ok:
-                fails += 1
-                entry["detail"] = msg
-    except Exception as e:  # noqa: BLE001 - attestation must not abort
-        fails += 1
-        entry = {
-            "status": "error",
-            "detail": f"{type(e).__name__}: {str(e)[:200]}",
-        }
-    entry["sec"] = round(time.perf_counter() - t0, 2)
-    entry["in_window"] = i <= len(_VERIFICATION_WINDOW)
-    results[name] = entry
-    print(f"{i:3d} {name}: {entry['status']} ({entry['sec']}s)")
 
-artifact = {
-    "sf_dir": SF,
-    "n_queries": len(results),
-    "n_pass": sum(1 for r in results.values() if r["status"] == "ok"),
-    "n_rows_only": sum(
-        1 for r in results.values() if r["status"] == "rows_only"
-    ),
-    "n_fail": fails,
-    "total_sec": round(time.time() - t_start, 1),
-    "queries": results,
-}
-with open(out_path, "w", encoding="utf-8") as f:
-    json.dump(artifact, f, indent=1)
-print(f"failures: {fails}  -> {out_path}")
-sys.exit(1 if fails else 0)
+
+def main() -> int:
+    out_path = sys.argv[1] if len(sys.argv) > 1 else "ORACLE_FULL.json"
+    spark = bench.session("oracle-full-vanilla", cpus=8)
+    results = {}
+    t_start = time.time()
+    for i, (name, q) in enumerate(QUERIES.items(), 1):
+        entry = check(spark, q, SF)
+        entry["in_window"] = i <= len(_VERIFICATION_WINDOW)
+        results[name] = entry
+        print(f"{i:3d} {name}: {entry['status']} ({entry['sec']}s)")
+
+    statuses = [r["status"] for r in results.values()]
+    fails = statuses.count("fail") + statuses.count("error")
+    artifact = {
+        "sf_dir": SF,
+        "n_queries": len(results),
+        "n_pass": statuses.count("ok"),
+        "n_rows_only": statuses.count("rows_only"),
+        "n_fail": fails,
+        "total_sec": round(time.time() - t_start, 1),
+        "queries": results,
+    }
+    with open(out_path, "w", encoding="utf-8") as f:
+        json.dump(artifact, f, indent=1)
+    print(f"failures: {fails}  -> {out_path}")
+    return 1 if fails else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -11,7 +11,8 @@ import contextlib
 import io
 import os
 
-from pyspark.sql import SparkSession
+import bench
+from proyecto_final_de_big_data_spark.queries import QUERIES
 
 HEADLINERS = {
     "pricing_summary": "flagship aggregation — pushdown + pruning + partial/final agg",
@@ -65,7 +66,7 @@ HEADLINERS = {
     "incremental_agg_contract": "incremental mart merge — union-and-reaggregate at grain cardinality, no join to base facts",
     "cusum_changepoint_contract": "CUSUM — moments + recursion as per-key array folds, posexplode back, no raw-row window",
     "lorenz_gini_contract": "Lorenz/Gini — bucket counts partial/final, cumulative shares on answer-scale windows, no global sort",
-    "pagerank_contract": "PageRank — per-2-round lazy localCheckpoint truncation shows as LogicalRDD rounds; one join + one agg per round",
+    "pagerank_contract": "PageRank — per-4-round lazy localCheckpoint truncation shows as LogicalRDD rounds; one join + one agg per round",
     "setsim_prefix_join_contract": "prefix-filtered exact Jaccard — candidates only from rarest-shingle prefixes (doc-keyed windows), verify via array set ops on the pair table",
     "triangle_count_contract": "triangle counting — degree orientation by struct-key compare (NO window anywhere), wedge + closing joins, per-vertex rollup",
     "conformal_interval_contract": "split-conformal — one residual agg (percentile_disc order statistic), 1-row broadcast onto the test-side reduce",
@@ -132,14 +133,7 @@ HEADLINERS = {
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("plan-audit")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    from proyecto_final_de_big_data_spark.queries import QUERIES
+    spark = bench.session("plan-audit", cpus=4)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     out = [

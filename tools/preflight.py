@@ -1,34 +1,28 @@
-"""Driver-emulation preflight: vanilla session, sf0.01, first-50 window."""
-import sys, time
-from pyspark.sql import SparkSession
+"""Driver-emulation preflight: the oracle verdict for the first-50
+verification window at sf0.01, on the oracle tools' local[8] session.
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .appName("preflight-vanilla")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory", "8g")
-    .getOrCreate()
-)
+Usage: PYTHONPATH=. python tools/preflight.py   (ends "failures: N",
+exit 1 when N > 0)
+"""
+import sys
+
+import bench
+from proyecto_final_de_big_data_spark.oracle import check
 from proyecto_final_de_big_data_spark.queries import QUERIES
-from proyecto_final_de_big_data_spark.oracle import run_oracle, compare
 
 SF = "/root/testdata/sf0.01"
-fails = 0
-for i, (name, q) in enumerate(list(QUERIES.items())[:50], 1):
-    t0 = time.perf_counter()
-    try:
-        df = q.spark_fn(spark, SF)
-        if q.oracle is None:
-            n = df.count()
-            print(f"{i:3d} {name}: rows_only n={n} ({time.perf_counter()-t0:.1f}s)")
-            continue
-        ok, msg = compare(df, run_oracle(q.oracle, SF))
-        status = "OK" if ok else "FAIL"
-        if not ok: fails += 1
-        print(f"{i:3d} {name}: {status} {msg if not ok else ''} ({time.perf_counter()-t0:.1f}s)")
-    except Exception as e:
-        fails += 1
-        print(f"{i:3d} {name}: ERROR {type(e).__name__}: {str(e)[:200]}")
-print("failures:", fails)
-sys.exit(1 if fails else 0)
+
+
+def main() -> int:
+    spark = bench.session("preflight-vanilla", cpus=8)
+    fails = 0
+    for i, (name, q) in enumerate(list(QUERIES.items())[:50], 1):
+        r = check(spark, q, SF)
+        fails += r["status"] in ("fail", "error")
+        print(f"{i:3d} {name}: {r['status']} {r.get('detail', r.get('rows', ''))} ({r['sec']}s)")
+    print("failures:", fails)
+    return 1 if fails else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

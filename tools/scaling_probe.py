@@ -6,22 +6,11 @@ the data-dependent part grows near-linearly); a ratio approaching or
 exceeding the data ratio flags a super-linear hazard (all-pairs blowup,
 global sort, driver loop).
 
-Usage: PYTHONPATH=/root/repo python tools/scaling_probe.py
+Usage: PYTHONPATH=. python tools/scaling_probe.py   (local[$SPARK_GRAFT_CPUS])
 """
 import statistics
-import sys
-import time
 
-from pyspark.sql import SparkSession
-
-spark = (
-    SparkSession.builder.master("local[32]")
-    .appName("scaling-probe")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory", "16g")
-    .getOrCreate()
-)
+import bench
 from proyecto_final_de_big_data_spark.queries import QUERIES
 
 PROBES = [
@@ -43,25 +32,29 @@ PROBES = [
 ]
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
-rows = []
-for name in PROBES:
-    q = QUERIES[name]
-    medians = []
-    for sf in SFS:
-        ts = []
-        for i in range(4):
-            t0 = time.perf_counter()
-            q.spark_fn(spark, sf).count()
-            ts.append(time.perf_counter() - t0)
-        medians.append(statistics.median(ts[1:]))  # drop cold pass
-    ratio = medians[2] / medians[0]
-    rows.append((name, *medians, ratio))
-    print(
-        f"{name}: {medians[0]:.2f}s @0.001  {medians[1]:.2f}s @0.01  "
-        f"{medians[2]:.2f}s @0.1  ratio(100x data)={ratio:.1f}x",
-        flush=True,
-    )
 
-worst = max(rows, key=lambda r: r[4])
-print(f"\nworst ratio: {worst[0]} at {worst[4]:.1f}x over 100x data")
-sys.exit(0)
+def main() -> None:
+    spark = bench.session("scaling-probe")
+    bench.warm_up(spark, SFS[0])
+    rows = []
+    for name in PROBES:
+        q = QUERIES[name]
+        medians = [
+            statistics.median(bench.warm_runs(lambda: q.spark_fn(spark, sf).count(), 3)[1:])
+            for sf in SFS
+        ]
+        ratio = medians[2] / medians[0]
+        rows.append((name, *medians, ratio))
+        print(
+            f"{name}: {medians[0]:.2f}s @0.001  {medians[1]:.2f}s @0.01  "
+            f"{medians[2]:.2f}s @0.1  ratio(100x data)={ratio:.1f}x",
+            flush=True,
+        )
+
+    worst = max(rows, key=lambda r: r[4])
+    print(f"\nworst ratio: {worst[0]} at {worst[4]:.1f}x over 100x data")
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()

@@ -18,9 +18,9 @@ import argparse
 import json
 import os
 import statistics
-import time
 
-from pyspark.sql import SparkSession
+import bench
+from proyecto_final_de_big_data_spark.queries import QUERIES
 
 QUERIES_UNDER_TEST = [
     "pagerank_contract",
@@ -43,22 +43,8 @@ def main() -> None:
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("sf1-spot")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config(
-            "spark.python.daemon.module",
-            "proyecto_final_de_big_data_spark.pydaemon",
-        )
-        .getOrCreate()
-    )
-    from proyecto_final_de_big_data_spark.queries import QUERIES
-
-    # warm-up (JVM/codegen/daemon)
-    QUERIES["pricing_summary"].spark_fn(spark, "/root/testdata/sf0.1").count()
+    spark = bench.session("sf1-spot", cpus=args.cpus)
+    bench.warm_up(spark, "/root/testdata/sf0.1")
 
     out: dict[str, dict] = {}
     for name in QUERIES_UNDER_TEST:
@@ -68,11 +54,10 @@ def main() -> None:
             ("sf1_synth", args.big_dir),
         ):
             spark.sparkContext.setJobDescription(f"sf1-spot {label}: {name}")
-            vals = []
-            for r in range(args.runs + 1):
-                t0 = time.perf_counter()
-                QUERIES[name].spark_fn(spark, sf_dir).count()
-                vals.append(round(time.perf_counter() - t0, 3))
+            vals = [
+                round(v, 3)
+                for v in bench.warm_runs(lambda: QUERIES[name].spark_fn(spark, sf_dir).count(), args.runs)
+            ]
             entry[label] = {
                 "median_warm": round(statistics.median(vals[1:]), 3),
                 "runs": vals,

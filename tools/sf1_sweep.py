@@ -20,7 +20,8 @@ import os
 import time
 import traceback
 
-from pyspark.sql import SparkSession
+import bench
+from proyecto_final_de_big_data_spark.queries import QUERIES
 
 
 def main() -> None:
@@ -36,33 +37,16 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("sf1-sweep")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config(
-            "spark.python.daemon.module",
-            "proyecto_final_de_big_data_spark.pydaemon",
-        )
-        .getOrCreate()
-    )
-    from proyecto_final_de_big_data_spark.queries import QUERIES
-
-    QUERIES["pricing_summary"].spark_fn(spark, "/root/testdata/sf0.1").count()
+    spark = bench.session("sf1-sweep", cpus=args.cpus)
+    bench.warm_up(spark, "/root/testdata/sf0.1")
 
     out: dict[str, dict] = {}
     for name, q in QUERIES.items():
         spark.sparkContext.setJobDescription(f"sweep: {name}")
         entry: dict[str, object] = {}
         try:
-            t0 = time.perf_counter()
-            q.spark_fn(spark, "/root/testdata/sf0.1").count()
-            # second run = warm number (first pays plan/code caches)
-            t0 = time.perf_counter()
-            q.spark_fn(spark, "/root/testdata/sf0.1").count()
-            small = time.perf_counter() - t0
+            # the second run is the warm number; the first pays plan/code caches
+            small = bench.warm_runs(lambda: q.spark_fn(spark, "/root/testdata/sf0.1").count(), 1)[1]
             entry["sf0.1"] = round(small, 3)
             if small < args.skip_below:
                 entry["skipped_10x"] = "floor-bound at sf0.1"
