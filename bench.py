@@ -33,6 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import SparkSession
 
 from proyecto_final_de_big_data_spark.queries import QUERIES
+from proyecto_final_de_big_data_spark.utils.caching import scope
 
 
 def start_load_gate() -> dict[str, object]:
@@ -151,6 +152,13 @@ def warm_runs(fn: Callable[[], object], runs: int) -> list[float]:
     return times
 
 
+def run_query(spark: SparkSession, name: str, sf_dir: str) -> None:
+    """Build one registered query and count it, inside one ``scope()``
+    that releases the query's pins."""
+    with scope():
+        QUERIES[name].spark_fn(spark, sf_dir).count()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -176,9 +184,9 @@ def main() -> None:
     for _ in range(runs):
         pass_loads.append(round(os.getloadavg()[0], 2))
         p0 = time.perf_counter()
-        for name, q in QUERIES.items():
+        for name in QUERIES:
             t0 = time.perf_counter()
-            q.spark_fn(spark, sf_dir).count()
+            run_query(spark, name, sf_dir)
             samples[name].append(time.perf_counter() - t0)
         pass_durations.append(round(time.perf_counter() - p0, 2))
     # Mid-bench contention marker: the start gate cannot see load that
@@ -222,7 +230,7 @@ def main() -> None:
         prev_timings = {}
 
     def _isolated_warm(name: str) -> dict[str, object]:
-        vals = warm_runs(lambda: QUERIES[name].spark_fn(spark, sf_dir).count(), runs)
+        vals = warm_runs(lambda: run_query(spark, name, sf_dir), runs)
         return {
             "median_warm": round(statistics.median(vals[1:]), 4),
             "runs": [round(v, 4) for v in vals],

@@ -313,8 +313,8 @@ def cmd_curate(args, log) -> int:
             )
     spark = _session(args)
     historical = spark.read.parquet(args.historical) if args.historical else None
-    # run_curation materializes by WRITING the sink (no corpus-sized
-    # localCheckpoint) and releases the pinned stages afterwards.
+    # run_curation materializes by WRITING the sink (the curated corpus
+    # is never pinned) and releases the stage pins afterwards.
     run_curation(spark.read.parquet(args.input), cfg, args.output, historical)
     log.info("curated documents written to %s", args.output)
     if publish_group_cols is not None:

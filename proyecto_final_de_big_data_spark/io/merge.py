@@ -65,6 +65,8 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin, scope
+
 _OPS = ("upsert", "delete")
 # Partition values must render to a directory token verbatim (no Hive
 # percent-escaping on our side, so no ambiguity about what the swap
@@ -227,128 +229,131 @@ def merge_changes(
     """
     if seq_col is not None:
         changes = _collapse_by_seq(changes, id_col, partition_col, seq_col)
-    # Pin the change batch (lazy localCheckpoint, the house barrier):
-    # it is referenced FOUR times below (validation aggregate, the
-    # change-key anti-join side, the upsert payload, and — pre-r12 — a
-    # separate affected-partitions collect), so an unpinned batch re-ran
-    # the caller's whole change-derivation subtree once per reference
-    # (measured in the cdc_merge_contract event logs: the fixture's
-    # base-table scan + three filter branches repeated per action). The
-    # batch is delta-scale by contract (broadcastable), so the pin is
-    # bounded. The validation aggregate below materializes it.
-    changes = changes.localCheckpoint(eager=False)
+    # The merge runs its own actions and returns scalars only, so the
+    # pin below lives in this function's own scope.
+    with scope():
+        # Pin the change batch (lazy localCheckpoint, the house barrier):
+        # it is referenced FOUR times below (validation aggregate, the
+        # change-key anti-join side, the upsert payload, and — pre-r12 — a
+        # separate affected-partitions collect), so an unpinned batch re-ran
+        # the caller's whole change-derivation subtree once per reference
+        # (measured in the cdc_merge_contract event logs: the fixture's
+        # base-table scan + three filter branches repeated per action). The
+        # batch is delta-scale by contract (broadcastable), so the pin is
+        # bounded. The validation aggregate below materializes it.
+        changes = pin(changes)
 
-    op = F.col(op_col)
-    # One delta-scale aggregation validates the whole batch before any
-    # base read or write: op-domain, partition nullability, and the
-    # id-uniqueness rules the anti-join + union semantics rely on. The
-    # affected-partition set rides the SAME aggregate (collect_set is
-    # bounded by distinct partition values — metadata scale), deleting
-    # the separate partition-granularity collect job the pre-r12
-    # version ran (guide §5 — one driver round trip, not two).
-    v = changes.agg(
-        F.count(F.lit(1)).alias("n_changes"),
-        F.sum(F.when(~op.isin(*_OPS), 1).otherwise(0)).alias("n_bad_ops"),
-        F.sum(F.when(F.col(partition_col).isNull(), 1).otherwise(0)).alias("n_null_parts"),
-        F.sum(F.when(op == "upsert", 1).otherwise(0)).alias("n_upserts"),
-        F.count_distinct(F.when(op == "upsert", F.col(id_col))).alias("n_upsert_ids"),
-        F.sum(F.when(op == "delete", 1).otherwise(0)).alias("n_deletes"),
-        F.count_distinct(
-            F.when(op == "delete", F.struct(id_col, partition_col))
-        ).alias("n_delete_keys"),
-        F.collect_set(partition_col).alias("partitions"),
-    ).collect()[0]
-    if v["n_changes"] == 0:
-        return MergeReport((), (), 0, 0, 0)
-    if v["n_bad_ops"]:
-        raise ValueError(
-            f"{v['n_bad_ops']} change rows carry an op outside {_OPS} "
-            f"(column {op_col!r})"
-        )
-    if v["n_null_parts"]:
-        raise ValueError(
-            f"{v['n_null_parts']} change rows have a NULL {partition_col!r}; "
-            "partition-pruned merge cannot route them"
-        )
-    if v["n_upserts"] != v["n_upsert_ids"]:
-        raise ValueError(
-            f"{v['n_upserts'] - v['n_upsert_ids']} duplicate upsert id(s) in "
-            "the batch; pass seq_col so the latest change per key wins, or "
-            "pre-collapse the feed"
-        )
-    if v["n_deletes"] != v["n_delete_keys"]:
-        raise ValueError(
-            "duplicate delete rows for the same (id, partition); pass "
-            "seq_col so the latest change per key wins, or pre-collapse the feed"
-        )
+        op = F.col(op_col)
+        # One delta-scale aggregation validates the whole batch before any
+        # base read or write: op-domain, partition nullability, and the
+        # id-uniqueness rules the anti-join + union semantics rely on. The
+        # affected-partition set rides the SAME aggregate (collect_set is
+        # bounded by distinct partition values — metadata scale), deleting
+        # the separate partition-granularity collect job the pre-r12
+        # version ran (guide §5 — one driver round trip, not two).
+        v = changes.agg(
+            F.count(F.lit(1)).alias("n_changes"),
+            F.sum(F.when(~op.isin(*_OPS), 1).otherwise(0)).alias("n_bad_ops"),
+            F.sum(F.when(F.col(partition_col).isNull(), 1).otherwise(0)).alias("n_null_parts"),
+            F.sum(F.when(op == "upsert", 1).otherwise(0)).alias("n_upserts"),
+            F.count_distinct(F.when(op == "upsert", F.col(id_col))).alias("n_upsert_ids"),
+            F.sum(F.when(op == "delete", 1).otherwise(0)).alias("n_deletes"),
+            F.count_distinct(
+                F.when(op == "delete", F.struct(id_col, partition_col))
+            ).alias("n_delete_keys"),
+            F.collect_set(partition_col).alias("partitions"),
+        ).collect()[0]
+        if v["n_changes"] == 0:
+            return MergeReport((), (), 0, 0, 0)
+        if v["n_bad_ops"]:
+            raise ValueError(
+                f"{v['n_bad_ops']} change rows carry an op outside {_OPS} "
+                f"(column {op_col!r})"
+            )
+        if v["n_null_parts"]:
+            raise ValueError(
+                f"{v['n_null_parts']} change rows have a NULL {partition_col!r}; "
+                "partition-pruned merge cannot route them"
+            )
+        if v["n_upserts"] != v["n_upsert_ids"]:
+            raise ValueError(
+                f"{v['n_upserts'] - v['n_upsert_ids']} duplicate upsert id(s) in "
+                "the batch; pass seq_col so the latest change per key wins, or "
+                "pre-collapse the feed"
+            )
+        if v["n_deletes"] != v["n_delete_keys"]:
+            raise ValueError(
+                "duplicate delete rows for the same (id, partition); pass "
+                "seq_col so the latest change per key wins, or pre-collapse the feed"
+            )
 
-    # Partition-granularity set: bounded by partitions-touched, not
-    # rows (the merge analogue of reading a table-format commit log) —
-    # collected by the validation aggregate above, no second job.
-    affected = sorted(v["partitions"])
-    for value in affected:
-        _partition_token(value)  # fail before any write, not mid-swap
+        # Partition-granularity set: bounded by partitions-touched, not
+        # rows (the merge analogue of reading a table-format commit log) —
+        # collected by the validation aggregate above, no second job.
+        affected = sorted(v["partitions"])
+        for value in affected:
+            _partition_token(value)  # fail before any write, not mid-swap
 
-    base = spark.read.parquet(base_path).where(F.col(partition_col).isin(affected))
-    missing = [c for c in base.columns if c not in changes.columns]
-    if missing:
-        raise ValueError(f"changes are missing base columns: {missing}")
+        base = spark.read.parquet(base_path).where(F.col(partition_col).isin(affected))
+        missing = [c for c in base.columns if c not in changes.columns]
+        if missing:
+            raise ValueError(f"changes are missing base columns: {missing}")
 
-    # Enforce the HARD PRECONDITION above instead of merely documenting
-    # it (VERDICT r6 item 7): if any id appears twice across the
-    # affected partitions, the anti-join would silently drop the copy
-    # the batch did not target. One answer-scale aggregate over the
-    # already-pruned base slice — it reads only the partitions the
-    # merge rewrites anyway.
-    u = base.agg(
-        F.count(id_col).alias("n_rows"),
-        F.count_distinct(id_col).alias("n_ids"),
-    ).collect()[0]
-    if u["n_rows"] != u["n_ids"]:
-        raise ValueError(
-            f"{u['n_rows'] - u['n_ids']} duplicate {id_col!r} value(s) "
-            f"across the affected base partitions {affected}; the merge "
-            "id must be unique table-wide (use a composite id for "
-            "partition-scoped keys) or the anti-join would drop rows in "
-            "partitions the batch did not target"
-        )
+        # Enforce the HARD PRECONDITION above instead of merely documenting
+        # it (VERDICT r6 item 7): if any id appears twice across the
+        # affected partitions, the anti-join would silently drop the copy
+        # the batch did not target. One answer-scale aggregate over the
+        # already-pruned base slice — it reads only the partitions the
+        # merge rewrites anyway.
+        u = base.agg(
+            F.count(id_col).alias("n_rows"),
+            F.count_distinct(id_col).alias("n_ids"),
+        ).collect()[0]
+        if u["n_rows"] != u["n_ids"]:
+            raise ValueError(
+                f"{u['n_rows'] - u['n_ids']} duplicate {id_col!r} value(s) "
+                f"across the affected base partitions {affected}; the merge "
+                "id must be unique table-wide (use a composite id for "
+                "partition-scoped keys) or the anti-join would drop rows in "
+                "partitions the batch did not target"
+            )
 
-    change_keys = changes.select(id_col).distinct()
-    if broadcast_changes:
-        change_keys = F.broadcast(change_keys)
-    survivors = base.join(change_keys, id_col, "left_anti")
-    upserts = changes.where(op == "upsert").select(*base.columns)
-    merged = survivors.unionByName(upserts)
+        change_keys = changes.select(id_col).distinct()
+        if broadcast_changes:
+            change_keys = F.broadcast(change_keys)
+        survivors = base.join(change_keys, id_col, "left_anti")
+        upserts = changes.where(op == "upsert").select(*base.columns)
+        merged = survivors.unionByName(upserts)
 
-    staging = base_path.rstrip("/") + f"__merge_staging_{uuid.uuid4().hex[:8]}"
-    try:
-        merged.write.partitionBy(partition_col).mode("overwrite").parquet(staging)
-        n_output_rows = _staged_row_count(spark, staging)
-    except BaseException:
-        # Write/count failed: the live dataset is untouched and staging
-        # holds only junk — safe to clean up.
+        staging = base_path.rstrip("/") + f"__merge_staging_{uuid.uuid4().hex[:8]}"
+        try:
+            merged.write.partitionBy(partition_col).mode("overwrite").parquet(staging)
+            n_output_rows = _staged_row_count(spark, staging)
+        except BaseException:
+            # Write/count failed: the live dataset is untouched and staging
+            # holds only junk — safe to clean up.
+            _remove_dir(spark, staging)
+            raise
+        try:
+            emptied = _swap_partitions(spark, base_path, staging, partition_col, affected)
+        except BaseException as e:
+            # Swap failed partway: some live partition dirs may already be
+            # removed, and staging holds the ONLY copy of their replacement
+            # data. Never delete it here — leave it for manual recovery and
+            # say exactly where it is and what was in flight.
+            raise RuntimeError(
+                "partition swap failed mid-flight; the live dataset at "
+                f"{base_path!r} may be missing some of partitions "
+                f"{affected}. The replacement data is preserved at "
+                f"{staging!r} — move each '{partition_col}=<value>' "
+                "directory from there into the live dataset to recover."
+            ) from e
         _remove_dir(spark, staging)
-        raise
-    try:
-        emptied = _swap_partitions(spark, base_path, staging, partition_col, affected)
-    except BaseException as e:
-        # Swap failed partway: some live partition dirs may already be
-        # removed, and staging holds the ONLY copy of their replacement
-        # data. Never delete it here — leave it for manual recovery and
-        # say exactly where it is and what was in flight.
-        raise RuntimeError(
-            "partition swap failed mid-flight; the live dataset at "
-            f"{base_path!r} may be missing some of partitions "
-            f"{affected}. The replacement data is preserved at "
-            f"{staging!r} — move each '{partition_col}=<value>' "
-            "directory from there into the live dataset to recover."
-        ) from e
-    _remove_dir(spark, staging)
 
-    return MergeReport(
-        affected_partitions=tuple(affected),
-        emptied_partitions=tuple(emptied),
-        n_upserts=int(v["n_upserts"]),
-        n_deletes=int(v["n_deletes"]),
-        n_output_rows=n_output_rows,
-    )
+        return MergeReport(
+            affected_partitions=tuple(affected),
+            emptied_partitions=tuple(emptied),
+            n_upserts=int(v["n_upserts"]),
+            n_deletes=int(v["n_deletes"]),
+            n_output_rows=n_output_rows,
+        )

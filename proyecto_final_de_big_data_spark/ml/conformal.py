@@ -31,6 +31,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
+
 
 def split_conformal_profile(
     df: DataFrame,
@@ -89,9 +91,7 @@ def split_conformal_profile(
     # test-side coverage agg and the final readout, and it must
     # survive an EMPTY test split (an agg over the empty crossJoin
     # yields NULL first()s — the fitted radius would silently vanish).
-    qf = cal.agg(
-        F.count(F.lit(1)).alias("n_cal"), q_agg.alias("__q")
-    ).localCheckpoint(eager=False)
+    qf = pin(cal.agg(F.count(F.lit(1)).alias("n_cal"), q_agg.alias("__q")))
     test = base.filter(~F.col("__cal"))
     # 1-row crossJoin scalar pattern: q rides broadcast, no collect.
     tstats = test.crossJoin(F.broadcast(qf)).agg(

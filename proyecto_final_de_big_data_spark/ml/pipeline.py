@@ -17,6 +17,8 @@ from pyspark.ml.feature import OneHotEncoder, StringIndexer, VectorAssembler
 from pyspark.ml.regression import GBTRegressor, LinearRegression, RandomForestRegressor
 from pyspark.sql import DataFrame, SparkSession
 
+from ..utils.caching import pin, scope
+
 
 @dataclass
 class TrainConfig:
@@ -132,36 +134,31 @@ def evaluate(predictions: DataFrame, label: str) -> dict[str, float]:
 def train_and_evaluate(df: DataFrame, cfg: TrainConfig) -> tuple[PipelineModel, dict[str, float], DataFrame]:
     """80/20 split → fit → score test → metrics dict + predictions.
 
-    The train split is persisted before ``fit`` — the fit otherwise
+    The train split is pinned before ``fit`` — the fit otherwise
     re-reads the source and recomputes the split once per internal job
     (each StringIndexer distinct-count, the regressor solve, …).
-    Predictions are persisted so the metrics aggregation and the test
-    count score once; both caches are released before returning
-    (callers that iterate the returned predictions frame should persist
-    it themselves — most consume only the metrics dict, and a pinned
-    cache would otherwise leak across a long-lived session).
+    Predictions are pinned so the metrics aggregation and the test
+    count score once. Both pins live in this function's own ``scope()``
+    and are released before it returns (utils/caching.py), so the
+    returned predictions frame is rebuilt as ``model.transform(test)``
+    over the unpinned split: it recomputes when the caller acts on it.
 
     The input is pruned to label + used feature columns BEFORE the
-    split/persist: every fit job and the cached train partition then
+    split/pin: every fit job and the pinned train partition then
     carry only what the model reads (at 100 TB, caching unread fact
     columns is the difference between fitting in memory and spilling).
     """
     pipeline, numeric, categorical = build_pipeline(df, cfg)
     df = df.select(cfg.label, *numeric, *categorical)
     train, test = df.randomSplit([cfg.train_fraction, 1 - cfg.train_fraction], seed=cfg.seed)
-    train = train.persist()
-    predictions = None
-    try:
+    with scope():
+        train = pin(train)
         model = pipeline.fit(train)
-        predictions = model.transform(test).persist()
+        predictions = pin(model.transform(test))
         metrics = evaluate(predictions, cfg.label)
         metrics["rows_train"] = train.count()
         metrics["rows_test"] = predictions.count()
-    finally:
-        train.unpersist()
-        if predictions is not None:
-            predictions.unpersist()
-    return model, metrics, predictions
+    return model, metrics, model.transform(test)
 
 
 def metrics_frame(spark: SparkSession, metrics: dict, **tags: str) -> DataFrame:

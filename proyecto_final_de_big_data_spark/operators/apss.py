@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
 from .normalize_text import ws_lower_tokens
 
 
@@ -60,17 +61,16 @@ def tfidf_weights(
     (whitespace tokens, lowercased). Terms present in EVERY document
     get idf 0 and are dropped (zero weight carries no cosine mass);
     documents left with no weighted terms vanish with them."""
-    tok = (
+    # Pinned: tok feeds the doc-frequency agg AND the weight join —
+    # unpinned, the tokenize + (id, term) agg subtree ran twice
+    # (r11 optimization, guide §5).
+    tok = pin(
         df.select(
             F.col(id_col).alias("id"),
             F.explode(ws_lower_tokens(text_col)).alias("term"),
         )
         .groupBy("id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        # Pinned: tok feeds the doc-frequency agg AND the weight join —
-        # unpinned, the tokenize + (id, term) agg subtree ran twice
-        # (r11 optimization, guide §5).
-        .localCheckpoint(eager=False)
     )
     # Corpus size rides the plan as a broadcast 1-row scalar frame (the
     # keyness/modularity posture) instead of an eager .first() readout:
@@ -110,11 +110,10 @@ def cosine_similarity_pairs(
     # unpinned plan re-ran the whole tf-idf subtree once per consumer
     # (r11 optimization, guide §5). Norms (1 row per doc) likewise
     # feed three consumers (ranked + both denominator joins).
-    weights = tfidf_weights(df, id_col, text_col).localCheckpoint(eager=False)
-    norms = (
+    weights = pin(tfidf_weights(df, id_col, text_col))
+    norms = pin(
         weights.groupBy("id")
         .agg(F.sum(F.col("w") * F.col("w")).alias("__w2"))
-        .localCheckpoint(eager=False)
     )
     ranked = weights.join(norms, "id")
     # Global term order: df ASC, term ASC (rarest first). The running

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
 from .quality import words
 
 
@@ -58,15 +59,14 @@ def bm25_scores(
     # filter keeps the old semantics exactly: the exploded groupBy only
     # produced rows for documents with >= 1 token, so avgdl averages
     # over the same document set.
-    doclen = (
+    # Pinned: doclen feeds the avgdl scalar AND the per-doc score
+    # join — one tokenize pass, not two.
+    doclen = pin(
         docs.select(
             F.col(id_col).alias("doc_id"),
             F.size(words(F.lower(F.col(text_col)))).cast("double").alias("dl"),
         )
         .filter(F.col("dl") > 0)
-        # Pinned: doclen feeds the avgdl scalar AND the per-doc score
-        # join — one tokenize pass, not two.
-        .localCheckpoint(eager=False)
     )
     avgdl = doclen.agg(F.avg("dl").alias("avgdl"))
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))

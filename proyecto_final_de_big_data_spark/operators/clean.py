@@ -44,17 +44,10 @@ def quantile_bounds(
     """One-row DataFrame of per-column [lo, hi] quantile bounds.
 
     One aggregation pass for ALL columns (vs the reference's
-    scan-per-column anti-pattern, SURVEY §4).
+    scan-per-column anti-pattern, SURVEY §4): the ungrouped
+    :func:`grouped_quantile_bounds`, as ``df.agg`` is ``df.groupBy().agg``.
     """
-    aggs = []
-    for c in cols:
-        if exact:
-            q = F.percentile(c, F.array(F.lit(lower), F.lit(upper)))
-        else:
-            q = F.percentile_approx(c, F.array(F.lit(lower), F.lit(upper)), int(1.0 / relative_error))
-        aggs.append(q.getItem(0).alias(f"{c}__lo"))
-        aggs.append(q.getItem(1).alias(f"{c}__hi"))
-    return df.agg(*aggs)
+    return grouped_quantile_bounds(df, [], cols, lower, upper, exact=exact, relative_error=relative_error)
 
 
 def clip_to_quantiles(

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
 from .normalize_text import ws_lower_tokens
 
 
@@ -77,10 +78,9 @@ def pmi_collocations(
     # (the llr_keyness barrier discipline; B = Σ n_pair over the
     # UNFILTERED pair counts equals the raw bigram count exactly, so
     # no second data-scale pass is needed for the total).
-    pair_counts_all = (
+    pair_counts_all = pin(
         bigram.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n_pair"))
-        .localCheckpoint(eager=False)
     )
     b_frame = pair_counts_all.agg(
         F.sum("n_pair").cast("double").alias("__B")

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
+
 _MASK64 = (1 << 64) - 1
 
 
@@ -355,26 +357,21 @@ def jaccard_verify(
     the string-set Jaccard absent a hash collision, and long-array set
     intersection is far cheaper than string-array.
 
-    The verified pair set (small relative to the corpus) is materialized
-    eagerly so the persisted shingle frame can be released before
-    returning instead of leaking across the session.
+    The shingle frame is pinned and the verified pairs returned lazily;
+    the caller's ``scope()`` releases the pin (utils/caching.py).
     """
-    from ..utils.caching import materialize_and_release
-
     pair_ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .unionByName(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
     needed = df.join(pair_ids, id_col, "left_semi")
-    # Persisted: the shingle set attaches to BOTH pair sides — without it
+    # Pinned: the shingle set attaches to BOTH pair sides — without it
     # the semi-join + Arrow shingling subtree runs once per join.
-    sh = (
-        shingle_hash_arrays(needed, id_col, text_col, shingle_n)
-        .withColumnRenamed("__shash", "__sh")
-        .persist()
+    sh = pin(
+        shingle_hash_arrays(needed, id_col, text_col, shingle_n).withColumnRenamed("__shash", "__sh")
     )
-    j = (
+    return (
         pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sh", "sh_a"), "id_a")
         .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sh", "sh_b"), "id_b")
         .withColumn(
@@ -383,8 +380,8 @@ def jaccard_verify(
             / F.size(F.array_union("sh_a", "sh_b")),
         )
         .select("id_a", "id_b", "jaccard")
+        .filter(F.col("jaccard") >= threshold)
     )
-    return materialize_and_release(j.filter(F.col("jaccard") >= threshold), sh)
 
 
 def jaccard_pairs_index(
@@ -425,10 +422,9 @@ def jaccard_pairs_index(
     # optimization, guide §5 — recompute less). Set sizes come straight
     # off the distinct array (``with_word_shingles`` array_distincts),
     # replacing the explode + groupBy-count + Exchange per join side.
-    arrs = (
+    arrs = pin(
         with_word_shingles(df.select(id_col, text_col), text_col, "__sh", shingle_n)
         .select(id_col, "__sh")  # project the text away pre-pin
-        .localCheckpoint(eager=False)
     )
     sh = arrs.select(F.col(id_col), F.explode("__sh").alias("__shingle"))
     sizes = arrs.select(F.col(id_col), F.size("__sh").alias("__sz"))
@@ -493,9 +489,7 @@ def jaccard_pairs_hashed_index(
     # subtrees in the measured minhash_recall plan (r11 optimization,
     # guide §5). Set sizes come straight off the distinct hash array,
     # replacing the explode + groupBy-count + Exchange per join side.
-    arrs = shingle_hash_arrays(df, id_col, text_col, shingle_n).localCheckpoint(
-        eager=False
-    )
+    arrs = pin(shingle_hash_arrays(df, id_col, text_col, shingle_n))
     sh = arrs.select(F.col(id_col), F.explode("__shash").alias("__shingle"))
     sizes = arrs.select(F.col(id_col), F.size("__shash").alias("__sz"))
     if max_doc_freq is not None:
@@ -543,19 +537,15 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup pairs, Jaccard-verified.
 
-    Signatures and candidate pairs are persisted: both are tiny relative
+    Signatures and candidate pairs are pinned: both are tiny relative
     to the corpus (num_hashes longs per doc; candidate pairs << n²) and
-    each is referenced by multiple downstream joins — without the
-    persist, Spark re-evaluates the Arrow signature pass once per
-    reference (up to 6× across the banding self-join and the pair-table
-    fan-out in verification). ``jaccard_verify`` materializes the final
-    pair set eagerly, so both frames are released before returning.
+    each is referenced by multiple downstream joins — unpinned, Spark
+    re-evaluates the Arrow signature pass once per reference (up to 6×
+    across the banding self-join and the pair-table fan-out in
+    verification). The pairs are returned lazily; the caller's
+    ``scope()`` releases the pins (utils/caching.py).
     """
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n).persist()
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band).persist()
-    try:
-        return jaccard_verify(df, cands, id_col, text_col, shingle_n, threshold)
-    finally:
-        cands.unpersist()
-        sigs.unpersist()
+    sigs = pin(minhash_signatures(df, id_col, text_col, num_hashes, shingle_n))
+    cands = pin(lsh_candidate_pairs(sigs, id_col, bands, rows_per_band))
+    return jaccard_verify(df, cands, id_col, text_col, shingle_n, threshold)

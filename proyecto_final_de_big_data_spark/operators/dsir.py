@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
 from .mixing import _md5_fold
 
 
@@ -76,10 +77,9 @@ def hashed_ngram_counts(
     # winnowing_fingerprints pattern): without it CollapseProject
     # inlines the tokenize into the per-gram slice lambda and the
     # split re-runs per gram — O(len²) per document.
-    base = (
+    base = pin(
         spread_for_fanout(df.select(F.col(id_col).alias("id"), F.col(text_col)), "id")
         .select("id", ws_lower_tokens(text_col).alias("__w"))
-        .localCheckpoint(eager=False)
     )
     words = F.col("__w")
     # sequence(1, 0) DESCENDS in Spark (it never returns empty), so
@@ -130,9 +130,7 @@ def dsir_scores(
     exploded gram stream it replaces)."""
     if alpha <= 0:
         raise ValueError(f"dsir_scores needs alpha > 0; got {alpha}")
-    raw_counts = hashed_ngram_counts(raw, id_col, text_col, n, buckets).localCheckpoint(
-        eager=False
-    )
+    raw_counts = pin(hashed_ngram_counts(raw, id_col, text_col, n, buckets))
     tgt_counts = hashed_ngram_counts(target, id_col, text_col, n, buckets)
     p = tgt_counts.groupBy("bucket").agg(F.sum("cnt").alias("__pc"))
     q = raw_counts.groupBy("bucket").agg(F.sum("cnt").alias("__qc"))

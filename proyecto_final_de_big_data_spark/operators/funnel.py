@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
+
 WEEK_SECONDS = 7 * 24 * 3600
 
 
@@ -45,7 +47,7 @@ def funnel_counts(
     funnel entry step is empty), the number every dashboard plots.
 
     The whole funnel is ONE DataFrame plan / ONE action: each step's
-    per-user frame is ``localCheckpoint(eager=False)``-truncated, so
+    per-user frame is pinned (a lazy local checkpoint), so
     step k is evaluated exactly once even though it feeds both its own
     count branch and step k+1's join — without the checkpoint, an
     N-step funnel re-scans the event source O(N²) times. The final
@@ -88,7 +90,7 @@ def funnel_counts(
             + F.lit(int(max_seconds) * 1_000_000),
         )
         carry = [user_col, "__t", "__d"]
-    reached = entry.localCheckpoint(eager=False)
+    reached = pin(entry)
     frames = [reached]
     for step in steps[1:]:
         nxt = events.filter(F.col(type_col) == step).join(
@@ -103,11 +105,10 @@ def funnel_counts(
         aggs = [F.min(ts_col).alias("__t")]
         if windowed:
             aggs.append(F.min("__d").alias("__d"))
-        reached = (
+        reached = pin(
             nxt.filter(cond)
             .groupBy(user_col)
             .agg(*aggs)
-            .localCheckpoint(eager=False)
         )
         frames.append(reached)
     branches = [

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
+
 
 def edit_distance_join(
     left: DataFrame,
@@ -238,7 +240,7 @@ def jaro_winkler_self_join(
             dtype="float64",
         )
 
-    cand = multipass_candidates(df, col, blocks).localCheckpoint(eager=False)
+    cand = pin(multipass_candidates(df, col, blocks))
     # Spread the candidate frame across cores before the Python scoring
     # pass (the winnow.py fan-out discipline, r11 optimization): the
     # pair-DISTINCT's post-shuffle partitions get AQE-coalesced on pair
@@ -248,7 +250,9 @@ def jaro_winkler_self_join(
     # rows, so the extra exchange is cheap relative to the UDF.
     from .winnow import spread_for_fanout
 
-    scored = spread_for_fanout(cand, "left_value").withColumn(
-        "jw", F.round(_jw(F.col("left_value"), F.col("right_value")), decimals)
-    ).localCheckpoint(eager=False)
+    scored = pin(
+        spread_for_fanout(cand, "left_value").withColumn(
+            "jw", F.round(_jw(F.col("left_value"), F.col("right_value")), decimals)
+        )
+    )
     return scored.filter(F.col("jw") >= threshold)

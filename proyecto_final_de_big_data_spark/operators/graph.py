@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
+
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Distinct (src>dst) orientation, self-loops dropped."""
@@ -108,10 +110,10 @@ def connected_components(
     # checkpoint would run every round twice (one job to checkpoint,
     # one to aggregate). Lazy folds both into the checksum's single job
     # while still truncating lineage for the next round.
-    e = _canonical_edges(edges, src, dst).localCheckpoint(eager=False)
+    e = pin(_canonical_edges(edges, src, dst))
     prev = _checksum(e)
     for _ in range(max_iterations):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        e = pin(_small_star(_large_star(e)))
         cur = _checksum(e)
         if cur == prev:
             break
@@ -290,16 +292,14 @@ def pagerank(
     # as 3 full base-table scans per execution (987 MB input/run for a
     # ~330 MB edge build; r12 event-log accounting, guide §5
     # recompute-less). The n_nodes count below materializes the chain.
-    e = (
+    e = pin(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    nodes = (
+    nodes = pin(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     n_nodes = nodes.count()
     if n_nodes == 0:
@@ -325,7 +325,7 @@ def pagerank(
     # relation drags cached-plan AQE into every round — 127 -> 224
     # stages, 8.8 s -> 13.9 s warm at sf0.1. The lazy localCheckpoint
     # fuses all rounds into one non-adaptive query instead.
-    contrib_edges = (
+    contrib_edges = pin(
         e.join(outdeg, "src")
         .unionByName(
             nodes.select(
@@ -334,7 +334,6 @@ def pagerank(
                 F.lit(None).cast("long").alias("outdeg"),
             )
         )
-        .localCheckpoint(eager=False)
     )
     base = F.lit((1.0 - damping) / n_nodes)
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
@@ -369,7 +368,7 @@ def pagerank(
             )
         )
         if (it + 1) % max(1, checkpoint_every) == 0 or it == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = pin(ranks)
     return ranks
 
 
@@ -412,21 +411,19 @@ def triangle_stats(
     # canonicalize-distinct subtree ~9x (measured 104 Exchanges /
     # 1544-line plan for the contract) and leaned on runtime exchange
     # reuse to dedup it. Values untouched — integer counts throughout.
-    und = (
+    und = pin(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("__u"),
             F.greatest(F.col(src), F.col(dst)).alias("__v"),
         )
         .filter(u.isNotNull() & v.isNotNull() & (u != v))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    deg = (
+    deg = pin(
         und.select(u.alias("node"))
         .unionAll(und.select(v.alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
-        .localCheckpoint(eager=False)
     )
     keyed = und.join(
         deg.select(F.col("node").alias("__u"), F.col("degree").alias("__du")),
@@ -437,11 +434,13 @@ def triangle_stats(
     )
     ku = F.struct(F.col("__du").alias("d"), u.alias("n"))
     kv = F.struct(F.col("__dv").alias("d"), v.alias("n"))
-    oriented = keyed.select(
-        F.when(ku < kv, u).otherwise(v).alias("lo"),
-        F.when(ku < kv, v).otherwise(u).alias("hi"),
-        F.when(ku < kv, kv).otherwise(ku).alias("k_hi"),
-    ).localCheckpoint(eager=False)
+    oriented = pin(
+        keyed.select(
+            F.when(ku < kv, u).otherwise(v).alias("lo"),
+            F.when(ku < kv, v).otherwise(u).alias("hi"),
+            F.when(ku < kv, kv).otherwise(ku).alias("k_hi"),
+        )
+    )
     w1 = oriented.select(
         F.col("lo").alias("a"), F.col("hi").alias("b"), F.col("k_hi").alias("kb")
     )
@@ -524,9 +523,7 @@ def label_propagation(
     if iterations < 1:
         raise ValueError(f"label_propagation needs iterations >= 1; got {iterations}")
     e = _canonical_edges(edges, src, dst)
-    sym = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
+    sym = pin(e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))))
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -563,7 +560,7 @@ def label_propagation(
             .select("node", F.col("__b.l").alias("label"))
         )
         if (it + 1) % max(1, checkpoint_every) == 0 or it == iterations - 1:
-            labels = labels.localCheckpoint(eager=False)
+            labels = pin(labels)
     return labels
 
 
@@ -729,7 +726,7 @@ def k_core(
             .select("src", "dst")
         )
         if (it + 1) % max(1, checkpoint_every) == 0 or it == iterations - 1:
-            e = e.localCheckpoint(eager=False)
+            e = pin(e)
     sym = e.union(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -811,7 +808,7 @@ def bfs_distances(
     # the edge list crosses the wire once total instead of once per
     # hop (guide §2.4; unlike the persist() route this adds no
     # cached-plan AQE re-planning — see the pagerank NOTE).
-    sym = sym.repartition("src").sortWithinPartitions("src").localCheckpoint(eager=False)
+    sym = pin(sym.repartition("src").sortWithinPartitions("src"))
     settled = (
         sources.select(F.col(node).alias("node"))
         .distinct()
@@ -831,7 +828,7 @@ def bfs_distances(
         )
         settled = settled.unionByName(new)
         if hop % max(1, checkpoint_every) == 0 or hop == max_hops:
-            settled = settled.localCheckpoint(eager=False)
+            settled = pin(settled)
             # Re-derive the frontier from the PINNED settled frame
             # (rows with dist == hop are exactly `new`): the next
             # round reads the materialized RDD instead of re-running

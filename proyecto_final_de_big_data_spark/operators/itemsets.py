@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
+
 
 def _capped_baskets(
     df: DataFrame, basket_col: str, item_col: str, max_basket: int
@@ -50,14 +52,13 @@ def _capped_baskets(
     grouped = items.groupBy("basket").agg(
         F.array_sort(F.collect_set("item")).alias("items")
     )
-    # Lazy localCheckpoint: FP-Growth's fit makes THREE passes over its
-    # input (minCount count, frequent-item agg, conditional-DB mining)
-    # and both callers aggregate the basket total on top — without the
-    # checkpoint the join+groupBy prep subtree re-executes per pass
-    # (4x measured at sf0.1). Computed once on first use, reused from
-    # executor-local blocks after; freed by the ContextCleaner when the
-    # frame is collected (no session-lifetime pin).
-    return grouped.where(F.size("items") <= max_basket).localCheckpoint(eager=False)
+    # Pinned: FP-Growth's fit makes THREE passes over its input
+    # (minCount count, frequent-item agg, conditional-DB mining) and
+    # both callers aggregate the basket total on top — unpinned, the
+    # join+groupBy prep subtree re-executes per pass (4x measured at
+    # sf0.1). Computed once on first use, reused from executor-local
+    # blocks after; released by the caller's scope.
+    return pin(grouped.where(F.size("items") <= max_basket))
 
 
 def frequent_itemsets(

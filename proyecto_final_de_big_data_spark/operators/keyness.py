@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
 from .normalize_text import ws_lower_tokens
 
 
@@ -86,7 +87,7 @@ def llr_keyness(
     # runs once (the winnow.py barrier discipline; totals are computed
     # over the RETAINED terms, mirrored by the oracle's post-HAVING
     # totals CTE).
-    counts = counts.localCheckpoint(eager=False)
+    counts = pin(counts)
     # Both-sides-non-empty guard IN-PLAN (raise_error riding the 1-row
     # totals frame) so constructing the DataFrame stays lazy — no
     # collect, no eager corpus explode (r10 ADVICE item). sum() over

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
 from .binning import equal_frequency_bins
 
 
@@ -54,7 +55,13 @@ def rfm_segments(
     ``equal_frequency_bins`` contract: bound placement approximates,
     bin assignment around the returned bounds stays exact).
     """
-    per_cust = (
+    # Lineage-truncated: the three quantile-bound fits below are
+    # eager collect actions and the final profile is a fourth —
+    # without this the transaction log would be re-scanned per
+    # action (the r8 review finding); with it, the log is scanned
+    # exactly once and everything after runs on the materialized
+    # customer-cardinality frame.
+    per_cust = pin(
         df.groupBy(F.col(customer_col).alias("customer"))
         .agg(
             F.datediff(
@@ -63,13 +70,6 @@ def rfm_segments(
             F.count(F.lit(1)).alias("frequency"),
             F.sum(amount_col).alias("monetary"),
         )
-        # Lineage-truncated: the three quantile-bound fits below are
-        # eager collect actions and the final profile is a fourth —
-        # without this the transaction log would be re-scanned per
-        # action (the r8 review finding); with it, the log is scanned
-        # exactly once and everything after runs on the materialized
-        # customer-cardinality frame.
-        .localCheckpoint(eager=False)
     )
     binned = per_cust
     for col in ("recency_days", "frequency", "monetary"):

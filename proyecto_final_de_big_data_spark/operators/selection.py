@@ -47,11 +47,6 @@ def quality_bin(score: Column | str, scale: float = 20.0) -> Column:
     return F.floor(c * F.lit(scale)).cast("long")
 
 
-def quality_bin_sql(score_sql: str, scale: float = 20.0) -> str:
-    """DuckDB twin of :func:`quality_bin` — the same multiply-then-floor."""
-    return f"CAST(floor(({score_sql}) * {scale}) AS BIGINT)"
-
-
 def token_budget_thresholds(
     df: DataFrame,
     stratum_col: str,

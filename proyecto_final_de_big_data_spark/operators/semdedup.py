@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
 from .graph import cluster_dedup_keep
 from .similarity import as_double_array
 from .similarity_ivf import ivf_assign
@@ -96,7 +97,7 @@ def semantic_dedup_pairs(
     ``assigned``: an already-computed ``ivf_assign(corpus, centroids)``
     frame (same convention as ``simhash_near_dup_pairs(signatures=...)``).
     Both sides of the self-join read the assignment, so a caller that
-    persists it halves the Arrow scoring passes; left to None the
+    pins it halves the Arrow scoring passes; left to None the
     assignment is built here and the caller controls nothing.
     """
     if assigned is None:
@@ -133,21 +134,11 @@ def semantic_dedup_keep(
     to A even when A and C were never directly paired).
 
     Cache lifetime: the cell assignment feeds BOTH sides of the
-    within-cell self-join, so it is persisted here for the pair
-    computation (one Arrow scoring pass instead of two) and released
-    before returning — ``cluster_dedup_keep`` materializes the edge
-    list inside its connected-components rounds (per-round
-    ``localCheckpoint``), after which the assignment is genuinely
-    unreferenced; the returned keep-frame depends only on the corpus
-    scan and the (checkpointed) component labels.
+    within-cell self-join, so it is pinned (one Arrow scoring pass
+    instead of two). The returned keep-frame reads the pinned component
+    edges of ``cluster_dedup_keep``, so every pin here lives until the
+    caller's ``scope()`` exits (utils/caching.py).
     """
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col).persist()
-    try:
-        pairs = semantic_dedup_pairs(
-            corpus, centroids, id_col, vec_col, threshold, assigned=assigned
-        )
-        # Eager: connected_components runs its convergence loop (and
-        # checkpoints the edges) during this call, consuming `assigned`.
-        return cluster_dedup_keep(corpus, pairs.select("id_a", "id_b"), id_col)
-    finally:
-        assigned.unpersist(blocking=False)
+    assigned = pin(ivf_assign(corpus, centroids, id_col, vec_col))
+    pairs = semantic_dedup_pairs(corpus, centroids, id_col, vec_col, threshold, assigned=assigned)
+    return cluster_dedup_keep(corpus, pairs.select("id_a", "id_b"), id_col)

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
 from .dedup import with_word_shingles
 
 
@@ -78,10 +79,9 @@ def jaccard_prefix_pairs(
     # feeds the doc-frequency count, the ranked index join AND both
     # verification sides — the unpinned plan re-ran the shingling pass
     # once per consumer (r11 optimization, guide §5).
-    arrs = (
+    arrs = pin(
         with_word_shingles(df.select(id_col, text_col), text_col, "__sh", shingle_n)
         .select(id_col, "__sh")
-        .localCheckpoint(eager=False)
     )
     tok = arrs.select(F.col(id_col), F.explode("__sh").alias("__shingle"))
     freq = tok.groupBy("__shingle").agg(F.count(F.lit(1)).alias("__df"))
@@ -167,10 +167,9 @@ def containment_pairs(
     # lookups; set sizes come straight off the distinct array
     # (``with_word_shingles`` array_distincts), replacing the explode +
     # groupBy-count + Exchange per side.
-    arrs = (
+    arrs = pin(
         with_word_shingles(df.select(id_col, text_col), text_col, "__sh", shingle_n)
         .select(id_col, "__sh")
-        .localCheckpoint(eager=False)
     )
     sh = arrs.select(F.col(id_col), F.explode("__sh").alias("__shingle"))
     sizes = arrs.select(F.col(id_col), F.size("__sh").alias("__sz"))

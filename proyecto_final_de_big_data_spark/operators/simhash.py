@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
 from .dedup import _hash64, _split_words, _spread
 
 N_BITS = 64
@@ -70,23 +71,17 @@ def simhash_near_dup_pairs(
     """Pairs (id_a, id_b, hamming) with Hamming(simhash) <= max_hamming.
 
     Exact for max_hamming <= 3 via pigeonhole 16-bit chunk banding.
-    Pass precomputed (persisted) ``signatures`` to share the signature
+    Pass precomputed (pinned) ``signatures`` to share the signature
     scan with other consumers — signature computation is the dominant
     cost (explode + 64 aggregates), the banding itself is cheap. When
-    ``signatures`` is supplied the CALLER owns its cache lifetime and
-    the result stays lazy; when computed here, the (small) pair set is
-    materialized eagerly and the signature cache released on return.
+    computed here they are pinned; either way the result is lazy and
+    the caller's ``scope()`` releases the pins (utils/caching.py).
     """
     if max_hamming >= CHUNKS:
         raise ValueError(f"banding is lossless only for max_hamming < {CHUNKS}")
-    # Persist when we computed them: the chunk self-join references the
+    # Pin when we compute them: the chunk self-join references the
     # signature frame twice, and it is one long per doc.
-    own_sigs = signatures is None
-    sigs = (
-        signatures
-        if signatures is not None
-        else simhash_signatures(df, id_col, text_col).persist()
-    )
+    sigs = signatures if signatures is not None else pin(simhash_signatures(df, id_col, text_col))
     banded = sigs.select(
         F.col(id_col),
         F.col("simhash"),
@@ -106,7 +101,7 @@ def simhash_near_dup_pairs(
     ).select(id_col, "simhash", "cb.chunk", "cb.chunk_val")
 
     a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.chunk") == F.col("b.chunk"))
@@ -124,8 +119,3 @@ def simhash_near_dup_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    if own_sigs:
-        from ..utils.caching import materialize_and_release
-
-        return materialize_and_release(pairs, sigs)
-    return pairs

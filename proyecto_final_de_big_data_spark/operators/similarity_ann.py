@@ -24,8 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..utils.caching import materialize_and_release
-from .similarity import as_double_array, cosine
+from ..utils.caching import pin
+from .similarity import as_double_array
 from .vecmath import cosine_batch, hyperplane_buckets
 
 
@@ -96,16 +96,15 @@ def embedding_near_dup_pairs(
     ulp-level summation-order differences vs the sequential fold are
     immaterial (see ``vecmath.cosine_batch``).
 
-    The verified pair set (small relative to the corpus) is materialized
-    eagerly so the persisted banded frame can be released before
-    returning instead of leaking across the session.
+    The banded frame is pinned and the pairs returned lazily; the
+    caller's ``scope()`` releases the pin (utils/caching.py).
     """
     c = corpus.select(F.col(id_col), as_double_array(vec_col).alias("__v"))
-    # Persisted: the bucket self-join references the banded frame twice —
+    # Pinned: the bucket self-join references the banded frame twice —
     # without it the Arrow projection pass runs once per side.
-    banded = _with_table_buckets(c, "__v", dim, n_planes, n_tables).persist()
+    banded = pin(_with_table_buckets(c, "__v", dim, n_planes, n_tables))
     a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.table") == F.col("b.table"))
@@ -123,41 +122,3 @@ def embedding_near_dup_pairs(
         .filter(F.col("cosine_sim") >= threshold)
         .select("id_a", "id_b", "cosine_sim")
     )
-    return materialize_and_release(pairs, banded)
-
-
-def ann_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_planes: int = 10,
-    n_tables: int = 4,
-) -> DataFrame:
-    """LSH-bucketed approximate top-k: only score pairs sharing a bucket
-    in at least one table. Output (query_id, neighbor_id, rank, cosine_sim).
-
-    Kept as the near-dup-regime top-k; for general top-k use
-    ``similarity_ivf.ivf_cosine_topk`` (hyperplane buckets only collide
-    reliably at very high cosine — measured recall 0.10 on the isotropic
-    fixture vs 1.0 for planted near-dups).
-    """
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double_array(vec_col).alias("__cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("__qv"))
-
-    c_b = _with_table_buckets(c, "__cv", dim, n_planes, n_tables)
-    q_b = _with_table_buckets(q, "__qv", dim, n_planes, n_tables)
-
-    cand = (
-        c_b.join(F.broadcast(q_b), ["table", "bucket"], "inner")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "__qv", "__cv")
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cosine_sim", cosine_batch(F.col("__qv"), F.col("__cv")))
-    )
-    from .rollup import argmax_per_group
-
-    top = argmax_per_group(cand, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], n=k)
-    return top.select("query_id", "neighbor_id", "rank", "cosine_sim")

@@ -64,6 +64,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
 from .mixing import _md5_fold
 from .winnow import winnowing_fingerprints
 
@@ -88,14 +89,13 @@ def gram_position_index(
     # pair re-evaluates the projection per element.
     from .winnow import spread_for_fanout
 
-    base = (
+    base = pin(
         spread_for_fanout(
             df.filter(txt.isNotNull() & (F.length(txt) >= gram_len)).select(
                 F.col(id_col).alias("id"), txt.alias("__t")
             ),
             "id",
         )
-        .localCheckpoint(eager=False)
     )
     t = F.col("__t")
     positions = F.sequence(F.lit(1), F.length(t) - gram_len + 1)
@@ -131,9 +131,7 @@ def _winnow_candidates(
     pair form is pinned in tests/test_spandedup.py; per-pair detail
     remains available via shared_fingerprint_pairs for callers that
     need the pairs themselves."""
-    fps = winnowing_fingerprints(
-        df, id_col, text_col, k=k, w=w
-    ).localCheckpoint(eager=False)
+    fps = pin(winnowing_fingerprints(df, id_col, text_col, k=k, w=w))
     # Shape note (guide §2.5 — hot keys): the min/max runs as a groupBy
     # + LEFT SEMI join back, NOT a fingerprint-partitioned window. A
     # boilerplate fingerprint shared corpus-wide is a hot key; partial
@@ -182,7 +180,10 @@ def duplicate_spans(
     scoped = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
     if prefilter:
         cands = _winnow_candidates(df, id_col, text_col, k=k, w=w)
-        scoped = scoped.join(cands, "id", "left_semi")
+        # Pinned: gram_position_index's fan-out sizing reads the input's
+        # partition count, which runs the semi-join's stages once and
+        # its pin a second time when the input is not itself pinned.
+        scoped = pin(scoped.join(cands, "id", "left_semi"))
     gidx = gram_position_index(scoped, "id", "__t", min_span)
     # Keeper resolution fused into ONE pass over the gram index (r11
     # optimization; guide §2.4 — two operations keyed the same way

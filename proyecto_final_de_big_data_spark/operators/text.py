@@ -8,7 +8,7 @@ projections over the parquet scan.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -40,21 +40,6 @@ def punct_ratio(col: str | Column) -> Column:
 def digit_ratio(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.length(F.regexp_replace(c, "[^0-9]", "")) / F.length(c)
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document stats: char/token counts, mean token length, ratios."""
-    n_tok = token_count(text_col)
-    return (
-        df.withColumn("n_chars_calc", F.length(text_col))
-        .withColumn("n_tokens", n_tok)
-        .withColumn(
-            "avg_token_len",
-            F.when(n_tok > 0, F.length(F.regexp_replace(F.col(text_col), " ", "")) / n_tok),
-        )
-        .withColumn("punct_ratio", punct_ratio(text_col))
-        .withColumn("digit_ratio", digit_ratio(text_col))
-    )
 
 
 def quality_score(text_col: str | Column) -> Column:

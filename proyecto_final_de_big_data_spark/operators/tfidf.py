@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
 from .quality import words
 
 
@@ -25,7 +26,6 @@ def top_terms_by_tfidf(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    materialize: bool = True,
     n_docs: int | None = None,
 ) -> DataFrame:
     """Top-``k`` terms per ``group_col`` by smoothed tf-idf.
@@ -35,17 +35,13 @@ def top_terms_by_tfidf(
     (score DESC, term ASC) tie-break is reproducible bit-for-bit by a
     SQL oracle computing the same doubles.
 
-    The exploded token frame feeds BOTH aggregations; un-persisted,
-    each reference re-scans and re-explodes the whole corpus
-    (cache-lifetime contract, utils/caching.py). Default: persist the
-    tokens, eagerly materialize the — tiny — top-k result, release the
-    cache. ``materialize=False`` returns the fully lazy plan instead
-    (plan inspection / further composition; the caller owns any
-    caching, and the double token explode is back).
+    The exploded token frame feeds BOTH aggregations, so it is pinned
+    (lazily: the first action computes it); unpinned, each reference
+    re-scans and re-explodes the whole corpus. The result is returned
+    lazily and the caller's ``scope()`` releases the pin
+    (utils/caching.py).
     """
-    tok = df.select(id_col, group_col, F.explode(words(text_col)).alias("word"))
-    if materialize:
-        tok = tok.persist()
+    tok = pin(df.select(id_col, group_col, F.explode(words(text_col)).alias("word")))
     tf = tok.groupBy(group_col, "word").agg(F.count(F.lit(1)).alias("tf_count"))
     dfreq = tok.groupBy("word").agg(F.count_distinct(F.col(id_col)).alias("df"))
     if n_docs is not None:
@@ -70,13 +66,8 @@ def top_terms_by_tfidf(
         )
     )
     w = Window.partitionBy(group_col).orderBy(F.desc("tfidf"), F.asc("word"))
-    out = (
+    return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select(group_col, "word", "tf_count", "tfidf", "rn")
     )
-    if not materialize:
-        return out
-    from ..utils.caching import materialize_and_release
-
-    return materialize_and_release(out, tok)

@@ -13,13 +13,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
+
 
 def gap_filled_counts(
     df: DataFrame,
     ts_col: str = "ts",
     grain: str = "hour",
     value_col: str | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Dense per-``grain`` counts (and optional value sums, rounded to 6
     decimals) with empty buckets present as zeros.
@@ -29,21 +30,17 @@ def gap_filled_counts(
 
     The aggregate is referenced twice (bounds + the grid join) and
     Spark does NOT unify the two subplans (their column pruning
-    differs, so no ReusedExchange). Default: persist the
-    bucket-count-sized aggregate so the corpus is genuinely read once,
-    eagerly materialize the (equally small) gap-filled result, release
-    the cache. ``materialize=False`` returns the lazy plan (plan
-    inspection / composition; the caller owns caching).
-    min(date_trunc(ts)) == date_trunc(min(ts)), so deriving bounds
-    from the aggregate leaves the grid identical either way.
+    differs, so no ReusedExchange), so the bucket-count-sized aggregate
+    is pinned and the corpus is read once. The result is returned
+    lazily and the caller's ``scope()`` releases the pin
+    (utils/caching.py). min(date_trunc(ts)) == date_trunc(min(ts)), so
+    deriving bounds from the aggregate leaves the grid identical.
     """
     bucket = F.date_trunc(grain, F.col(ts_col))
     aggs = [F.count(F.lit(1)).alias("n_events")]
     if value_col is not None:
         aggs.append(F.round(F.sum(value_col), 6).alias("sum_value"))
-    counts = df.groupBy(bucket.alias("bucket")).agg(*aggs)
-    if materialize:
-        counts = counts.persist()
+    counts = pin(df.groupBy(bucket.alias("bucket")).agg(*aggs))
     bounds = counts.agg(F.min("bucket").alias("b0"), F.max("bucket").alias("b1"))
     grid = bounds.select(
         F.explode(
@@ -55,11 +52,7 @@ def gap_filled_counts(
     )
     if value_col is not None:
         out = out.withColumn("sum_value", F.coalesce(F.col("sum_value"), F.lit(0.0)))
-    if not materialize:
-        return out
-    from ..utils.caching import materialize_and_release
-
-    return materialize_and_release(out, counts)
+    return out
 
 
 def interpolate_gaps(

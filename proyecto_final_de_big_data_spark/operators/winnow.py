@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.caching import pin
 from .mixing import _md5_fold
 
 
@@ -112,14 +113,13 @@ def winnowing_fingerprints(
     # array would be rebuilt per window (O(m²) md5s) — measured as an
     # 8.8x scaling ratio before the fix. Each stage below is computed
     # exactly once per row; no shuffle is introduced.
-    base = (
+    base = pin(
         spread_for_fanout(
             df.filter(txt.isNotNull() & (F.length(txt) >= k)).select(
                 F.col(id_col).alias("id"), txt.alias("__t")
             ),
             "id",
         )
-        .localCheckpoint(eager=False)
     )
     t = F.col("__t")
     n_grams = F.length(t) - k + 1  # m: number of k-grams
@@ -127,9 +127,7 @@ def winnowing_fingerprints(
         F.sequence(F.lit(1), n_grams),
         lambda p: t.substr(p, F.lit(k)),
     )
-    hashed = base.select(
-        "id", F.transform(grams, _md5_fold).alias("__hashes")
-    ).localCheckpoint(eager=False)
+    hashed = pin(base.select("id", F.transform(grams, _md5_fold).alias("__hashes")))
     hashes = F.col("__hashes")
     m = F.size(hashes)
     mins = F.when(
@@ -164,7 +162,7 @@ def shared_fingerprint_pairs(
     # sides sharing it means the join inserts no exchange of its own,
     # so the pair explosion runs at full width. The pin also stops the
     # fingerprint explode re-running once per join side.
-    fps_p = spread_for_fanout(fps, "fingerprint").localCheckpoint(eager=False)
+    fps_p = pin(spread_for_fanout(fps, "fingerprint"))
     a = fps_p.select(F.col("id").alias("id_a"), "fingerprint")
     b = fps_p.select(F.col("id").alias("id_b"), "fingerprint")
     return (

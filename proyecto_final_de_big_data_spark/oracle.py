@@ -16,6 +16,7 @@ import numpy as _np
 import pandas as pd
 
 from .catalog import TABLES
+from .utils.caching import scope
 
 if TYPE_CHECKING:
     from pyspark.sql import SparkSession
@@ -84,16 +85,18 @@ def check(spark: SparkSession, query: Query, sf_dir: str) -> dict[str, Any]:
     Returns ``{"status": "ok" | "fail" | "rows_only" | "error", "sec": s}``
     plus ``"rows"`` for rows_only and ``"detail"`` for fail and error. A
     query that raises is reported as error (traceback on stderr), not
-    propagated, so a catalog sweep keeps going.
+    propagated, so a catalog sweep keeps going. Build and action run in
+    one ``scope()``, which releases the query's pins.
     """
     t0 = time.perf_counter()
     try:
-        df = query.spark_fn(spark, sf_dir)
-        if query.oracle is None:
-            out: dict[str, Any] = {"status": "rows_only", "rows": df.count()}
-        else:
-            ok, msg = compare(df, run_oracle(query.oracle, sf_dir))
-            out = {"status": "ok"} if ok else {"status": "fail", "detail": msg}
+        with scope():
+            df = query.spark_fn(spark, sf_dir)
+            if query.oracle is None:
+                out: dict[str, Any] = {"status": "rows_only", "rows": df.count()}
+            else:
+                ok, msg = compare(df, run_oracle(query.oracle, sf_dir))
+                out = {"status": "ok"} if ok else {"status": "fail", "detail": msg}
     except Exception as e:  # noqa: BLE001 - a sweep reports and continues
         traceback.print_exc()
         out = {"status": "error", "detail": f"{type(e).__name__}: {str(e)[:200]}"}

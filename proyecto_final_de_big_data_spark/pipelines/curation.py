@@ -17,19 +17,18 @@ scan) run FIRST so the shuffling stages (dedup digest groupBy) see the
 already-shrunk corpus; mixing and split are again pure projections on
 the survivors.
 
-Cache lifetime (utils/caching.py contract): dedup references its input
-twice (digest groupBy + semi-join back) and mixing references ITS
-input twice (rates aggregation + keep filter) — the inputs differ, so
-each multi-reference stage pins its own input. Two consumption paths
-own the release differently:
+Cache lifetime (utils/caching.py): dedup references its input twice
+(digest groupBy + semi-join back) and mixing references ITS input
+twice (rates aggregation + keep filter) — the inputs differ, so each
+multi-reference stage pins its own input. A pin lives until the
+innermost enclosing ``scope()`` exits:
 
-- ``run_curation`` (the production/CLI path) builds lazily, writes the
-  parquet sink — the one real materialization — and unpersists the
-  pinned stages. The corpus is never localCheckpoint'ed.
-- ``curate_documents`` (contract/fixture path, also fine for small
-  corpora) eagerly materializes the result and releases the pins;
-  callers that want full laziness pass ``materialize=False`` and own
-  any caching themselves (no pins are created).
+- ``curate_documents`` returns the curated frame lazily; the caller's
+  scope releases the stage pins after its last action on the frame.
+- ``run_curation`` (the production/CLI path) opens its own scope around
+  the parquet sink write — the one real materialization — so the pins
+  are released before it returns. The curated corpus itself is never
+  pinned.
 
 Every stage is individually oracle-gated by its own registry query
 (pii_redaction_profile, repetition_profile, dedup_exact_*,
@@ -58,6 +57,7 @@ from ..operators.pii import redact_pii
 from ..operators.quality import with_repetition_stats
 from ..operators.split import cluster_safe_split, hash_split
 from ..operators.text import quality_score
+from ..utils.caching import pin, scope
 
 _DEDUP_MODES = ("exact", "incremental", "minhash", "none")
 _MIX_MODES = ("temperature", "epochs")
@@ -136,26 +136,23 @@ class CurationConfig:
     input_spread_partitions: int | None = None
 
 
-def build_curation(
+def curate_documents(
     df: DataFrame,
     cfg: CurationConfig,
     historical: DataFrame | None = None,
-    pin: bool = True,
-) -> tuple[DataFrame, list[DataFrame]]:
-    """Assemble the lazy curated frame. Returns ``(curated, pinned)``
-    where ``pinned`` lists the persisted stage inputs the CALLER must
-    unpersist after materializing (empty when ``pin=False``).
+) -> DataFrame:
+    """Run the configured curation pass; returns the lazy curated frame
+    (with ``split`` column when ``split_fractions`` is set). Its stage
+    pins live until the caller's ``scope()`` exits (utils/caching.py).
 
-    Validation happens before any persist so a bad config cannot leak
-    a pinned frame.
+    Validation happens before any pin so a bad config cannot leak a
+    pinned frame.
 
     Laziness caveat: the MinHash pair stage (``dedup='minhash'`` or
-    ``split_mode='cluster_safe'``) runs Spark jobs at BUILD time — pair
-    verification materializes its (small) pair table eagerly — so those
-    modes execute the upstream stages once during assembly. With
-    ``pin=True`` that work is cached and reused at materialization;
-    with ``pin=False`` the upstream recomputes, so callers composing
-    those modes lazily should own caching themselves.
+    ``split_mode='cluster_safe'``) runs Spark jobs at BUILD time — the
+    connected-components rounds checksum each pinned round — so those
+    modes execute the upstream stages once during assembly; the stage
+    pins keep that work for the final action.
     """
     if cfg.dedup not in _DEDUP_MODES:
         raise ValueError(f"unknown dedup mode {cfg.dedup!r}; use {_DEDUP_MODES}")
@@ -216,17 +213,6 @@ def build_curation(
                 f"integer id column; {cfg.id_col!r} is {id_type!r}"
             )
 
-    pinned: list[DataFrame] = []
-
-    def _pin(frame: DataFrame) -> DataFrame:
-        if not pin:
-            return frame
-        from pyspark import StorageLevel
-
-        p = frame.persist(StorageLevel.MEMORY_AND_DISK)
-        pinned.append(p)
-        return p
-
     out = df
     if cfg.redact_pii or cfg.min_quality is not None or cfg.drop_repetitive or cfg.strip_spans:
         from ..operators.winnow import spread_for_fanout
@@ -251,7 +237,7 @@ def build_curation(
         # stripped text REPLACES text_col so downstream dedup/selection
         # see the cleaned corpus (quote-only differences collapse in
         # the dedup stage that follows).
-        out = _pin(out)
+        out = pin(out)
         out = strip_duplicate_spans(
             out,
             cfg.id_col,
@@ -264,7 +250,7 @@ def build_curation(
             "__span_clean"
         )
     if cfg.dedup != "none" or cap_active or cfg.mix_stratum_col is not None:
-        out = _pin(out)  # the first multi-reference stage reads this 2-3×
+        out = pin(out)  # the first multi-reference stage reads this 2-3×
     if cfg.dedup == "exact":
         out = exact_dedup(out, [cfg.text_col], cfg.id_col)
     elif cfg.dedup == "incremental":
@@ -285,7 +271,7 @@ def build_curation(
             # The cap reads the DEDUP OUTPUT three times (count pass +
             # both split probes); Spark does not unify the duplicate
             # dedup subplans — pin it.
-            out = _pin(out)
+            out = pin(out)
         out = cap_per_group(
             out, cfg.cap_group_cols, cfg.id_col, cfg.cap_max_rows, cfg.cap_score_col
         )
@@ -296,7 +282,7 @@ def build_curation(
         if cfg.dedup != "none" or cap_active:
             # Selection reads its input twice (per-bin threshold
             # aggregation + the keep filter) — pin upstream shuffle work.
-            out = _pin(out)
+            out = pin(out)
         # Derived score/token columns are materialized under reserved
         # names so the selection join sees plain columns, then dropped.
         score_col = cfg.select_score_col or "__select_score"
@@ -319,7 +305,7 @@ def build_curation(
             # Mixing reads ITS input twice; its rates branch prunes
             # columns differently from its keep branch, so the upstream
             # subplans would otherwise run twice — pin it too.
-            out = _pin(out)
+            out = pin(out)
         if cfg.mix_mode == "temperature":
             out = temperature_mix(
                 out, cfg.mix_stratum_col, cfg.id_col, alpha=cfg.mix_alpha
@@ -345,7 +331,7 @@ def build_curation(
             # upsampling (dropDuplicates on the id): every copy of a doc
             # is content-identical, so signing copies would only multiply
             # the Arrow pass and fan the verify joins out k_a*k_b.
-            out = _pin(out)
+            out = pin(out)
             pairs = minhash_dedup_pairs(
                 out.select(cfg.id_col, cfg.text_col).dropDuplicates([cfg.id_col]),
                 cfg.id_col,
@@ -355,32 +341,7 @@ def build_curation(
             out = cluster_safe_split(out, pairs, cfg.id_col, cfg.split_fractions)
         else:
             out = hash_split(out, cfg.id_col, cfg.split_fractions)
-    return out, pinned
-
-
-def curate_documents(
-    df: DataFrame,
-    cfg: CurationConfig,
-    historical: DataFrame | None = None,
-    materialize: bool = True,
-) -> DataFrame:
-    """Run the configured curation pass; returns the curated frame
-    (with ``split`` column when ``split_fractions`` is set).
-
-    Default: eagerly materializes the result (localCheckpoint) and
-    releases the pinned stages — right for contracts/fixtures and
-    small corpora; see caching.py for the executor-local caveat. For a
-    corpus-sized result use :func:`run_curation` (writes the sink, no
-    checkpoint) or ``materialize=False`` (fully lazy, no pins, caller
-    owns caching — multi-reference stages will recompute their
-    inputs).
-    """
-    out, pinned = build_curation(df, cfg, historical, pin=materialize)
-    if not materialize:
-        return out
-    from ..utils.caching import materialize_and_release
-
-    return materialize_and_release(out, *pinned)
+    return out
 
 
 def run_curation(
@@ -390,14 +351,10 @@ def run_curation(
     historical: DataFrame | None = None,
 ) -> None:
     """Production path: build lazily, materialize ONCE by writing the
-    parquet sink, release the pinned stages. The curated corpus never
-    passes through a localCheckpoint."""
-    out, pinned = build_curation(df, cfg, historical, pin=True)
-    try:
-        write_curated_documents(out, output_root)
-    finally:
-        for p in pinned:
-            p.unpersist(blocking=True)
+    parquet sink, release the stage pins. The curated corpus itself is
+    never pinned."""
+    with scope():
+        write_curated_documents(curate_documents(df, cfg, historical), output_root)
 
 
 def write_curated_documents(df: DataFrame, root: str) -> None:

@@ -1,11 +1,11 @@
 """Multi-mart runner — reference entry point 2
 (``scripts/03_spark_eda_agg.py:44-240``) builds 11 marts by re-scanning
 the curated input once PER MART (SURVEY §4 anti-pattern: 11 jobs × full
-rescan, no cache). This runner persists the input once and fans out the
+rescan, no cache). This runner pins the input once and fans out the
 mart catalog; each mart is still its own job (independent sinks) but
-reads the cached partitions.
+reads the pinned partitions.
 
-At 100 TB, persist() of the full input may not fit even MEMORY_AND_DISK
+At 100 TB, pinning the full input may not fit even MEMORY_AND_DISK
 budgets — the fix at scale is multi-aggregate FUSION, where marts
 sharing a grouping key are computed in ONE pass (``fuse_marts``).
 """
@@ -15,7 +15,8 @@ from __future__ import annotations
 from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
+
+from ..utils.caching import pin, scope
 
 MartFn = Callable[[DataFrame], DataFrame]
 
@@ -25,22 +26,19 @@ def run_marts(
     marts: Mapping[str, MartFn],
     sink: Callable[[str, DataFrame], None] | None = None,
 ) -> dict[str, DataFrame]:
-    """Fan out the mart catalog over a single persisted scan.
+    """Fan out the mart catalog over a single pinned scan.
 
-    ``sink(name, df)`` is invoked per mart (e.g. parquet write); when
-    None, the materialized DataFrames are just returned.
+    ``sink(name, df)`` is invoked per mart (e.g. parquet write) inside
+    this function's own ``scope()``, which releases the pin before
+    returning (utils/caching.py). The returned marts are built over
+    ``input_df`` itself, so they stay readable after the release.
     """
-    src = input_df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        out: dict[str, DataFrame] = {}
-        for name, fn in marts.items():
-            df = fn(src)
-            if sink is not None:
-                sink(name, df)
-            out[name] = df
-        return out
-    finally:
-        src.unpersist()
+    if sink is not None:
+        with scope():
+            src = pin(input_df)
+            for name, fn in marts.items():
+                sink(name, fn(src))
+    return {name: fn(input_df) for name, fn in marts.items()}
 
 
 def fuse_marts(

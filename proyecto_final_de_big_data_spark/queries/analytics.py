@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.rollup import argmax_per_group, with_cumulative_share, with_share_of_total
+from ..utils.caching import pin
 from .registry import register
 
 # D1 — re-aggregation across months
@@ -3349,7 +3350,7 @@ def q_modularity_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_partkey") < 500)
     )
     a, b = li.alias("a"), li.alias("b")
-    edges = (
+    edges = pin(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -3360,7 +3361,6 @@ def q_modularity_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.l_partkey").alias("dst"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     labels = label_propagation(edges, iterations=4)
     return modularity(edges, labels)
@@ -4302,7 +4302,7 @@ def q_rater_agreement_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fleiss panel window, and the panel count) — pin it with a lazy
     # localCheckpoint so the events scan + md5 band derivation runs
     # once, not once per consumer (the dsir/winnow barrier discipline).
-    base = (
+    base = pin(
         ev.filter(v.isNotNull() & ~F.isnan(v))
         .select(
             "event_id",
@@ -4314,7 +4314,6 @@ def q_rater_agreement_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(float(1 << 60))
             ).alias("u"),
         )
-        .localCheckpoint(eager=False)
     )
     pairs = base.select(
         F.col("la_n").cast("string").alias("la"),

@@ -22,6 +22,7 @@ from ..catalog import load_table
 from ..io.export import export_table, read_exported
 from ..operators.canonicalize import canonicalize
 from ..operators.features import with_duration_minutes
+from ..utils.caching import pin
 from .registry import register
 
 # One shared small aggregate for the round-trip family: stable, typed
@@ -187,7 +188,7 @@ def q_manifest_ingest_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("size_bytes") > 0).alias("size_positive"),
         ).crossJoin(F.broadcast(total))
         # Eager: the staging dir (manifest included) is removed on return.
-        return result.localCheckpoint(eager=True)
+        return pin(result, eager=True)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -641,7 +642,7 @@ def q_cdc_merge_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("untouched_intact", F.lit(intact))
         )
         # Eager: the base tempdir is removed on return.
-        return result.localCheckpoint(eager=True)
+        return pin(result, eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -690,7 +691,7 @@ def q_media_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("length").alias("n_bytes"),
             F.md5("content").alias("digest"),
         )
-        return result.localCheckpoint(eager=True)
+        return pin(result, eager=True)
     finally:
         shutil.rmtree(drop_dir, ignore_errors=True)
 
@@ -1016,7 +1017,7 @@ def q_schema_evolution_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
-        return out.localCheckpoint(eager=True)
+        return pin(out, eager=True)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 

@@ -14,6 +14,7 @@ from ..operators.multimodal import documents_as_media, featurize_media
 from ..operators.similarity import cosine_topk
 from ..operators.similarity_ivf import ivf_cosine_topk
 from ..operators.text import LANG_MARKERS, fingerprint, lang_guess, quality_score, token_count
+from ..utils.caching import pin
 from .registry import register
 
 # --------------------------------------------------------------------------
@@ -209,10 +210,10 @@ def q_simhash_banding_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.simhash import simhash_near_dup_pairs, simhash_signatures
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    # Persist the (tiny: one long per doc) signature frame: it feeds the
+    # Pin the (tiny: one long per doc) signature frame: it feeds the
     # exact all-pairs side AND the banded side — without it the
     # explode+64-agg signature job runs three times.
-    sigs = simhash_signatures(docs, "doc_id", "text").persist()
+    sigs = pin(simhash_signatures(docs, "doc_id", "text"))
     a, b = sigs.alias("a"), sigs.alias("b")
     exact = (
         a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
@@ -233,17 +234,12 @@ def q_simhash_banding_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.coalesce(F.col("__e"), F.lit(0)) * F.coalesce(F.col("__b"), F.lit(0))).alias("nc"),
     )
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    from ..utils.caching import materialize_and_release
-
-    return materialize_and_release(
-        n_docs.crossJoin(
-            stats.select(
-                ((F.col("ne") == F.col("nc")) & (F.col("nb") == F.col("nc")))
-                .cast("int")
-                .alias("lossless_ok")
-            )
-        ),
-        sigs,
+    return n_docs.crossJoin(
+        stats.select(
+            ((F.col("ne") == F.col("nc")) & (F.col("nb") == F.col("nc")))
+            .cast("int")
+            .alias("lossless_ok")
+        )
     )
 
 
@@ -1570,7 +1566,6 @@ def q_semantic_dedup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import cluster_dedup_keep
     from ..operators.semdedup import centroids_by_ids, semantic_dedup_pairs
     from ..operators.similarity import as_double_array
-    from ..utils.caching import materialize_and_release
 
     base = (
         load_table(spark, sf_dir, "embeddings")
@@ -1587,18 +1582,16 @@ def q_semantic_dedup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prunes to 8 ids at the scan and materializes the pin), so
     # unpinned the embeddings scan + array conversion + planted-twin
     # union re-ran once per consumer (r12 event-log audit, guide §5).
-    corpus = base.unionByName(planted).localCheckpoint(eager=False)
+    corpus = pin(base.unionByName(planted))
     centroids = centroids_by_ids(corpus, list(range(8)))
-    # Persist the cell assignment (bounded: 320 rows here) — it feeds
+    # Pin the cell assignment (bounded: 320 rows here) — it feeds
     # BOTH sides of the within-cell self-join, so without it the Arrow
-    # scoring pass and the corpus scan run twice. Likewise persist the
+    # scoring pass and the corpus scan run twice. Likewise pin the
     # pair frame: it feeds two aggregates and the component-keep branch.
     from ..operators.similarity_ivf import ivf_assign
 
-    assigned = ivf_assign(corpus, centroids).persist()
-    pairs = semantic_dedup_pairs(
-        corpus, centroids, threshold=0.95, assigned=assigned
-    ).persist()
+    assigned = pin(ivf_assign(corpus, centroids))
+    pairs = pin(semantic_dedup_pairs(corpus, centroids, threshold=0.95, assigned=assigned))
     kept = cluster_dedup_keep(corpus, pairs.select("id_a", "id_b"), "vec_id")
     stats = pairs.agg(
         F.count(F.lit(1)).alias("n_pairs"),
@@ -1606,13 +1599,12 @@ def q_semantic_dedup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_twin_pairs"
         ),
     )
-    profile = (
+    return (
         corpus.agg(F.count(F.lit(1)).alias("n_vecs"))
         .crossJoin(stats)
         .crossJoin(kept.agg(F.count(F.lit(1)).alias("n_kept")))
         .select("n_vecs", "n_pairs", "n_twin_pairs", "n_kept")
     )
-    return materialize_and_release(profile, pairs, assigned)
 
 
 # --------------------------------------------------------------------------
@@ -2778,14 +2770,13 @@ def q_duplicate_span_removal_contract(
         )
         .otherwise(F.col("a.text"))
         .alias("text"),
-    ).localCheckpoint(eager=False)
+    )
+    corpus = pin(corpus)
     # corpus feeds duplicate_spans AND strip_spans; spans feeds the
     # profile agg AND strip_spans — unpinned, the whole planted-quote
     # construction + candidate/gram/window subtree ran TWICE (r12 sf1
     # spot-probe; guide §5 recompute-less).
-    spans = duplicate_spans(
-        corpus, "doc_id", "text", min_span=100, prefilter=True
-    ).localCheckpoint(eager=False)
+    spans = pin(duplicate_spans(corpus, "doc_id", "text", min_span=100, prefilter=True))
     prof = spans.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum("span_len").alias("removed_chars"),

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..ml.pipeline import TrainConfig, build_pipeline, metrics_frame, train_and_evaluate
+from ..utils.caching import pin, scope
 from .registry import register
 
 
@@ -153,12 +154,10 @@ def q_ml_train_linear_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     test = li.filter(F.col("l_orderkey") % 5 == 0)
     model = pipeline.fit(train)
     lr_model = model.stages[-1]
-    predictions = model.transform(test).persist()
-    try:
+    with scope():
+        predictions = pin(model.transform(test))
         metrics = evaluate(predictions, "l_extendedprice")
         rows_test = predictions.count()
-    finally:
-        predictions.unpersist()
     rows_train = train.count()
     coef = list(lr_model.coefficients)
     return spark.createDataFrame(
@@ -220,10 +219,10 @@ def q_ml_tree_ensemble_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_tax",
         "l_orderkey",
     )
-    train = li.filter(F.col("l_orderkey") % 5 == 1).drop("l_orderkey").persist()
     test = li.filter(F.col("l_orderkey") % 5 == 0).drop("l_orderkey")
     frames = []
-    try:
+    with scope():
+        train = pin(li.filter(F.col("l_orderkey") % 5 == 1).drop("l_orderkey"))
         for algo, r2_band in (("gbt", 0.9), ("rf", 0.6)):
             cfg = TrainConfig(
                 label="y",
@@ -235,20 +234,12 @@ def q_ml_tree_ensemble_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             pipeline, _, _ = build_pipeline(train, cfg)
             model = pipeline.fit(train)
-            preds = model.transform(test).persist()
-            try:
-                metrics = evaluate(preds, "y")
-                checked = preds.agg(
-                    F.count(F.lit(1)).alias("n_test"),
-                    F.sum(
-                        (
-                            F.col("prediction").isNull()
-                            | F.isnan("prediction")
-                        ).cast("int")
-                    ).alias("n_bad"),
-                ).collect()[0]
-            finally:
-                preds.unpersist()
+            preds = pin(model.transform(test))
+            metrics = evaluate(preds, "y")
+            checked = preds.agg(
+                F.count(F.lit(1)).alias("n_test"),
+                F.sum((F.col("prediction").isNull() | F.isnan("prediction")).cast("int")).alias("n_bad"),
+            ).collect()[0]
             imps = model.stages[-1].featureImportances.toArray().tolist()
             frames.append(
                 (
@@ -261,8 +252,6 @@ def q_ml_tree_ensemble_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
                     int(metrics["r2"] >= r2_band),
                 )
             )
-    finally:
-        train.unpersist()
     return spark.createDataFrame(
         frames,
         "algorithm string, n_test long, n_importances int, "

@@ -18,6 +18,7 @@ from ..catalog import load_table
 from ..operators.pii import with_pii_stats
 from ..operators.quality import with_repetition_stats
 from ..operators.tfidf import top_terms_by_tfidf
+from ..utils.caching import pin
 from .registry import register
 
 
@@ -390,7 +391,7 @@ def q_stream_pii_curation_round_trip(spark: SparkSession, sf_dir: str) -> DataFr
             F.sum(F.length("t") - F.length("ct")).alias("chars_removed"),
         )
         # Eager: the sink/checkpoint dirs are removed on return.
-        return result.localCheckpoint(eager=True)
+        return pin(result, eager=True)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..utils.caching import pin
 from .registry import register
 
 
@@ -79,7 +80,7 @@ def _drain_stream(
                 spark.conf.set(k, v)
     q.stop()
     try:
-        return spark.table(name).localCheckpoint(eager=True)
+        return pin(spark.table(name), eager=True)
     finally:
         spark.catalog.dropTempView(name)
 
@@ -340,7 +341,7 @@ def q_stream_file_sink_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         # Eager: the sink/checkpoint dirs are removed on return, so the
         # tiny profile must be computed (and detached from them) now.
-        return result.localCheckpoint(eager=True)
+        return pin(result, eager=True)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
@@ -576,10 +577,9 @@ def q_stream_cdc_apply_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame
             .withColumn("op", F.lit("upsert"))
         )
         # Two change files -> two micro-batches (maxFilesPerTrigger=1).
-        batch_a = deletes.unionByName(updates).coalesce(1).localCheckpoint(eager=True)
-        batch_b = inserts.coalesce(1).localCheckpoint(eager=True)
-        batch_a.write.mode("overwrite").parquet(os.path.join(stage, "batch_a"))
-        batch_b.write.mode("overwrite").parquet(os.path.join(stage, "batch_b"))
+        changes = deletes.unionByName(updates).coalesce(1)
+        changes.write.mode("overwrite").parquet(os.path.join(stage, "batch_a"))
+        inserts.coalesce(1).write.mode("overwrite").parquet(os.path.join(stage, "batch_b"))
 
         applied: list[int] = []
 
@@ -619,7 +619,7 @@ def q_stream_cdc_apply_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .withColumn("n_applied_batches", F.lit(len(applied)).cast("long"))
         )
-        return result.localCheckpoint(eager=True)
+        return pin(result, eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
         shutil.rmtree(stage, ignore_errors=True)

@@ -1,47 +1,83 @@
-"""Cache-lifetime discipline for multi-reference subplans.
+"""Cache lifetime: one rule, two names.
 
-Operators that reference an expensive subframe more than once (LSH
-self-joins, pair-table fan-outs) persist it; left pinned, those frames
-accumulate across a long-lived session (the 68-query bench leaked three
-of them per round-2 profiling). The contract here: an operator that
-persists an intermediate must either hand the caller the persisted frame
-(caller owns the lifetime) or materialize its — small — final output and
-release the intermediates before returning.
+``pin(df, eager=False)`` is the one way to keep a frame alive: it is
+``df.localCheckpoint(eager=eager)``, the barrier ``operators/graph.py``
+measured as faster than ``persist()``. Every consumer of the returned
+frame reads the pinned partitions instead of re-running the subplan;
+a lazy pin is computed by the first action that reads it, an eager one
+before ``pin`` returns.
 
-``materialize_and_release`` implements the second path: an eager
-``localCheckpoint`` computes the result once and cuts its lineage, so
-the persisted parents are genuinely unreferenced and can be unpersisted
-immediately instead of at session end. The checkpointed partitions live
-on executors (still distributed — nothing is collected to the driver)
-and are freed when the result frame is garbage collected.
+``scope()`` owns the lifetime. **A pin lives until the innermost
+enclosing** ``scope()`` **exits**; on exit, normal or by error, the scope
+unpersists (blocking) every pin recorded in it that is still
+registered. So the caller that runs the last action on a frame owns
+its pins:
 
-Use only for results that are small relative to their inputs (verified
-near-dup pairs, recall scalars) — exactly the frames these operators
-return.
+- A function that runs its own actions and returns nothing that
+  depends on its pins opens its own scope (``train_and_evaluate``,
+  ``run_curation``, ``run_marts``, ``merge_changes``, the ML contract
+  queries).
+- A function that returns a frame pins lazily and returns; its
+  caller's scope releases the pins. ``oracle.check`` and ``bench.py``
+  open one scope around each query's build plus action.
+- An eager pin is only for a result whose inputs the function deletes
+  before returning (temp dirs, temp views).
+
+A released local checkpoint cannot be recomputed, so a scope must not
+close before the last action on a frame that depends on its pins.
+
+The scope records the checkpointed RDD's id, not the frame, so pins
+superseded inside an iterative loop stay collectable: Spark's
+ContextCleaner unpersists them once the frame is garbage collected,
+and the scope skips ids that are already gone. A pin made outside any
+scope is left to the ContextCleaner alone.
+
+Fault-tolerance caveat: ``localCheckpoint`` blocks are executor-local
+and NOT fault-tolerant. With the lineage truncated, losing an executor
+makes a pinned frame unrecoverable and fails the job. That is fine in
+local mode and for ephemeral query results; on a real cluster prefer a
+reliable ``checkpoint()`` to a durable ``checkpointDir`` (or write the
+result to a table) when the frame must survive executor loss.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
+# The open scopes, innermost last; each holds the RDD ids pinned in it.
+_scopes: ContextVar[tuple[list[int], ...]] = ContextVar("caching_scopes", default=())
 
-def materialize_and_release(result: DataFrame, *intermediates: DataFrame) -> DataFrame:
-    """Eagerly compute ``result`` (localCheckpoint: executes the plan,
-    cuts lineage), then unpersist every frame in ``intermediates``.
-    Intermediates are released even when the computation fails.
 
-    Fault-tolerance caveat: ``localCheckpoint`` blocks are executor-local
-    and NOT fault-tolerant — with the lineage truncated, losing an
-    executor makes the result unrecoverable and fails the job. Fine in
-    local mode and for ephemeral query results; on a real cluster prefer
-    reliable ``checkpoint()`` to a durable ``checkpointDir`` (or write
-    the — small — result to a table) when the frame must survive
-    executor loss."""
+def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager=eager)``, released when the innermost
+    enclosing :func:`scope` exits."""
+    out = df.localCheckpoint(eager=eager)
+    open_scopes = _scopes.get()
+    if open_scopes:
+        open_scopes[-1].append(out._jdf.logicalPlan().rdd().id())
+    return out
+
+
+@contextmanager
+def scope() -> Iterator[None]:
+    """Release, blocking, every pin made inside the block that is still
+    registered, on exit and on error. Scopes nest: a pin belongs to
+    the innermost one."""
+    ids: list[int] = []
+    token = _scopes.set(_scopes.get() + (ids,))
     try:
-        return result.localCheckpoint(eager=True)
+        yield
     finally:
-        for df in intermediates:
-            # blocking: the release is observable immediately (tests and
-            # long-lived sessions can rely on the cache being gone, not
-            # merely scheduled for removal).
-            df.unpersist(blocking=True)
+        _scopes.reset(token)
+        sc = SparkContext._active_spark_context
+        if sc is not None and ids:
+            registered = sc._jsc.getPersistentRDDs()
+            for rdd_id in ids:
+                rdd = registered.get(rdd_id)
+                if rdd is not None:
+                    rdd.unpersist(True)

@@ -112,11 +112,9 @@ def _n_persisted(spark) -> int:
 
 
 def test_bad_dedup_mode_raises_before_any_persist(spark):
-    from proyecto_final_de_big_data_spark.pipelines.curation import build_curation
-
     before = _n_persisted(spark)
     with pytest.raises(ValueError, match="unknown dedup mode"):
-        build_curation(_docs(spark), CurationConfig(dedup="simhashish"))
+        curate_documents(_docs(spark), CurationConfig(dedup="simhashish"))
     assert _n_persisted(spark) == before  # validation precedes the pin
 
 
@@ -140,14 +138,15 @@ def test_run_curation_writes_and_releases_pins(spark, tmp_path):
 def test_curate_documents_releases_pins(spark):
     import gc
 
+    from proyecto_final_de_big_data_spark.utils.caching import scope
+
     gc.collect()
     before = _persisted_ids(spark)
-    out = curate_documents(_docs(spark), CurationConfig(mix_stratum_col="lang"))
-    # Stage pins are released; the ONLY surviving new entry is the
-    # eagerly checkpointed result itself (blocks freed when `out` is
-    # GC'd).
-    assert len(_persisted_ids(spark) - before) <= 1
-    assert out.count() > 0
+    with scope():
+        out = curate_documents(_docs(spark), CurationConfig(mix_stratum_col="lang"))
+        assert out.count() > 0
+    # The caller's scope releases every stage pin the lazy result read.
+    assert _persisted_ids(spark) - before == set()
 
 
 def test_parse_split_errors():

@@ -11,6 +11,8 @@ import string
 
 import duckdb
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from proyecto_final_de_big_data_spark.operators.fuzzyjoin import (
@@ -99,3 +101,26 @@ def test_threshold_validation(spark):
         jaro_winkler_self_join(df, "s", [F.col("s")], threshold=0.0)
     with pytest.raises(ValueError, match="blocking"):
         multipass_candidates(df, "s", [])
+
+
+# Property check: bounds, symmetry and identity over arbitrary strings.
+_name = st.text(
+    alphabet=st.characters(min_codepoint=32, max_codepoint=0x2FF),
+    min_size=0,
+    max_size=24,
+)
+
+
+@given(a=_name, b=_name)
+@settings(max_examples=60, deadline=None)
+def test_jaro_winkler_bounds_symmetry_identity(a, b):
+    s = jaro_winkler_py(a, b)
+    assert 0.0 <= s <= 1.0
+    # symmetric: matching is defined over the pooled window both ways
+    assert s == pytest.approx(jaro_winkler_py(b, a), abs=1e-12)
+    # identity: equal non-empty strings score exactly 1
+    if a and a == b:
+        assert s == 1.0
+    # empty-side convention (DuckDB/RapidFuzz): 0.0
+    if not a or not b:
+        assert s == 0.0

@@ -173,22 +173,7 @@ def test_temperature_mix_rates_broadcast(spark, sf_dir):
 
 
 def test_tfidf_aggs_are_partial_plus_final(spark, sf_dir):
-    # materialize=False: the registered query eagerly checkpoints (its
-    # result plan is a truncated RDD scan), so the shape is asserted on
-    # the lazy variant — same logical plan.
-    import contextlib
-    import io
-
-    from proyecto_final_de_big_data_spark.catalog import load_table
-    from proyecto_final_de_big_data_spark.operators.tfidf import top_terms_by_tfidf
-
-    df = top_terms_by_tfidf(
-        load_table(spark, sf_dir, "documents"), "lang", materialize=False
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = _plan(spark, sf_dir, "tfidf_top_terms")
     assert plan.count("HashAggregate") >= 4  # tf and df aggs, each 2-phase
     assert "CartesianProduct" not in plan
 

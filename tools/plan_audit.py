@@ -147,57 +147,8 @@ def main() -> None:
         "affecting changes.",
         "",
     ]
-    # Queries whose registered form eagerly materializes (localCheckpoint
-    # truncates the plan to an RDD scan) — audit the lazy operator
-    # variant instead; the logical plan is identical.
-    def _lazy_tfidf(s, d):
-        from proyecto_final_de_big_data_spark.catalog import load_table
-        from proyecto_final_de_big_data_spark.operators.tfidf import top_terms_by_tfidf
-
-        return top_terms_by_tfidf(load_table(s, d, "documents"), "lang", materialize=False)
-
-    def _lazy_gapfill(s, d):
-        from proyecto_final_de_big_data_spark.catalog import load_table
-        from proyecto_final_de_big_data_spark.operators.timegrid import gap_filled_counts
-
-        return gap_filled_counts(
-            load_table(s, d, "events"), ts_col="ts", grain="hour",
-            value_col="value", materialize=False,
-        )
-
-    def _lazy_semdedup(s, d):
-        from proyecto_final_de_big_data_spark.catalog import load_table
-        from proyecto_final_de_big_data_spark.operators.semdedup import (
-            centroids_by_ids,
-            semantic_dedup_pairs,
-        )
-
-        emb = load_table(s, d, "embeddings")
-        cents = centroids_by_ids(emb, list(range(8)))
-        return semantic_dedup_pairs(emb, cents, threshold=0.95)
-
-    def _lazy_lm(s, d):
-        from proyecto_final_de_big_data_spark.catalog import load_table
-        from proyecto_final_de_big_data_spark.operators.lm_score import (
-            score_documents,
-            unigram_counts,
-            unigram_vocab,
-        )
-
-        docs = load_table(s, d, "documents")
-        vocab = unigram_vocab(unigram_counts(docs), 20)
-        return score_documents(docs, vocab, "doc_id", "text")
-
-    lazy_builders = {
-        "tfidf_top_terms": _lazy_tfidf,
-        "hourly_counts_gapfilled": _lazy_gapfill,
-        "semantic_dedup_profile": _lazy_semdedup,
-        "lm_quality_by_lang": _lazy_lm,
-    }
-
     for name, why in HEADLINERS.items():
-        build = lazy_builders.get(name, QUERIES[name].spark_fn)
-        df = build(spark, sf_dir)
+        df = QUERIES[name].spark_fn(spark, sf_dir)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain(mode="formatted")
