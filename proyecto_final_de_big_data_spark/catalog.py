@@ -20,6 +20,15 @@ have no cheap stat and infer on every read, as do relative paths and
 paths that cannot be stat'ed. An in-place rewrite that keeps a file's
 inode, size and mtime (within the filesystem's timestamp granularity)
 is not seen.
+
+The catalog is also the one place that sets the read settings that
+must outlive the call (``set_read_settings``): every table read pins
+the session timezone to UTC, and an ``events`` read turns on
+``nanosAsLong``. They are runtime SQL settings, set here rather than
+in a session factory, so a vanilla session (an external verification
+harness) reads the lake the same way; ``streaming.windows.
+read_events_stream`` calls the same function. Temporary settings go
+through ``utils.settings.overridden`` instead.
 """
 
 from __future__ import annotations
@@ -110,21 +119,26 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def set_read_settings(spark: SparkSession, name: str) -> None:
+    """Set the session settings a read of table ``name`` needs (see the
+    module docstring). They stay set: the frame a read returns is lazy,
+    and its plan reads them when it runs."""
+    # hour()/dayofweek()/epoch math over timestamps depend on the session
+    # timezone; the oracle (DuckDB over naive timestamps) is
+    # timezone-free, so every read pins UTC.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if name == "events":
+        # events.parquet may carry TIMESTAMP(NANOS) or TIMESTAMP(MICROS)
+        # depending on fixture vintage; a vanilla SparkSession rejects
+        # NANOS with PARQUET_TYPE_ILLEGAL unless nanosAsLong is on
+        # (harmless for MICROS).
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    if name == "events":
-        # events.parquet may carry TIMESTAMP(NANOS) or TIMESTAMP(MICROS)
-        # depending on fixture vintage; a vanilla SparkSession (e.g. an
-        # external verification harness) rejects NANOS with
-        # PARQUET_TYPE_ILLEGAL unless nanosAsLong is on (harmless for
-        # MICROS). It is a runtime-settable SQL conf, so set it here
-        # rather than relying on the session factory having been used.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # hour()/dayofweek() over ts are session-timezone-dependent; the
-        # oracle (DuckDB over naive timestamps) is timezone-free. Pin UTC
-        # at runtime so results don't depend on the host machine's TZ.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    set_read_settings(spark, name)
     df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) read as long (nanosAsLong — MICROS fixtures

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..utils.caching import pin
+from .winnow import spread_for_fanout
 
 _MASK64 = (1 << 64) - 1
 
@@ -53,39 +54,6 @@ def _hash64(values) -> np.ndarray:
         [int.from_bytes(b2b(v.encode("utf-8"), digest_size=8).digest(), "big") for v in values],
         dtype=np.uint64,
     )
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session's default parallelism so a
-    small local input (e.g. one parquet file) doesn't run a whole
-    per-partition Arrow pass on one core.
-
-    Gated on ``spark.graft.spreadSmallInputs``; the default is
-    master-aware so the scale-safe side wins when nobody sets it: on a
-    ``local[*]`` master it defaults ON (dev inputs genuinely arrive in
-    one or two splits and need the spread), on any cluster master it
-    defaults OFF (inputs arrive in many splits already; an unconditional
-    ``repartition`` would inject a full corpus shuffle into signature
-    stages that are otherwise map-only, and could even repartition DOWN
-    below the input's split count). Setting the conf explicitly
-    overrides the default either way. No ``.rdd`` partition-count probe
-    in any path — that would force a plan conversion per call.
-    """
-    spark = df.sparkSession
-    if not _should_spread(
-        spark.conf.get("spark.master", ""),
-        spark.conf.get("spark.graft.spreadSmallInputs", None),
-    ):
-        return df
-    return df.repartition(spark.sparkContext.defaultParallelism)
-
-
-def _should_spread(master: str, conf_value: str | None) -> bool:
-    """Master-aware default for the small-input spread (pure, unit-tested):
-    explicit conf wins; otherwise spread only under a local master."""
-    if conf_value is not None and str(conf_value).strip() != "":
-        return str(conf_value).lower() == "true"
-    return master.startswith("local")
 
 
 def _splitmix64(base: np.ndarray, num_streams: int) -> np.ndarray:
@@ -254,7 +222,7 @@ def shingle_hash_arrays(
             ]
             yield pd.DataFrame({id_col: pdf[id_col].values, "__shash": arrs})
 
-    return _spread(df.select(id_col, text_col)).mapInPandas(
+    return spread_for_fanout(df.select(id_col, text_col)).mapInPandas(
         do, schema=f"{id_col} long, __shash array<long>"
     )
 
@@ -273,7 +241,11 @@ def minhash_signatures(
     mix matrix → column minima in numpy). The previous formulation
     (explode shingles + num_hashes MIN aggregates) shuffled every
     (doc, shingle-hash) row; at corpus scale the signature stage is now
-    a map-only pass and only the band bucket-join shuffles.
+    a map-only pass and only the band bucket-join shuffles. The input
+    goes through keyless ``winnow.spread_for_fanout``: an input already
+    as wide as the cores (read from its plan) is passed as is, a
+    narrower or adaptive one is round-robin spread to at least the
+    cores first.
     """
 
     def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -285,7 +257,7 @@ def minhash_signatures(
                 sigs.append(mins.view(np.int64).tolist())
             yield pd.DataFrame({id_col: pdf[id_col].values, "signature": sigs})
 
-    return _spread(df.select(id_col, text_col)).mapInPandas(
+    return spread_for_fanout(df.select(id_col, text_col)).mapInPandas(
         do, schema=f"{id_col} long, signature array<long>"
     )
 

@@ -140,19 +140,3 @@ def histogram_int(
             F.max(v).alias("max_val"),
         )
     )
-
-
-def histogram_int_sql(
-    table: str, col: str, n_bins: int, lo: int, hi: int
-) -> str:
-    """DuckDB twin of :func:`histogram_int` — identical integer
-    floor-division binning."""
-    span = hi - lo + 1
-    b = f"((({col} - {lo}) * {n_bins}) // {span})"
-    return f"""
-    SELECT {b} AS bin, count(*) AS n_rows,
-           min({col}) AS min_val, max({col}) AS max_val
-    FROM {table}
-    WHERE {col} BETWEEN {lo} AND {hi}
-    GROUP BY 1
-    """

@@ -46,18 +46,6 @@ def _warn_if_unaggregated(df: DataFrame, op: str) -> None:
         )
 
 
-def weighted_mean(df: DataFrame, keys: Sequence[str], mean_col: str, weight_col: str, out: str) -> DataFrame:
-    """Count-weighted mean of per-group means: Σ(mean·w)/Σ(w) per key.
-
-    Reference D2 (``dashboards/streamlit_app.py:218-229,444-467``).
-    Exactly recovers the direct mean when weights are the group counts.
-    """
-    return df.groupBy(*keys).agg(
-        (F.sum(F.col(mean_col) * F.col(weight_col)) / F.sum(weight_col)).alias(out),
-        F.sum(weight_col).alias(f"{weight_col}_total"),
-    )
-
-
 def with_share_of_total(df: DataFrame, value_col: str, out: str = "share") -> DataFrame:
     """value / grand-total(value) per row (reference D8 share-of-total).
 

@@ -15,8 +15,9 @@ embeddings nearly coincide. The recipe:
    makes the quadratic pairwise step tractable — cost is
    Σ|cell|² instead of |corpus|²);
 3. keep pairs with cosine ≥ ``threshold``, contract them to connected
-   components (``operators/graph.py``), and keep one canonical document
-   per component (minimum id).
+   components and keep one canonical document per component (minimum
+   id) with ``graph.cluster_dedup_keep``; the registered
+   ``semantic_dedup_profile`` query composes these steps.
 
 Scale shape (100 TB corpus): the centroid model is tiny and lives in
 the UDF closure; cell assignment is a map-only projection; the one
@@ -38,8 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..utils.caching import pin
-from .graph import cluster_dedup_keep
 from .similarity import as_double_array
 from .similarity_ivf import ivf_assign
 from .vecmath import cosine_batch
@@ -119,26 +118,3 @@ def semantic_dedup_pairs(
         .filter(F.col("cosine_sim") >= threshold)
         .select("id_a", "id_b", "cell", "cosine_sim")
     )
-
-
-def semantic_dedup_keep(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Rows of ``corpus`` surviving semantic dedup: each connected
-    component of the within-cell near-dup graph keeps its minimum-id
-    member (``graph.cluster_dedup_keep`` — so chains A~B, B~C collapse
-    to A even when A and C were never directly paired).
-
-    Cache lifetime: the cell assignment feeds BOTH sides of the
-    within-cell self-join, so it is pinned (one Arrow scoring pass
-    instead of two). The returned keep-frame reads the pinned component
-    edges of ``cluster_dedup_keep``, so every pin here lives until the
-    caller's ``scope()`` exits (utils/caching.py).
-    """
-    assigned = pin(ivf_assign(corpus, centroids, id_col, vec_col))
-    pairs = semantic_dedup_pairs(corpus, centroids, id_col, vec_col, threshold, assigned=assigned)
-    return cluster_dedup_keep(corpus, pairs.select("id_a", "id_b"), id_col)

@@ -4,10 +4,12 @@ hashes + banded Hamming candidate search.
 Scale shape: signatures are computed SHUFFLE-FREE — the whole 64-bit
 majority vote happens per document inside one Arrow batch (token
 hashes → unpacked bit matrix → column sums in numpy), so the signature
-stage is a map-only pass over the corpus; only the chunk bucket-join
-shuffles (the same pattern as MinHash-LSH). The earlier formulation
-(explode tokens + 64 sign-sum aggregates) shuffled every (doc, token)
-row and ran the bit tests on the interpreted path. A pair within
+stage is a map-only pass over the corpus (after the keyless
+``winnow.spread_for_fanout``, a no-op on an input already as wide as
+the cores); only the chunk bucket-join shuffles (the same pattern as
+MinHash-LSH). The earlier formulation (explode tokens + 64 sign-sum
+aggregates) shuffled every (doc, token) row and ran the bit tests on
+the interpreted path. A pair within
 Hamming distance d differs in at most d of the 4 chunks, so any pair
 with d < 4 shares ≥1 exact chunk — banding is lossless for d ≤ 3.
 """
@@ -22,7 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..utils.caching import pin
-from .dedup import _hash64, _split_words, _spread
+from .dedup import _hash64, _split_words
+from .winnow import spread_for_fanout
 
 N_BITS = 64
 CHUNKS = 4
@@ -56,7 +59,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                 ids.append(doc_id)
             yield pd.DataFrame({id_col: ids, "simhash": sims})
 
-    return _spread(df.select(id_col, text_col)).mapInPandas(
+    return spread_for_fanout(df.select(id_col, text_col)).mapInPandas(
         do, schema=f"{id_col} long, simhash long"
     )
 

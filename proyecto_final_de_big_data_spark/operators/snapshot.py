@@ -159,38 +159,3 @@ def snapshot_diff_summary(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col(id_col).cast("decimal(38,0)")).cast("long").alias("id_sum"),
     )
-
-
-def schema_diff(
-    old: DataFrame, new: DataFrame
-) -> list[dict[str, str | None]]:
-    """Column-level vintage diff — the metadata companion to the
-    row-level :func:`snapshot_diff`: which columns were added, removed,
-    or retyped between two table vintages. Pure planning-time metadata
-    (``df.dtypes``), zero data reads — run it BEFORE a mergeSchema
-    union or an incremental merge to know what the union will do.
-
-    Returns a list of ``{"column", "change", "old_type", "new_type"}``
-    dicts (change ∈ added|removed|retyped), ordered by column name;
-    empty when the schemas agree. A driver-side list, not a DataFrame:
-    the answer is schema-sized, and callers usually branch on it."""
-    old_t = dict(old.dtypes)
-    new_t = dict(new.dtypes)
-    out: list[dict[str, str | None]] = []
-    for c in sorted(set(old_t) | set(new_t)):
-        if c not in new_t:
-            out.append(
-                {"column": c, "change": "removed",
-                 "old_type": old_t[c], "new_type": None}
-            )
-        elif c not in old_t:
-            out.append(
-                {"column": c, "change": "added",
-                 "old_type": None, "new_type": new_t[c]}
-            )
-        elif old_t[c] != new_t[c]:
-            out.append(
-                {"column": c, "change": "retyped",
-                 "old_type": old_t[c], "new_type": new_t[c]}
-            )
-    return out

@@ -46,33 +46,68 @@ def _normalized(text: Column) -> Column:
     return F.regexp_replace(F.lower(text), "[^a-z0-9]", "")
 
 
-def spread_for_fanout(df: DataFrame, key: str, parts: int | None = None) -> DataFrame:
-    """Hash-repartition ``df`` by ``key`` ahead of a heavy fan-out map
-    stage (per-character md5 grams, position explodes). Scan
-    parallelism is sized to INPUT bytes (``maxPartitionBytes``), but
-    these stages do O(len · w) work per input byte — a corpus that fits
-    one scan split would otherwise hash every gram on one core (guide
-    §2.5: repartition right after a too-coarse read). ``parts=None``
-    is WIDENING-ONLY: it sizes to the larger of the session's default
-    parallelism and the input's current partition count, so on a
-    cluster whose candidate frame is already wider than the core count
-    the default never SHRINKS parallelism (r11 verdict item 7 — the
-    old cores-only default silently coalesced a 2000-partition input
-    to the core count unless the caller knew to pass 0). Pass an
-    explicit count to override, or ``0`` to keep the input
-    partitioning untouched (no shuffle). A deliberate explicit-count
-    repartition: AQE's coalescing sizes on PRE-fan-out bytes and would
-    re-merge a column-only repartition of a small corpus back to one
-    partition."""
-    if parts == 0:
-        return df
-    n = parts or max(
-        df.sparkSession.sparkContext.defaultParallelism,
-        # Physical-plan compile only (no job): the price of never
-        # shrinking a wide input.
-        df.rdd.getNumPartitions(),
+def _planned_width(node, adaptive: bool) -> int:
+    """Partition count of a physical plan node, read from the plan. A
+    coalesce, an AQE shuffle read or an exchange sets it; an adaptive
+    exchange other than an explicit ``repartition(n)`` is sized by AQE
+    from its input's bytes at run time, so its input's width stands in
+    for it. Any other node keeps its streamed children's width (a
+    broadcast build side never sets it; a union adds its children),
+    down to a leaf's split count: 0 when the leaf carries a subquery,
+    which planning its RDD would run."""
+    name = node.getClass().getSimpleName()
+    coalescible = (
+        adaptive
+        and name == "ShuffleExchangeExec"
+        and node.shuffleOrigin().toString() != "REPARTITION_BY_NUM"
     )
-    return df.repartition(n, key)
+    if name in ("CoalesceExec", "AQEShuffleReadExec", "ShuffleExchangeExec") and not coalescible:
+        return node.outputPartitioning().numPartitions()
+    kids = node.children()
+    kids = [kids.apply(i) for i in range(kids.size())]
+    kids = [k for k in kids if k.getClass().getSimpleName() != "BroadcastExchangeExec"]
+    if not kids:
+        return 0 if node.subqueries().nonEmpty() else len(node.execute().partitions())
+    widths = [_planned_width(k, adaptive) for k in kids]
+    return sum(widths) if name == "UnionExec" else max(widths)
+
+
+def spread_for_fanout(df: DataFrame, key: str | None = None) -> DataFrame:
+    """Spread ``df`` across at least the session's cores ahead of a
+    heavy fan-out stage (per-character md5 grams, position explodes,
+    per-document Arrow signature passes). Scan parallelism is sized to
+    INPUT bytes, but these stages do O(len) or more work per input byte,
+    so a corpus that fits one scan split would run it on one core
+    (guide §2.5: repartition right after a too-coarse read).
+
+    One rule: ``n = max(defaultParallelism, width)``, so a wide input
+    is never shrunk. The width is read from the physical plan Spark
+    has already built, which launches no job. A non-adaptive plan (a
+    scan, a pin, ``coalesce`` or narrow operators over them) gives it
+    exactly. An adaptive plan is read before execution: an explicit
+    ``repartition(n)`` gives ``n``; a shuffle AQE will coalesce by
+    bytes (an aggregate's, a join's) gives its input's width, not
+    ``spark.sql.shuffle.partitions``, which under Spark's default of
+    200 would spread a fixture-sized input over 200 tasks. ``df.rdd``
+    would instead run every AQE query stage of the input, and the pin
+    or action after it would run them again.
+
+    - With ``key``: always ``repartition(n, key)``. Callers key when
+      they need the co-partitioning (a self-join, an aggregate on the
+      key) or an explicit count AQE will not coalesce: its coalescing
+      sizes on PRE-fan-out bytes and would merge a small corpus back
+      to one partition.
+    - Without ``key``: ``df`` unchanged when its width is exact
+      (non-adaptive) and already at least ``defaultParallelism``, so
+      a wide input is not shuffled again; else ``repartition(n)``.
+    """
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan()
+    exact = plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec"
+    width = _planned_width(plan if exact else plan.executedPlan(), not exact)
+    if key is None:
+        return df if exact and width >= cores else df.repartition(max(cores, width))
+    return df.repartition(max(cores, width), key)
 
 
 def winnowing_fingerprints(

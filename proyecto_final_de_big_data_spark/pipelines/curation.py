@@ -124,16 +124,6 @@ class CurationConfig:
     # SURVIVED curation (e.g. dedup='exact'/'none', or pairs below the
     # dedup threshold) still cannot straddle train/eval.
     split_mode: str = "hash"
-    # Parallelism for the projection-heavy head stages (PII regexes,
-    # repetition signals, quality score — O(len) work per character):
-    # scan parallelism is sized to input BYTES, so a corpus that fits
-    # one scan split would run all of them on one core (guide §2.5 —
-    # repartition after a too-coarse read). None = hash-repartition the
-    # input by id to the session default parallelism before the first
-    # heavy stage; an explicit count overrides; 0 keeps the input
-    # partitioning — the right setting at cluster scale, where the scan
-    # is already wider than core count and the shuffle would be waste.
-    input_spread_partitions: int | None = None
 
 
 def curate_documents(
@@ -215,9 +205,12 @@ def curate_documents(
 
     out = df
     if cfg.redact_pii or cfg.min_quality is not None or cfg.drop_repetitive or cfg.strip_spans:
+        # The head stages (PII regexes, repetition signals, quality
+        # score) do O(len) work per character; spread them across at
+        # least the cores (winnow.spread_for_fanout: never shrinks).
         from ..operators.winnow import spread_for_fanout
 
-        out = spread_for_fanout(out, cfg.id_col, cfg.input_spread_partitions)
+        out = spread_for_fanout(out, cfg.id_col)
     if cfg.redact_pii:
         out = out.withColumn(cfg.text_col, redact_pii(cfg.text_col))
     if cfg.blocklist_terms:

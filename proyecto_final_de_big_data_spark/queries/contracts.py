@@ -206,11 +206,10 @@ def q_manifest_ingest_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="F1/F9 through the gate: duration-minutes between two "
     "timestamps (unix diff / 60, reference src/etl/features.py:3-7) and "
     "zero-padded month strings (lpad, reference src/utils/fechas.py:9), "
-    "over the orders->lineitem ship latency. Session TZ pinned UTC so "
-    "epoch math matches the timezone-free oracle.",
+    "over the orders->lineitem ship latency. The catalog pins the "
+    "session TZ to UTC so epoch math matches the timezone-free oracle.",
 )
 def q_order_to_ship_latency_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     j = li.join(o, li.l_orderkey == o.o_orderkey)

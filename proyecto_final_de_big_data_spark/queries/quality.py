@@ -19,6 +19,7 @@ from ..operators.pii import with_pii_stats
 from ..operators.quality import with_repetition_stats
 from ..operators.tfidf import top_terms_by_tfidf
 from ..utils.caching import pin
+from ..utils.settings import STREAM_STATE_PARTITIONS, overridden
 from .registry import register
 
 
@@ -367,9 +368,7 @@ def q_stream_pii_curation_round_trip(spark: SparkSession, sf_dir: str) -> DataFr
         ).withColumn("ct", redact_pii("t"))
         # Same state-partition bound as the other stream-mode contracts
         # (conf pinned at stream start, restored for batch queries).
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with overridden(spark, STREAM_STATE_PARTITIONS):
             q = (
                 curated.writeStream.format("parquet")
                 .option("path", out)
@@ -378,8 +377,6 @@ def q_stream_pii_curation_round_trip(spark: SparkSession, sf_dir: str) -> DataFr
                 .trigger(availableNow=True)
                 .start()
             )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
         try:
             q.processAllAvailable()
         finally:

@@ -16,12 +16,14 @@ from __future__ import annotations
 import shutil
 import tempfile
 import uuid
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..utils.caching import pin
+from ..utils.settings import STREAM_STATE_PARTITIONS, overridden
 from .registry import register
 
 
@@ -42,42 +44,30 @@ def _drain_stream(
     df: DataFrame,
     name_prefix: str,
     output_mode: str,
-    shuffle_partitions: int = 8,
-    extra_confs: dict[str, str] | None = None,
+    confs: Mapping[str, str] = STREAM_STATE_PARTITIONS,
 ) -> DataFrame:
     """Run a bounded stream into a memory sink, return the drained result
     as an eager catalog-independent frame (tiny — localCheckpoint is
     cheap and detaches it from the sink table), and drop the sink table
     so repeated runs don't accumulate one temp view per invocation.
 
-    A streaming query pins its state-partition count from
-    ``spark.sql.shuffle.partitions`` AT START (one state-store instance
-    per partition, each with open/commit overhead per micro-batch), so
-    the conf is dropped to ``shuffle_partitions`` around ``start()`` and
-    restored after: these contract streams hold a bounded fixture, and
-    paying 32 state stores to shuffle 20k rows is pure machinery cost.
-    A production deployment sizes this to key cardinality/throughput —
-    the restore keeps the session's batch queries at their tuned value.
+    ``confs`` are set around ``start()`` only (``utils.settings.
+    overridden``) and restored after. A streaming query pins its
+    state-partition count from ``spark.sql.shuffle.partitions`` AT
+    START (one state-store instance per partition, each with
+    open/commit overhead per micro-batch), so the default drops it to
+    8: these contract streams hold a bounded fixture, and paying 32
+    state stores to shuffle 20k rows is pure machinery cost. A caller
+    adds what its stream needs (e.g. the RocksDB state-store provider
+    transformWithState requires). A production deployment sizes this
+    to key cardinality/throughput; the restore keeps the session's
+    batch queries at their tuned value.
     """
     from ..streaming.windows import run_to_completion
 
     name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    # extra_confs: per-stream session confs (e.g. the RocksDB state-store
-    # provider transformWithState requires) set around start() and
-    # restored after, same contract as the shuffle-partition override.
-    to_set = {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
-    to_set.update(extra_confs or {})
-    saved = {k: spark.conf.get(k, None) for k in to_set}
-    for k, v in to_set.items():
-        spark.conf.set(k, v)
-    try:
+    with overridden(spark, confs):
         q = run_to_completion(df, name, output_mode=output_mode)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     q.stop()
     try:
         return pin(spark.table(name), eager=True)
@@ -317,9 +307,7 @@ def q_stream_file_sink_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame
         stream = read_events_stream(spark, stage)
         # Same state-partition bound as _drain_stream (conf is pinned at
         # stream start; restored for the session's batch queries).
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with overridden(spark, STREAM_STATE_PARTITIONS):
             q = (
                 stream.writeStream.format("parquet")
                 .option("path", out)
@@ -328,8 +316,6 @@ def q_stream_file_sink_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame
                 .trigger(availableNow=True)
                 .start()
             )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
         try:
             q.processAllAvailable()
         finally:
@@ -454,7 +440,9 @@ def q_stream_stream_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # interleaved A/B at sf0.1): 8 -> 4 partitions 4.0 -> 2.7 s
         # warm; 4 -> 2 was flat. Fixture-scale sizing, parameterized as
         # ever — a production deployment sizes this to throughput.
-        drained = _drain_stream(spark, joined, "t_ssjoin", "append", shuffle_partitions=4)
+        drained = _drain_stream(
+            spark, joined, "t_ssjoin", "append", {"spark.sql.shuffle.partitions": "4"}
+        )
         return drained.groupBy("a_type").agg(
             F.count(F.lit(1)).alias("n_pairs"),
             F.sum("cents").alias("cents_diff"),
@@ -673,17 +661,11 @@ def q_tws_histogram_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sums instead if staging more"
             )
         stream = read_events_stream(spark, stage)
-        extra = (
-            {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
-            if has_tws_runtime()
-            else None
-        )
+        confs = dict(STREAM_STATE_PARTITIONS)
+        if has_tws_runtime():
+            confs["spark.sql.streaming.stateStore.providerClass"] = ROCKSDB_PROVIDER
         drained = _drain_stream(
-            spark,
-            stateful_histogram_stream(stream),
-            "t_tws_hist",
-            "update",
-            extra_confs=extra,
+            spark, stateful_histogram_stream(stream), "t_tws_hist", "update", confs
         )
         return drained.groupBy("user_id", "event_type").agg(
             F.max("cnt").alias("cnt")

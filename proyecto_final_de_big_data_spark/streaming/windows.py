@@ -1,10 +1,11 @@
-"""Streaming windowed aggregations over the events stream: tumbling /
-sliding / session windows with watermark-based late-data handling.
+"""Structured-Streaming surface over the events stream: the file-source
+reader, a session-window aggregation with watermark-based late-data
+handling, and a helper that runs a bounded stream into a memory sink.
 
-The transformations are IDENTICAL to the batch window queries
-(``queries/streaming_batch.py``) — same groupBy(window(...)) logic wired
-to ``readStream`` — which is the point of Structured Streaming's
-unified model. File-source streams over the events parquet replay the
+The stream-mode queries (``queries/streaming_batch.py``) build their
+tumbling / sliding windows inline with the same groupBy(window(...))
+logic as their batch twins — which is the point of Structured
+Streaming's unified model. File-source streams over the events parquet replay the
 fixture as a stream for tests; swap ``.format("kafka")`` in production.
 
 Late data: ``withWatermark(ts, delay)`` bounds state: windows older
@@ -41,13 +42,15 @@ def read_events_stream(spark: SparkSession, path: str, max_files_per_trigger: in
     TIMESTAMP(NANOS) and TIMESTAMP(MICROS)): nanos are readable only as
     long (``nanosAsLong``) and truncated to µs here — the same
     conditional conversion ``catalog.load_table`` applies on the batch
-    path; micros/millis read natively as TimestampType. UTC is pinned so
-    event-time windows match the timezone-free oracle.
+    path; micros/millis read natively as TimestampType. The catalog's
+    events read settings (UTC, so event-time windows match the
+    timezone-free oracle, and ``nanosAsLong``) are set here too.
     """
+    from ..catalog import set_read_settings
     from ..io.ingest import TS_UNIT_UNKNOWN, probe_parquet_ts_unit
     from ..utils.logging import get_logger
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    set_read_settings(spark, "events")
     unit = probe_parquet_ts_unit(path)
     if unit is None:
         # The probe RAN and 'ts' is absent or not a timestamp: a blind
@@ -71,7 +74,6 @@ def read_events_stream(spark: SparkSession, path: str, max_files_per_trigger: in
         )
         unit = "us"
     if unit == "ns":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = (
             spark.readStream.schema(_events_schema(T.LongType()))
             .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -84,26 +86,6 @@ def read_events_stream(spark: SparkSession, path: str, max_files_per_trigger: in
         .parquet(path)
     )
     return raw
-
-
-def tumbling_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.avg("value").alias("avg_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "avg_value")
-    )
-
-
-def sliding_counts(
-    events: DataFrame, window: str = "2 hours", slide: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
 
 
 def session_counts(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:

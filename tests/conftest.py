@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import itertools
+import time
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -27,3 +30,34 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+_groups = itertools.count()
+
+
+def _jobs_launched(spark, fn):
+    """(fn's result, number of Spark jobs fn launched). Job listings are
+    filled in by an asynchronous listener; a sentinel job run after fn in
+    its own group shows up only once every earlier job has."""
+    sc = spark.sparkContext
+    group = f"jobs_launched:{next(_groups)}"
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+        sc.setJobGroup(group + ":sentinel", group)
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(group + ":sentinel"):
+        assert time.monotonic() < deadline, "sentinel job never reported"
+        time.sleep(0.05)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="session")
+def jobs_launched(spark):
+    """``jobs_launched(fn)`` -> (fn's result, Spark jobs fn launched),
+    counted in a job group read with ``statusTracker``."""
+    return lambda fn: _jobs_launched(spark, fn)

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
 from proyecto_final_de_big_data_spark.operators.boilerplate import (
     remove_boilerplate,
     segment_frequencies,
@@ -69,3 +72,35 @@ def test_remove_boilerplate_threshold_below_keeps_everything(spark):
     out = remove_boilerplate(df, seg_words=5, max_doc_freq=4)
     originals = {r["doc_id"]: r["text"] for r in df.collect()}
     assert {r["doc_id"]: r["clean_text"] for r in out.collect()} == originals
+
+
+_SETTINGS = dict(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+_word = st.text(alphabet="abcdefg", min_size=1, max_size=4)
+
+
+@given(
+    docs=st.lists(
+        st.lists(st.sampled_from("abc"), min_size=1, max_size=12).map(" ".join),
+        min_size=1,
+        max_size=6,
+    )
+)
+@settings(**_SETTINGS)
+def test_boilerplate_identity_when_threshold_above_corpus(spark, docs):
+    """With max_doc_freq > n_docs nothing is boilerplate: clean_text must
+    be the single-space rejoin of the original tokens, in order."""
+    from proyecto_final_de_big_data_spark.operators.boilerplate import (
+        remove_boilerplate,
+    )
+
+    df = spark.createDataFrame(list(enumerate(docs)), ["doc_id", "text"])
+    out = {r["doc_id"]: r["clean_text"] for r in remove_boilerplate(
+        df, seg_words=3, max_doc_freq=len(docs) + 1
+    ).collect()}
+    for i, d in enumerate(docs):
+        assert out[i] == " ".join(d.split())

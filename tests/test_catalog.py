@@ -4,48 +4,22 @@ added file or schema-relevant setting change is seen on the next read."""
 
 from __future__ import annotations
 
-import itertools
-import time
-
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql.types import BinaryType, DoubleType, LongType, StringType
 
 from proyecto_final_de_big_data_spark.catalog import _local_path, load_table, read_months
-
-_groups = itertools.count()
-
-
-def _jobs_launched(spark, fn):
-    """(fn's result, number of Spark jobs fn launched). Job listings are
-    filled in by an asynchronous listener; a sentinel job run after fn in
-    its own group shows up only once every earlier job has."""
-    sc = spark.sparkContext
-    group = f"test_catalog:{next(_groups)}"
-    try:
-        sc.setJobGroup(group, group)
-        out = fn()
-        sc.setJobGroup(group + ":sentinel", group)
-        spark.range(1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    deadline = time.monotonic() + 30
-    while not sc.statusTracker().getJobIdsForGroup(group + ":sentinel"):
-        assert time.monotonic() < deadline, "sentinel job never reported"
-        time.sleep(0.05)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
+from proyecto_final_de_big_data_spark.utils.settings import overridden
 
 def _write(path, **cols):
     pq.write_table(pa.table(cols), str(path))
 
 
-def test_repeat_load_of_unchanged_table_launches_no_job(spark, tmp_path):
+def test_repeat_load_of_unchanged_table_launches_no_job(spark, tmp_path, jobs_launched):
     _write(tmp_path / "region.parquet", r_regionkey=[0, 1, 2], r_name=["A", "B", "C"])
-    first, first_jobs = _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "region"))
-    second, second_jobs = _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    first, first_jobs = jobs_launched(lambda: load_table(spark, str(tmp_path), "region"))
+    second, second_jobs = jobs_launched(lambda: load_table(spark, str(tmp_path), "region"))
     assert first_jobs >= 1  # the cold read infers from the footer
     assert second_jobs == 0
     assert second.schema == first.schema
@@ -85,19 +59,19 @@ def test_file_added_to_partition_is_seen_by_read_months(spark, tmp_path):
 def test_schema_settings_are_part_of_the_key(spark, tmp_path):
     _write(tmp_path / "documents.parquet", doc_id=[1], body=pa.array([b"abc"], pa.binary()))
     conf = "spark.sql.parquet.binaryAsString"
-    old = spark.conf.get(conf, None)
-    try:
-        spark.conf.set(conf, "false")
+    with overridden(spark, {conf: "false"}):
         assert load_table(spark, str(tmp_path), "documents").schema["body"].dataType == BinaryType()
-        spark.conf.set(conf, "true")
+    with overridden(spark, {conf: "true"}):
         df = load_table(spark, str(tmp_path), "documents")
         assert df.schema["body"].dataType == StringType()
         assert df.collect()[0].body == "abc"
-    finally:
-        if old is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, old)
+
+
+def test_every_table_read_pins_utc(spark, sf_dir):
+    tz = "spark.sql.session.timeZone"
+    with overridden(spark, {tz: "America/New_York"}):
+        load_table(spark, sf_dir, "lineitem")
+        assert spark.conf.get(tz) == "UTC"
 
 
 @pytest.mark.parametrize(

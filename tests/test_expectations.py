@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from proyecto_final_de_big_data_spark.operators.expectations import (
     foreign_key,
@@ -105,3 +107,50 @@ def test_matches_regex_full_match_and_null_exclusion(spark):
     # full-match semantics: 'URGENT' (no prefix) and 'x1-URGENT'
     # (leading junk — a bare rlike would accept it) violate; NULL doesn't
     assert report["matches_regex(pri,[1-5]-[A-Z ]+)"] == (2, False)
+
+
+_SETTINGS = dict(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.one_of(st.none(), st.integers(0, 8)),
+            st.one_of(st.none(), st.floats(-50, 150, allow_nan=False)),
+        ),
+        min_size=1,
+        max_size=25,
+    )
+)
+@settings(**_SETTINGS)
+def test_expectations_counts_match_python_reference(spark, rows):
+    """validate()'s counts equal a driver-side recomputation for any
+    mix of NULLs, duplicates, and out-of-range values."""
+    from proyecto_final_de_big_data_spark.operators.expectations import (
+        in_range,
+        not_null,
+        unique,
+        validate,
+    )
+
+    df = spark.createDataFrame(rows, "id long, v double")
+    got = {
+        r["check"]: r["n_violations"]
+        for r in validate(
+            df, [not_null("id"), unique("id"), in_range("v", 0.0, 100.0)]
+        ).collect()
+    }
+    ids = [a for a, _ in rows]
+    want_null = sum(1 for a in ids if a is None)
+    # unique() ignores NULL keys (SQL count(DISTINCT) semantics): only
+    # extra copies among NON-NULL ids are violations.
+    non_null = [a for a in ids if a is not None]
+    want_dups = len(non_null) - len(set(non_null))
+    want_range = sum(1 for _, b in rows if b is not None and (b < 0.0 or b > 100.0))
+    assert got["not_null(id)"] == want_null
+    assert got["unique(id)"] == want_dups
+    assert got["in_range(v,0.0,100.0)"] == want_range

@@ -13,7 +13,6 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import SparkSession
-from test_catalog import _jobs_launched
 
 from proyecto_final_de_big_data_spark.oracle import check
 from proyecto_final_de_big_data_spark.queries import QUERIES, Query
@@ -103,7 +102,7 @@ def test_load_gate_ignored_on_request(bench, gate_env, monkeypatch):
     assert gate_env == []
 
 
-def test_harness_scripts_import_without_starting_a_job(spark, bench, monkeypatch):
+def test_harness_scripts_import_without_starting_a_job(spark, bench, monkeypatch, jobs_launched):
     def no_session(self):
         raise AssertionError("a harness script built a SparkSession on import")
 
@@ -115,5 +114,5 @@ def test_harness_scripts_import_without_starting_a_job(spark, bench, monkeypatch
             spec = importlib.util.spec_from_file_location(f"_harness_import_{path.stem}", path)
             spec.loader.exec_module(importlib.util.module_from_spec(spec))
 
-    _, jobs = _jobs_launched(spark, import_all)
+    _, jobs = jobs_launched(import_all)
     assert jobs == 0

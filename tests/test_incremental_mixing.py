@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from proyecto_final_de_big_data_spark.operators.dedup import (
     content_digest,
+    exact_dedup,
     incremental_dedup,
 )
 from proyecto_final_de_big_data_spark.operators.mixing import (
@@ -389,3 +392,70 @@ def test_cap_megagroup_preprune_shapes_the_plan(spark):
     off = cap_per_group(df, "src", "doc_id", 5)
     plan_off = off._jdf.queryExecution().optimizedPlan().toString()
     assert "percentile_approx" not in plan_off
+
+
+_SETTINGS = dict(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+_word = st.text(alphabet="abcdefg", min_size=1, max_size=4)
+
+
+@given(
+    hist=st.lists(_word, min_size=0, max_size=10),
+    batch=st.lists(_word, min_size=1, max_size=12),
+)
+@settings(**_SETTINGS)
+def test_incremental_dedup_set_identity(spark, hist, batch):
+    """kept texts == batch texts minus historical texts, one row each —
+    and equals exact_dedup(batch) with historical contents filtered out."""
+    hdf = spark.createDataFrame([(i, t) for i, t in enumerate(hist)], "id INT, text STRING")
+    bdf = spark.createDataFrame(
+        [(100 + i, t) for i, t in enumerate(batch)], "id INT, text STRING"
+    )
+    kept = incremental_dedup(bdf, hdf, ["text"], "id").collect()
+    assert sorted(r["text"] for r in kept) == sorted(set(batch) - set(hist))
+    baseline = {
+        r["text"]: r["id"]
+        for r in exact_dedup(bdf, ["text"], "id").collect()
+        if r["text"] not in set(hist)
+    }
+    assert {r["text"]: r["id"] for r in kept} == baseline
+
+
+@given(
+    weights=st.dictionaries(
+        st.sampled_from(["a", "b", "c"]),
+        st.floats(min_value=0.0, max_value=4.0, allow_nan=False),
+        min_size=1,
+        max_size=3,
+    ),
+    n=st.integers(min_value=1, max_value=40),
+)
+@settings(**_SETTINGS)
+def test_epoch_upsample_copy_count_invariants(spark, weights, n):
+    """Every surviving row has floor(w) or ceil(w) copies numbered 1..k,
+    and rows of weight-1.0 (or absent) strata are exactly preserved."""
+    from proyecto_final_de_big_data_spark.operators.mixing import epoch_upsample
+
+    strata = ["a", "b", "c", "d"]  # 'd' is never in weights -> 1.0
+    df = spark.createDataFrame(
+        [(i, strata[i % 4]) for i in range(n)], "doc_id long, lang string"
+    )
+    out = epoch_upsample(df, "lang", "doc_id", alpha=None, weights=weights).collect()
+    by_doc: dict[int, list[int]] = {}
+    for r in out:
+        by_doc.setdefault(r["doc_id"], []).append(r["epoch"])
+    import math
+
+    for i in range(n):
+        w = weights.get(strata[i % 4], 1.0)
+        k = len(by_doc.get(i, []))
+        lo, hi = math.floor(round(w * 1e6) / 1e6), math.ceil(round(w * 1e6) / 1e6)
+        assert lo <= k <= hi, (i, w, k)
+        if k:
+            assert sorted(by_doc[i]) == list(range(1, k + 1))
+        if strata[i % 4] == "d":
+            assert k == 1  # absent stratum: untouched

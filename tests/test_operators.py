@@ -15,7 +15,6 @@ from proyecto_final_de_big_data_spark.operators.clean import clip_to_quantiles, 
 from proyecto_final_de_big_data_spark.operators.dedup import exact_dedup, minhash_dedup_pairs
 from proyecto_final_de_big_data_spark.operators.rollup import (
     argmax_per_group,
-    weighted_mean,
     with_cumulative_share,
     with_share_of_total,
 )
@@ -77,18 +76,6 @@ def test_clip_property_subset_and_bounds(spark):
 
     lo, hi = np.percentile(np.arange(1.0, 101.0), [5, 95])
     assert min(rows) >= lo and max(rows) <= hi
-
-
-def test_weighted_mean_recovers_direct_mean(spark):
-    df = spark.createDataFrame(
-        [("a", 1, 10.0), ("a", 1, 20.0), ("a", 2, 30.0), ("b", 1, 5.0)],
-        ["k", "m", "v"],
-    )
-    per_month = df.groupBy("k", "m").agg(F.avg("v").alias("avg_v"), F.count(F.lit(1)).alias("n"))
-    rolled = weighted_mean(per_month, ["k"], "avg_v", "n", "wavg")
-    direct = {r["k"]: r["d"] for r in df.groupBy("k").agg(F.avg("v").alias("d")).collect()}
-    for r in rolled.collect():
-        assert abs(r["wavg"] - direct[r["k"]]) < 1e-9
 
 
 def test_share_of_total_sums_to_one(spark):

@@ -119,30 +119,6 @@ def test_histogram_int_drops_out_of_range_and_validates(spark):
         histogram_int(df, "v", 2, 9, 0)
 
 
-def test_histogram_int_matches_duckdb_twin(spark):
-    import duckdb
-
-    from proyecto_final_de_big_data_spark.operators.profile import (
-        histogram_int,
-        histogram_int_sql,
-    )
-
-    df = spark.read.parquet(f"{SF}/documents.parquet")
-    got = sorted(
-        map(tuple, histogram_int(df, "n_chars", 7, 0, 3000).collect())
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    want = sorted(
-        map(tuple, con.execute(
-            histogram_int_sql("documents", "n_chars", 7, 0, 3000)
-        ).fetchall())
-    )
-    assert got == want and got
-
-
 def test_histogram_int_exact_past_double_precision(spark):
     # Regression: (hi-lo+1)*n_bins beyond 2^53 — double-division binning
     # truncated v=3374116741 into bin-1; `div` must bin exactly.

@@ -1,8 +1,7 @@
 """Property-based tests (SURVEY §5 "Property tests"): invariants that
 must hold for arbitrary inputs, not just the fixtures — the outlier
-filter's subset/bounds contract, the D2 weighted-rollup identity, the
-salted-aggregation result identity, and canonicalization's
-case-insensitivity.
+filter's subset/bounds contract, the salted-aggregation result
+identity, and canonicalization's case-insensitivity.
 """
 
 from __future__ import annotations
@@ -15,7 +14,6 @@ from pyspark.sql import functions as F
 
 from proyecto_final_de_big_data_spark.operators.canonicalize import canonicalize
 from proyecto_final_de_big_data_spark.operators.clean import clip_to_quantiles, quantile_bounds
-from proyecto_final_de_big_data_spark.operators.rollup import weighted_mean
 from proyecto_final_de_big_data_spark.operators.skew import salted_aggregate
 
 _SETTINGS = dict(
@@ -39,26 +37,6 @@ def test_clip_keeps_subset_within_bounds(spark, vals):
     assert not Counter(kept) - Counter(float(v) for v in vals)
     # every kept value respects the quantile band
     assert all(lo <= k <= hi for k in kept)
-
-
-@given(
-    rows=st.lists(
-        st.tuples(st.sampled_from(["a", "b", "c"]), finite), min_size=1, max_size=80
-    )
-)
-@settings(**_SETTINGS)
-def test_weighted_rollup_recovers_direct_mean(spark, rows):
-    """D2 invariant: recombining per-group means weighted by group counts
-    equals the direct mean over all rows."""
-    df = spark.createDataFrame([(k, float(v)) for k, v in rows], ["k", "v"])
-    per_group = df.groupBy("k").agg(
-        F.avg("v").alias("avg_v"), F.count(F.lit(1)).alias("n")
-    )
-    # single output group: weighted mean over all per-group partials
-    got = weighted_mean(per_group.withColumn("__all", F.lit(1)), ["__all"], "avg_v", "n", "m")
-    m = got.collect()[0]["m"]
-    direct = sum(v for _, v in rows) / len(rows)
-    assert math.isclose(m, direct, rel_tol=1e-9, abs_tol=1e-9)
 
 
 @given(

@@ -9,6 +9,8 @@ values are computable by eye.
 
 from __future__ import annotations
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from proyecto_final_de_big_data_spark.operators.pii import (
@@ -145,3 +147,55 @@ def test_kmeans_assign_contract(spark):
     hi = {r["cluster"] for r in out if r["vec_id"] >= 100}
     assert len(lo) == 1 and len(hi) == 1 and lo != hi
     assert all(r["cluster"] is not None for r in out)
+
+
+_SETTINGS = dict(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+_word = st.text(alphabet="abcdefg", min_size=1, max_size=4)
+_pii_bits = st.sampled_from(
+    ["bob@mail.example.com", "10.0.0.99", "555-123-4567", "x.y+z@sub.domain.org"]
+)
+
+
+@given(
+    docs=st.lists(
+        st.lists(_word | _pii_bits, min_size=1, max_size=12).map(" ".join),
+        min_size=1,
+        max_size=8,
+    )
+)
+@settings(**_SETTINGS)
+def test_pii_redaction_idempotent_and_exhaustive(spark, docs):
+    """After one redaction pass no pattern matches remain, so a second
+    pass is the identity."""
+    df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)], ["id", "text"])
+    once = df.select("id", redact_pii("text").alias("t"))
+    counts = once.select(
+        *[
+            F.size(F.regexp_extract_all("t", F.lit(p), F.lit(0))).alias(k)
+            for k, (p, _) in PII_PATTERNS.items()
+        ]
+    ).collect()
+    assert all(r[k] == 0 for r in counts for k in PII_PATTERNS)
+    twice = once.select("id", redact_pii(F.col("t")).alias("t"))
+    assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
+
+
+@given(docs=st.lists(st.lists(_word, min_size=1, max_size=15).map(" ".join), min_size=1, max_size=8))
+@settings(**_SETTINGS)
+def test_repetition_ratios_bounded_and_exact_on_distinct(spark, docs):
+    df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)], ["id", "text"])
+    out = df.select(
+        "id",
+        "text",
+        distinct_word_ratio(words("text")).alias("d1"),
+        distinct_bigram_ratio(words("text")).alias("d2"),
+    ).collect()
+    for r in out:
+        toks = r["text"].split()
+        assert 0 < r["d1"] <= 1 and 0 < r["d2"] <= 1
+        assert (r["d1"] == 1.0) == (len(set(toks)) == len(toks))

@@ -5,6 +5,8 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from proyecto_final_de_big_data_spark.operators.rolling import (
@@ -136,3 +138,27 @@ def test_interpolate_gaps_mean_per_bucket_and_no_extrapolation(spark):
         for r in interpolate_gaps(df, "user_id", "ts", "value").collect()
     }
     assert got == {0: 2.0, 1: 5.0, 2: 8.0}
+
+
+_SETTINGS = dict(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@given(
+    offsets=st.lists(st.integers(min_value=0, max_value=72 * 3600), min_size=1, max_size=30)
+)
+@settings(**_SETTINGS)
+def test_gap_fill_dense_axis_and_count_conservation(spark, offsets):
+    t0 = dt.datetime(2024, 3, 1)
+    rows = [(i, t0 + dt.timedelta(seconds=s)) for i, s in enumerate(offsets)]
+    df = spark.createDataFrame(rows, ["id", "ts"])
+    got = sorted(gap_filled_counts(df, ts_col="ts").collect(), key=lambda r: r["bucket"])
+    assert sum(r["n_events"] for r in got) == len(offsets)
+    # dense axis: consecutive hour buckets, min..max inclusive
+    buckets = [r["bucket"] for r in got]
+    assert all(
+        (b2 - b1) == dt.timedelta(hours=1) for b1, b2 in zip(buckets, buckets[1:])
+    )

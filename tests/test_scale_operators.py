@@ -181,40 +181,6 @@ def test_stateful_user_profile_stream(spark, tmp_path):
         q.stop()
 
 
-def test_should_spread_master_aware_default():
-    # Cluster masters must default to NO spread (an unconditional
-    # repartition would shuffle the whole corpus into the otherwise
-    # map-only signature stages); local masters default to spread;
-    # explicit conf overrides both ways.
-    from proyecto_final_de_big_data_spark.operators.dedup import _should_spread
-
-    assert _should_spread("local[32]", None) is True
-    assert _should_spread("local", None) is True
-    assert _should_spread("spark://host:7077", None) is False
-    assert _should_spread("yarn", None) is False
-    assert _should_spread("k8s://https://host", None) is False
-    assert _should_spread("yarn", "true") is True
-    assert _should_spread("local[4]", "false") is False
-    assert _should_spread("yarn", "") is False  # empty string -> default
-
-
-def test_spread_conf_off_is_identity(spark):
-    from proyecto_final_de_big_data_spark.operators.dedup import _spread
-
-    df = spark.range(10).coalesce(1)
-    old = spark.conf.get("spark.graft.spreadSmallInputs", None)
-    try:
-        spark.conf.set("spark.graft.spreadSmallInputs", "false")
-        assert _spread(df) is df
-        spark.conf.set("spark.graft.spreadSmallInputs", "true")
-        assert _spread(df).rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    finally:
-        if old is None:
-            spark.conf.unset("spark.graft.spreadSmallInputs")
-        else:
-            spark.conf.set("spark.graft.spreadSmallInputs", old)
-
-
 def test_ivf_index_increment_parity_and_skip(spark):
     """Hand fixture: 8 clustered 3-d vectors around two axes; base
     holds ids 0-4, the batch re-offers 3-4 (must be SKIPPED — the

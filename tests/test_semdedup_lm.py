@@ -15,7 +15,6 @@ from proyecto_final_de_big_data_spark.operators.lm_score import (
 )
 from proyecto_final_de_big_data_spark.operators.semdedup import (
     centroids_by_ids,
-    semantic_dedup_keep,
     semantic_dedup_pairs,
 )
 
@@ -49,29 +48,16 @@ def test_semantic_dedup_pairs_within_cell(spark):
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert got == {(0, 10), (1, 11)}
 
-
-def test_semantic_dedup_keep_drops_non_canonical(spark):
-    corpus = _corpus(spark)
-    cents = centroids_by_ids(corpus, [0, 1])
-    kept = semantic_dedup_keep(corpus, cents, threshold=0.95)
-    assert sorted(r["vec_id"] for r in kept.collect()) == [0, 1, 12]
-
-
-def test_semantic_dedup_chain_collapses_to_one(spark):
-    # A ~ B and B ~ C but A ~ C below threshold: component semantics must
-    # still keep exactly one of {A, B, C}.
+    # A ~ B and B ~ C but A ~ C below threshold: only the two
+    # above-threshold pairs of the chain form.
     rows = [
         (1, [1.0, 0.0]),
         (2, [1.0, 0.2]),   # cos(1,2)=0.981, cos(2,3)=0.981, cos(1,3)=0.928
         (3, [1.0, 0.41]),
     ]
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = centroids_by_ids(corpus, [1])
-    pairs = semantic_dedup_pairs(corpus, cents, threshold=0.95)
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert got == {(1, 2), (2, 3)}
-    kept = semantic_dedup_keep(corpus, cents, threshold=0.95)
-    assert [r["vec_id"] for r in kept.collect()] == [1]
+    chain = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    pairs = semantic_dedup_pairs(chain, centroids_by_ids(chain, [1]), threshold=0.95)
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == {(1, 2), (2, 3)}
 
 
 def test_centroids_by_ids_missing_id_raises(spark):

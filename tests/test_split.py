@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 
@@ -124,3 +126,47 @@ def test_weighted_sample_k_validates(spark):
     df = spark.createDataFrame([(1, 1.0)], "id long, w double")
     with pytest.raises(ValueError, match="k must"):
         weighted_sample_k(df, "id", "w", 0)
+
+
+_SETTINGS = dict(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 25), st.integers(0, 25)).filter(lambda p: p[0] != p[1]),
+        max_size=30,
+    )
+)
+@settings(**_SETTINGS)
+def test_cluster_safe_split_never_splits_a_component(spark, edges):
+    """For ANY pair graph, two docs connected by any path land in the
+    same split, and every doc appears exactly once."""
+    from proyecto_final_de_big_data_spark.operators.split import cluster_safe_split
+
+    docs = spark.createDataFrame([(i,) for i in range(26)], "doc_id long")
+    pairs = spark.createDataFrame(edges or [], "id_a long, id_b long")
+    out = cluster_safe_split(docs, pairs, "doc_id", {"train": 0.7, "eval": 0.3}).collect()
+    splits = {r["doc_id"]: r["split"] for r in out}
+    assert len(out) == 26 and set(splits) == set(range(26))
+
+    # driver-side union-find as the reference component labeling
+    parent = list(range(26))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    for a, b in edges:
+        assert splits[a] == splits[b] or find(a) != find(b)
+    for x in range(26):
+        assert splits[x] == splits[find(x)]

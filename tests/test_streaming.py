@@ -1,22 +1,18 @@
 """Structured-Streaming surface: file-source replay of the events
-fixture through tumbling/sliding/session windows with watermarks; the
-streamed result must equal the batch equivalent once all input drains
-(Structured Streaming's unified-model guarantee)."""
+fixture through a session window with a watermark. The stream-mode
+queries' tumbling and sliding windows are checked against their batch
+oracles in tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
-from proyecto_final_de_big_data_spark.catalog import load_table
 from proyecto_final_de_big_data_spark.streaming.windows import (
     read_events_stream,
     run_to_completion,
     session_counts,
-    sliding_counts,
-    tumbling_counts,
 )
 
 
@@ -28,65 +24,13 @@ def events_stream_dir(tmp_path_factory):
     return str(d)
 
 
-def _batch_tumbling(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    return {
-        (r["ws"], r["event_type"]): r["n"]
-        for r in ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n")
-        .collect()
-    }
-
-
-def test_tumbling_stream_complete_matches_batch(spark, sf_dir, events_stream_dir):
-    stream = read_events_stream(spark, events_stream_dir)
-    q = run_to_completion(tumbling_counts(stream), "t_tumbling_c", output_mode="complete")
-    try:
-        got = {
-            (r["window_start"], r["event_type"]): r["n_events"]
-            for r in spark.table("t_tumbling_c").collect()
-        }
-        assert got == _batch_tumbling(spark, sf_dir)
-    finally:
-        q.stop()
-
-
-def test_tumbling_stream_append_finalizes_only_watermarked(spark, sf_dir, events_stream_dir):
-    """Append mode emits only windows the watermark has passed — the
-    unfinalized tail (last <= watermark-delay hours) is withheld. That
-    withholding IS the late-data guarantee."""
-    stream = read_events_stream(spark, events_stream_dir)
-    q = run_to_completion(tumbling_counts(stream), "t_tumbling_a", output_mode="append")
-    try:
-        got = {
-            (r["window_start"], r["event_type"]): r["n_events"]
-            for r in spark.table("t_tumbling_a").collect()
-        }
-        want = _batch_tumbling(spark, sf_dir)
-        assert set(got).issubset(set(want))
-        assert all(want[k] == v for k, v in got.items())
-        missing = set(want) - set(got)
-        assert missing, "append mode should withhold the unfinalized tail"
-        max_ts = max(ws for ws, _ in want)
-        # all withheld windows lie within watermark delay (2h) of stream end
-        assert all((max_ts - ws).total_seconds() <= 2 * 3600 for ws, _ in missing)
-    finally:
-        q.stop()
-
-
 def test_sliding_and_session_streams_run(spark, events_stream_dir):
-    stream = read_events_stream(spark, events_stream_dir)
-    q1 = run_to_completion(sliding_counts(stream), "t_sliding")
     q2 = run_to_completion(session_counts(read_events_stream(spark, events_stream_dir)), "t_session")
     try:
-        sliding = spark.table("t_sliding").collect()
         session = spark.table("t_session").collect()
-        assert len(sliding) > 0
         assert len(session) > 0
         assert {f.name for f in spark.table("t_session").schema.fields} == {
             "user_id", "session_start", "n_events",
         }
     finally:
-        q1.stop()
         q2.stop()

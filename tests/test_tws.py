@@ -40,6 +40,7 @@ from proyecto_final_de_big_data_spark.streaming.tws import (
     EventTypeHistogramProcessor,
     event_type_histogram_stream,
 )
+from proyecto_final_de_big_data_spark.utils.settings import STREAM_STATE_PARTITIONS, overridden
 
 
 def _write_fixture(spark, rows, stage):
@@ -47,9 +48,7 @@ def _write_fixture(spark, rows, stage):
     parquet fixture. Spark's default parquet timestamp encoding is
     INT96, which the ts-unit-probing stream reader rejects — pin
     TIMESTAMP_MICROS around the write (the unit real fixtures ship)."""
-    saved = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
+    with overridden(spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}):
         spark.createDataFrame(
             [(u, t, e) for u, t, e in rows],
             "user_id long, ts_s string, event_type string",
@@ -61,14 +60,9 @@ def _write_fixture(spark, rows, stage):
             F.lit(0).cast("long").alias("event_id"),
             F.lit("{}").alias("props"),
         ).coalesce(1).write.mode("overwrite").parquet(stage)
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.parquet.outputTimestampType")
-        else:
-            spark.conf.set("spark.sql.parquet.outputTimestampType", saved)
 
 
-def _drain_histogram(spark, rows, stream_fn, name, extra_confs=None):
+def _drain_histogram(spark, rows, stream_fn, name, confs=STREAM_STATE_PARTITIONS):
     """Stage rows, run ``stream_fn`` over them as a real stream, return
     {(user_id, event_type): cnt}."""
     from proyecto_final_de_big_data_spark.queries.streaming_batch import (
@@ -86,7 +80,7 @@ def _drain_histogram(spark, rows, stream_fn, name, extra_confs=None):
             stream_fn(read_events_stream(spark, stage)),
             name,
             "update",
-            extra_confs=extra_confs,
+            confs,
         )
         return {(r["user_id"], r["event_type"]): r["cnt"] for r in out.collect()}
     finally:
@@ -101,8 +95,9 @@ def _run_fixture_stream(spark, rows):
         rows,
         event_type_histogram_stream,
         "t_tws_unit",
-        extra_confs={
-            "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER
+        confs={
+            **STREAM_STATE_PARTITIONS,
+            "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
         },
     )
 

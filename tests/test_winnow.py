@@ -8,11 +8,13 @@ import hashlib
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from proyecto_final_de_big_data_spark.operators.winnow import (
     shared_fingerprint_pairs,
     winnowing_fingerprints,
 )
+from proyecto_final_de_big_data_spark.utils.settings import overridden
 
 K, W = 5, 4
 
@@ -128,10 +130,10 @@ def test_invalid_params_rejected(spark):
 
 
 def test_spread_for_fanout_default_never_shrinks_wide_input(spark):
-    """r11 verdict item 7: the parts=None default must be WIDENING-ONLY.
+    """r11 verdict item 7: the fan-out rule must be WIDENING-ONLY.
     An input already wider than the session's default parallelism keeps
     (at least) its width; a too-narrow input still spreads up to the
-    core count; parts=0 stays the no-shuffle escape hatch."""
+    core count."""
     from proyecto_final_de_big_data_spark.operators.winnow import spread_for_fanout
 
     cores = spark.sparkContext.defaultParallelism
@@ -142,5 +144,70 @@ def test_spread_for_fanout_default_never_shrinks_wide_input(spark):
     ), "default shrank a wide input"
     narrow = spark.range(100).withColumnRenamed("id", "k").coalesce(1)
     assert spread_for_fanout(narrow, "k").rdd.getNumPartitions() == cores
-    assert spread_for_fanout(narrow, "k", parts=0) is narrow
-    assert spread_for_fanout(wide, "k", parts=8).rdd.getNumPartitions() == 8
+
+
+def _multi_file_scan(spark, path, n_files):
+    """A scan of ``n_files`` parquet files that plans one split per file."""
+    spark.range(0, 4000, 1, n_files).withColumn("k", F.col("id") % 50).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_spread_for_fanout_sizing_launches_no_job(spark, sf_dir, jobs_launched):
+    """The width is read from the physical plan: sizing an input with
+    exchanges runs none of its query stages (``df.rdd`` would)."""
+    from proyecto_final_de_big_data_spark.operators.winnow import spread_for_fanout
+
+    scan = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    shapes = {
+        "repartition(64)": spark.range(1000).repartition(64),
+        "scan aggregate": scan.groupBy("l_orderkey").count(),
+        "join": scan.join(scan.select("l_orderkey", F.col("l_partkey").alias("p2")), "l_orderkey"),
+        "repartition(64).groupBy": spark.range(1000)
+        .repartition(64)
+        .groupBy((F.col("id") % 3).alias("m"))
+        .count(),
+    }
+    for name, df in shapes.items():
+        key = df.columns[0]
+        _, jobs = jobs_launched(lambda df=df, key=key: spread_for_fanout(df, key))
+        assert jobs == 0, f"{name}: sizing launched {jobs} job(s)"
+    wide, _ = jobs_launched(lambda: spread_for_fanout(shapes["repartition(64)"], "id"))
+    assert wide.rdd.getNumPartitions() >= 64
+
+
+def test_spread_for_fanout_broadcast_semi_join_keeps_split_count(spark, tmp_path):
+    from proyecto_final_de_big_data_spark.operators.winnow import spread_for_fanout
+
+    cores = spark.sparkContext.defaultParallelism
+    with overridden(spark, {"spark.sql.files.openCostInBytes": str(128 << 20)}):
+        scan = _multi_file_scan(spark, str(tmp_path / "t"), 2 * cores + 2)
+        splits = scan.rdd.getNumPartitions()
+        assert splits > cores
+        small = spark.range(10).withColumnRenamed("id", "k")
+        semi = scan.join(F.broadcast(small), "k", "left_semi")
+        assert spread_for_fanout(semi, "k").rdd.getNumPartitions() >= splits
+
+
+def test_spread_for_fanout_keyless_one_split_scan_spreads_to_cores(spark, tmp_path):
+    from proyecto_final_de_big_data_spark.operators.winnow import spread_for_fanout
+
+    spark.range(100).coalesce(1).write.parquet(str(tmp_path / "one"))
+    one = spark.read.parquet(str(tmp_path / "one"))
+    assert one.rdd.getNumPartitions() == 1
+    cores = spark.sparkContext.defaultParallelism
+    assert spread_for_fanout(one).rdd.getNumPartitions() == cores
+    # An aggregate's shuffle is sized by AQE from its input at run time:
+    # its width is the scan's, not spark.sql.shuffle.partitions.
+    with overridden(spark, {"spark.sql.shuffle.partitions": "200"}):
+        agg = one.groupBy((F.col("id") % 7).alias("m")).count()
+        assert spread_for_fanout(agg).rdd.getNumPartitions() == cores
+
+
+def test_spread_for_fanout_keyless_wide_scan_is_returned_as_is(spark, tmp_path):
+    from proyecto_final_de_big_data_spark.operators.winnow import spread_for_fanout
+
+    cores = spark.sparkContext.defaultParallelism
+    with overridden(spark, {"spark.sql.files.openCostInBytes": str(128 << 20)}):
+        scan = _multi_file_scan(spark, str(tmp_path / "t"), 2 * cores)
+        assert scan.rdd.getNumPartitions() >= cores
+        assert spread_for_fanout(scan) is scan
