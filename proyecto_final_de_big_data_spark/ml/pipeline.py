@@ -10,14 +10,22 @@ Column lists are intersected with actually-present columns
 
 from __future__ import annotations
 
+import json
+import os
+import time
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.feature import OneHotEncoder, StringIndexer, VectorAssembler
 from pyspark.ml.regression import GBTRegressor, LinearRegression, RandomForestRegressor
+from pyspark.ml.pipeline import PipelineSharedReadWrite
+from pyspark.ml.util import DefaultParamsReader
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..utils.caching import pin, scope
+from ..utils.threads import run_concurrently
 
 
 @dataclass
@@ -96,7 +104,8 @@ def build_pipeline(df: DataFrame, cfg: TrainConfig) -> tuple[Pipeline, list[str]
 
 
 def evaluate(predictions: DataFrame, label: str) -> dict[str, float]:
-    """rmse / mae / r2 (reference M7) — ONE aggregation pass.
+    """rmse / mae / r2 (reference M7) and ``rows``, the number of
+    scored rows — ONE aggregation pass.
 
     Same metric definitions as ``RegressionEvaluator`` (rmse =
     sqrt(SSE/n), mae = SAE/n, r2 = 1 − SSE/SStot with SStot about the
@@ -104,9 +113,8 @@ def evaluate(predictions: DataFrame, label: str) -> dict[str, float]:
     job instead of one evaluator job per metric (three passes over the
     predictions frame became one; agreement with the evaluator is
     summation-order only, ~1e-12 relative — the same tolerance class
-    the rounded contract gates already absorb)."""
-    from pyspark.sql import functions as F
-
+    the rounded contract gates already absorb). ``rows`` is that
+    aggregation's own count, so a caller needs no second count."""
     y = F.col(label).cast("double")
     p = F.col("prediction").cast("double")
     e = y - p
@@ -120,7 +128,7 @@ def evaluate(predictions: DataFrame, label: str) -> dict[str, float]:
     n = int(row["n"] or 0)
     if n == 0:
         # RegressionEvaluator on an empty frame yields NaN metrics.
-        return {"rmse": float("nan"), "mae": float("nan"), "r2": float("nan")}
+        return {"rmse": float("nan"), "mae": float("nan"), "r2": float("nan"), "rows": 0}
     sse, sae = float(row["sse"]), float(row["sae"])
     mean_y = float(row["sy"]) / n
     sstot = float(row["syy"]) - n * mean_y * mean_y
@@ -128,6 +136,7 @@ def evaluate(predictions: DataFrame, label: str) -> dict[str, float]:
         "rmse": (sse / n) ** 0.5,
         "mae": sae / n,
         "r2": (1.0 - sse / sstot) if sstot != 0.0 else float("nan"),
+        "rows": n,
     }
 
 
@@ -137,11 +146,12 @@ def train_and_evaluate(df: DataFrame, cfg: TrainConfig) -> tuple[PipelineModel, 
     The train split is pinned before ``fit`` — the fit otherwise
     re-reads the source and recomputes the split once per internal job
     (each StringIndexer distinct-count, the regressor solve, …).
-    Predictions are pinned so the metrics aggregation and the test
-    count score once. Both pins live in this function's own ``scope()``
-    and are released before it returns (utils/caching.py), so the
-    returned predictions frame is rebuilt as ``model.transform(test)``
-    over the unpinned split: it recomputes when the caller acts on it.
+    Predictions are scored once, by ``evaluate``'s one aggregation,
+    which also counts the test rows, so they are not pinned. The train
+    pin lives in this function's own ``scope()`` and is released before
+    it returns (utils/caching.py), so the returned predictions frame is
+    rebuilt as ``model.transform(test)`` over the unpinned split: it
+    recomputes when the caller acts on it.
 
     The input is pruned to label + used feature columns BEFORE the
     split/pin: every fit job and the pinned train partition then
@@ -154,10 +164,9 @@ def train_and_evaluate(df: DataFrame, cfg: TrainConfig) -> tuple[PipelineModel, 
     with scope():
         train = pin(train)
         model = pipeline.fit(train)
-        predictions = pin(model.transform(test))
-        metrics = evaluate(predictions, cfg.label)
+        metrics = evaluate(model.transform(test), cfg.label)
         metrics["rows_train"] = train.count()
-        metrics["rows_test"] = predictions.count()
+        metrics["rows_test"] = metrics.pop("rows")
     return model, metrics, model.transform(test)
 
 
@@ -168,11 +177,93 @@ def metrics_frame(spark: SparkSession, metrics: dict, **tags: str) -> DataFrame:
 
 
 def save_model(model: PipelineModel, path: str) -> None:
-    model.write().overwrite().save(path)
+    """Write ``model`` to ``path`` in Spark's own PipelineModel layout,
+    replacing what is there; Spark's ``PipelineModel.load`` reads it.
+
+    The layout is the one ``model.write().save`` produces:
+
+    - ``path/metadata``: one JSON line, ``class``
+      ``org.apache.spark.ml.PipelineModel``, ``timestamp``,
+      ``sparkVersion``, ``uid``, ``paramMap.stageUids`` and an empty
+      ``defaultParamMap``, in that order with compact separators;
+    - ``path/stages/<idx>_<uid>``: each stage's own writer output, named
+      by ``PipelineSharedReadWrite.getStagePath``.
+
+    The JVM class name assumes JVM-backed stages, as every stage
+    :func:`build_pipeline` makes is.
+
+    Spark writes the metadata and each stage's metadata and data as
+    separate one-task jobs, one after another, and most of their time
+    is driver-side planning, listing and commit work. The stages are
+    independent, so after the overwrite's delete the pipeline metadata
+    and every stage are written concurrently
+    (``utils/threads.run_concurrently``). The metadata row is built in
+    the JVM (``spark.range``), not with ``createDataFrame`` from a
+    Python list, whose write needs a Python worker.
+    """
+    spark = SparkSession.active()
+    _delete_path(spark, path)
+    stages = model.stages
+    meta = json.dumps(
+        {
+            "class": "org.apache.spark.ml.PipelineModel",
+            "timestamp": int(round(time.time() * 1000)),
+            "sparkVersion": spark.version,
+            "uid": model.uid,
+            "paramMap": {"stageUids": [s.uid for s in stages]},
+            "defaultParamMap": {},
+        },
+        separators=(",", ":"),
+    )
+
+    def write_metadata() -> None:
+        spark.range(0, 1, 1, 1).select(F.lit(meta).alias("value")).write.text(
+            os.path.join(path, "metadata")
+        )
+
+    def write_stage(stage, stage_path: str) -> None:
+        stage.write().save(stage_path)
+
+    n = len(stages)
+    run_concurrently(
+        spark,
+        [write_metadata] + [partial(write_stage, s, _stage_path(path, s.uid, i, n)) for i, s in enumerate(stages)],
+    )
 
 
 def load_model(path: str) -> PipelineModel:
-    return PipelineModel.load(path)
+    """Read a PipelineModel that :func:`save_model` or Spark's own
+    writer left at ``path``.
+
+    The pipeline metadata is read once; then every stage is loaded
+    concurrently with ``DefaultParamsReader.loadParamsInstance``, the
+    loader Spark's reader calls for each stage in turn. The jobs are the
+    same as Spark's; they overlap instead of running one by one.
+    """
+    spark = SparkSession.active()
+    meta = DefaultParamsReader.loadMetadata(path, spark)
+    uids = meta["paramMap"]["stageUids"]
+    load = DefaultParamsReader.loadParamsInstance
+    stages = run_concurrently(
+        spark, [partial(load, _stage_path(path, u, i, len(uids)), spark) for i, u in enumerate(uids)]
+    )
+    model = PipelineModel(stages)
+    model._resetUid(meta["uid"])
+    return model
+
+
+def _stage_path(path: str, uid: str, index: int, n_stages: int) -> str:
+    return PipelineSharedReadWrite.getStagePath(uid, index, n_stages, os.path.join(path, "stages"))
+
+
+def _delete_path(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path`` through its Hadoop ``FileSystem``, as
+    Spark's ``MLWriter.overwrite()`` does, so any scheme works."""
+    jvm = spark.sparkContext._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if fs.exists(jpath):
+        fs.delete(jpath, True)
 
 
 def batch_score(model: PipelineModel, df: DataFrame) -> DataFrame:

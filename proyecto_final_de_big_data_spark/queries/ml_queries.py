@@ -154,10 +154,7 @@ def q_ml_train_linear_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     test = li.filter(F.col("l_orderkey") % 5 == 0)
     model = pipeline.fit(train)
     lr_model = model.stages[-1]
-    with scope():
-        predictions = pin(model.transform(test))
-        metrics = evaluate(predictions, "l_extendedprice")
-        rows_test = predictions.count()
+    metrics = evaluate(model.transform(test), "l_extendedprice")
     rows_train = train.count()
     coef = list(lr_model.coefficients)
     return spark.createDataFrame(
@@ -170,7 +167,7 @@ def q_ml_train_linear_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 round(metrics["mae"], 2),
                 round(metrics["r2"], 4),
                 rows_train,
-                rows_test,
+                metrics["rows"],
             )
         ],
         "intercept double, coef_quantity double, coef_discount double, "

@@ -15,8 +15,8 @@ its pins:
 
 - A function that runs its own actions and returns nothing that
   depends on its pins opens its own scope (``train_and_evaluate``,
-  ``run_curation``, ``run_marts``, ``merge_changes``, the ML contract
-  queries).
+  ``run_curation``, ``run_marts``, ``merge_changes``,
+  ``ml_tree_ensemble_contract``).
 - A function that returns a frame pins lazily and returns; its
   caller's scope releases the pins. ``oracle.check`` and ``bench.py``
   open one scope around each query's build plus action.

@@ -5,6 +5,8 @@ hand / pure Python — independent of the DuckDB oracle restatement
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from proyecto_final_de_big_data_spark.operators.agreement import (
     cohens_kappa,
@@ -198,3 +200,34 @@ def test_cohen_all_null_labels_raise(spark):
     df = spark.createDataFrame([("x", None), (None, "y")], "a string, b string")
     with pytest.raises(Exception, match="no usable"):
         cohens_kappa(df, "a", "b").collect()
+
+
+_SETTINGS = dict(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@given(
+    pairs=st.lists(
+        st.tuples(st.sampled_from("abc"), st.sampled_from("abc")),
+        min_size=2,
+        max_size=60,
+    )
+)
+@settings(**_SETTINGS)
+def test_kappa_relabeling_invariance_and_bound(spark, pairs):
+    # A consistent bijective relabeling of BOTH raters leaves kappa
+    # unchanged; kappa never exceeds 1.
+    relabel = {"a": "z", "b": "q", "c": "m"}
+    df1 = spark.createDataFrame(pairs, "a string, b string")
+    df2 = spark.createDataFrame(
+        [(relabel[x], relabel[y]) for x, y in pairs], "a string, b string"
+    )
+    r1 = cohens_kappa(df1, "a", "b").collect()[0]
+    r2 = cohens_kappa(df2, "a", "b").collect()[0]
+    assert (r1["kappa"] is None) == (r2["kappa"] is None)
+    if r1["kappa"] is not None:
+        assert r1["kappa"] == pytest.approx(r2["kappa"], abs=1e-6)
+        assert r1["kappa"] <= 1.0 + 1e-9

@@ -12,6 +12,8 @@ import hashlib
 import math
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from proyecto_final_de_big_data_spark.operators.bootstrap import (
@@ -173,3 +175,25 @@ def test_null_key_folds_as_empty_string(spark):
     assert got["mean"] == pytest.approx(want["mean"], abs=1e-6)
     assert got["se_boot"] == pytest.approx(want["se_boot"], abs=2e-6)
     assert got["ci_low"] == pytest.approx(want["ci_low"], abs=2e-6)
+
+
+_SETTINGS = dict(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+metric = st.floats(min_value=-1e4, max_value=1e4, allow_nan=False, allow_infinity=False)
+
+
+@given(vals=st.lists(metric, min_size=2, max_size=50))
+@settings(**_SETTINGS)
+def test_bootstrap_replicate_zero_exact_and_ci_ordered(spark, vals):
+    df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(vals)], "k long, x double"
+    )
+    row = poisson_bootstrap_mean(df, "k", "x", n_replicates=25).collect()[0]
+    exact = sum(vals) / len(vals)
+    assert row["mean"] == pytest.approx(exact, abs=1e-5)
+    assert row["ci_low"] <= row["ci_high"]
+    assert row["se_boot"] is None or row["se_boot"] >= 0.0

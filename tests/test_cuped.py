@@ -23,6 +23,9 @@ from __future__ import annotations
 import math
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.errors.exceptions.captured import SparkRuntimeException
 
 from proyecto_final_de_big_data_spark.operators.abtest import cuped_mean_ztest
 
@@ -135,3 +138,42 @@ def test_cuped_tiny_arm_raises(spark):
         cuped_mean_ztest(
             _units(spark, rows), "variant", "y", "x", "control", "treatment"
         ).collect()
+
+
+_SETTINGS = dict(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+metric = st.floats(min_value=-1e4, max_value=1e4, allow_nan=False, allow_infinity=False)
+
+
+@given(
+    rows=st.lists(st.tuples(metric, metric), min_size=6, max_size=40),
+    shift=st.floats(min_value=-1e3, max_value=1e3, allow_nan=False, allow_infinity=False),
+)
+@settings(**_SETTINGS)
+def test_cuped_covariate_translation_invariance(spark, rows, shift):
+    # theta and every CUPED statistic depend on the covariate only
+    # through centered moments -> adding a constant to X changes
+    # nothing (up to the 6-decimal output rounding).
+    def _df(delta):
+        data = [
+            ("control" if i % 2 == 0 else "treatment", y, x + delta)
+            for i, (y, x) in enumerate(rows)
+        ]
+        return spark.createDataFrame(data, "g string, y double, x double")
+
+    try:
+        base = cuped_mean_ztest(_df(0.0), "g", "y", "x", "control", "treatment").collect()[0]
+    except (ValueError, SparkRuntimeException):
+        # degenerate arms/covariate for this draw — skip (validation is
+        # in-plan raise_error since r11, so it surfaces at collect time)
+        return
+    shifted = cuped_mean_ztest(_df(shift), "g", "y", "x", "control", "treatment").collect()[0]
+    for field in ("theta", "lift_cuped", "se_cuped", "z_cuped", "var_reduction_pct"):
+        if base[field] is None:
+            assert shifted[field] is None, field
+        else:
+            assert shifted[field] == pytest.approx(base[field], abs=2e-4), field

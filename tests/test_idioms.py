@@ -8,7 +8,10 @@
   never probed with ``getNumPartitions``, which runs an adaptive
   input's query stages;
 - a frame is kept alive only through ``utils/caching.py`` (``pin`` and
-  ``scope``).
+  ``scope``);
+- threads start only in ``utils/threads.run_concurrently``, which hands
+  the caller's job group and local properties to every task, so no
+  fan-out of driver-side Spark calls loses its jobs' attribution.
 """
 
 from __future__ import annotations
@@ -29,6 +32,10 @@ RULES = {
     "cache lifetime": (
         re.compile(r"\.persist\(|\.unpersist\(|\.cache\(\)|localCheckpoint\("),
         {"utils/caching.py"},
+    ),
+    "thread start": (
+        re.compile(r"ThreadPoolExecutor|threading\.Thread|InheritableThread"),
+        {"utils/threads.py"},
     ),
 }
 

@@ -4,10 +4,15 @@
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
+import pytest
 from proyecto_final_de_big_data_spark.catalog import load_table
 from proyecto_final_de_big_data_spark.ml.pipeline import (
     TrainConfig,
     batch_score,
+    build_pipeline,
     load_model,
     metrics_frame,
     save_model,
@@ -25,6 +30,7 @@ def test_lr_train_evaluate_score_roundtrip(spark, sf_dir, tmp_path):
         max_iter=10,
     )
     model, metrics, _ = train_and_evaluate(li, cfg)
+    assert set(metrics) == {"rmse", "mae", "r2", "rows_train", "rows_test"}
     assert metrics["rows_train"] + metrics["rows_test"] == li.count()
     # synthetic fixture columns are mutually independent → r2 ≈ 0 is the
     # correct outcome; this test checks the loop's plumbing
@@ -146,6 +152,7 @@ def test_evaluate_matches_regression_evaluator(spark):
         )
         want = ev.evaluate(preds)
         assert abs(got[metric] - want) < 1e-9, (metric, got[metric], want)
+    assert got["rows"] == len(rows)
 
 
 def test_evaluate_empty_frame_nan(spark):
@@ -156,3 +163,135 @@ def test_evaluate_empty_frame_nan(spark):
     preds = spark.createDataFrame([], "y double, prediction double")
     got = evaluate(preds, "y")
     assert all(math.isnan(got[m]) for m in ("rmse", "mae", "r2"))
+    assert got["rows"] == 0
+
+
+# ---------------------------------------------------------------------------
+# Model sink/source (save_model / load_model): Spark's layout, concurrent I/O
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def lr_model(spark, sf_dir):
+    """A fitted 4-stage pipeline: StringIndexer, OneHotEncoder,
+    VectorAssembler, LinearRegression."""
+    li = load_table(spark, sf_dir, "lineitem")
+    cfg = TrainConfig(
+        label="l_extendedprice",
+        numeric_features=["l_quantity", "l_discount"],
+        categorical_features=["l_returnflag"],
+        algorithm="lr",
+    )
+    pipeline, _, _ = build_pipeline(li, cfg)
+    return pipeline.fit(li), li
+
+
+def _predictions(scored):
+    return [r[0] for r in scored.select("prediction").collect()]
+
+
+def _metadata(path) -> str:
+    (part,) = (Path(path) / "metadata").glob("part-*")
+    return re.sub(r'"timestamp":\d+', "", part.read_text())
+
+
+def _layout(path) -> list[str]:
+    """Every file under ``path``, with the write's random part-file ids
+    blanked."""
+    return sorted(
+        re.sub(r"part-00000-[0-9a-f-]+", "part-00000", f.relative_to(path).as_posix())
+        for f in Path(path).rglob("*")
+        if f.is_file()
+    )
+
+
+def test_save_model_output_loads_with_spark_loaders(spark, lr_model, tmp_path):
+    from pyspark.ml import PipelineModel
+    from pyspark.sql import DataFrame
+
+    model, li = lr_model
+    path = str(tmp_path / "model")
+    save_model(model, path)
+    want = _predictions(model.transform(li))
+    assert _predictions(PipelineModel.load(path).transform(li)) == want
+    jvm_model = spark._jvm.org.apache.spark.ml.PipelineModel.load(path)
+    assert _predictions(DataFrame(jvm_model.transform(li._jdf), spark)) == want
+
+
+def test_spark_writer_output_loads_with_load_model(lr_model, tmp_path):
+    model, li = lr_model
+    path = str(tmp_path / "model")
+    model.write().save(path)
+    loaded = load_model(path)
+    assert loaded.uid == model.uid
+    assert [s.uid for s in loaded.stages] == [s.uid for s in model.stages]
+    assert _predictions(loaded.transform(li)) == _predictions(model.transform(li))
+
+
+def test_save_model_writes_spark_writers_layout(lr_model, tmp_path):
+    model, _ = lr_model
+    ours, spark_s = tmp_path / "ours", tmp_path / "spark"
+    save_model(model, str(ours))
+    model.write().save(str(spark_s))
+    assert _metadata(ours) == _metadata(spark_s)
+    assert _layout(ours) == _layout(spark_s)
+    stage_dirs = sorted(p.name for p in (ours / "stages").iterdir())
+    assert stage_dirs == [f"{i}_{s.uid}" for i, s in enumerate(model.stages)]
+    for name in stage_dirs:
+        assert _metadata(ours / "stages" / name) == _metadata(spark_s / "stages" / name)
+
+
+def test_save_model_replaces_a_model_with_other_stage_uids(lr_model, tmp_path):
+    model, li = lr_model
+    path = str(tmp_path / "model")
+    cfg = TrainConfig(label="l_extendedprice", numeric_features=["l_quantity"], algorithm="lr")
+    pipeline, _, _ = build_pipeline(li, cfg)
+    save_model(pipeline.fit(li), path)  # VectorAssembler + LR, other uids
+    save_model(model, path)
+    stage_dirs = sorted(p.name for p in (tmp_path / "model" / "stages").iterdir())
+    assert stage_dirs == [f"{i}_{s.uid}" for i, s in enumerate(model.stages)]
+    assert _predictions(load_model(path).transform(li)) == _predictions(model.transform(li))
+
+
+def test_save_and_load_jobs_stay_in_the_callers_job_group(spark, lr_model, tmp_path, jobs_launched):
+    """Every job the stage threads launch carries the caller's group:
+    8 for the save (pipeline metadata + 7 stage metadata/data writes)
+    and 15 for the load, and none runs outside a group."""
+    model, _ = lr_model
+    path = str(tmp_path / "model")
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    _, saved = jobs_launched(lambda: save_model(model, path))
+    _, loaded = jobs_launched(lambda: load_model(path))
+    assert (saved, loaded) == (8, 15)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+def test_save_load_round_trips_leave_no_jvm_threads(spark, lr_model, tmp_path):
+    model, _ = lr_model
+    path = str(tmp_path / "model")
+    threads = spark.sparkContext._jvm.java.lang.Thread
+    save_model(model, path)
+    load_model(path)
+    before = threads.activeCount()
+    for _ in range(20):
+        save_model(model, path)
+        load_model(path)
+    # A leak would hold at least one thread per round trip (20); Spark's
+    # own idle task-launch pool may keep a few more or fewer meanwhile.
+    assert threads.activeCount() <= before + 4
+
+
+def test_a_failing_stage_save_fails_save_model(lr_model, tmp_path, monkeypatch):
+    model, _ = lr_model
+    failing = model.copy()
+
+    def boom():
+        raise RuntimeError("stage write failed")
+
+    monkeypatch.setattr(failing.stages[1], "write", boom)
+    with pytest.raises(RuntimeError, match="stage write failed"):
+        save_model(failing, str(tmp_path / "model"))
+    # the other writes ran to the end before the error propagated
+    assert (tmp_path / "model" / "metadata" / "_SUCCESS").exists()
+    assert (tmp_path / "model" / "stages" / f"3_{model.stages[3].uid}" / "data" / "_SUCCESS").exists()

@@ -6,6 +6,9 @@ from __future__ import annotations
 import math
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.errors.exceptions.captured import SparkRuntimeException
 
 from proyecto_final_de_big_data_spark.operators.abtest import experiment_power
 
@@ -104,3 +107,39 @@ def test_constant_covariate_raises(spark):
     )
     with pytest.raises(Exception, match="constant"):
         experiment_power(df, "y", covariate_col="x").collect()
+
+
+_SETTINGS = dict(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+metric = st.floats(min_value=-1e4, max_value=1e4, allow_nan=False, allow_infinity=False)
+
+
+@given(
+    rows=st.lists(st.tuples(metric, metric), min_size=4, max_size=40),
+    t1=st.floats(min_value=0.01, max_value=0.2, allow_nan=False),
+)
+@settings(**_SETTINGS)
+def test_power_monotone_in_target_and_cuped_dominates(spark, rows, t1):
+    df = spark.createDataFrame(
+        [(x, y) for x, y in rows], "x double, y double"
+    )
+    try:
+        a = experiment_power(df, "y", covariate_col="x", target_rel_mde=t1).collect()[0]
+        b = experiment_power(
+            df, "y", covariate_col="x", target_rel_mde=t1 * 2
+        ).collect()[0]
+    except (ValueError, SparkRuntimeException):
+        # constant metric/covariate or tiny frame — skip (validation is
+        # in-plan raise_error since r11, so it surfaces at collect time)
+        return
+    # halving the target effect must never SHRINK the required n
+    if a["n_per_arm_target"] is not None and b["n_per_arm_target"] is not None:
+        assert a["n_per_arm_target"] >= b["n_per_arm_target"]
+    # variance reduction can only help (up to output rounding)
+    if a["mde_abs_cuped"] is not None:
+        assert a["mde_abs_cuped"] <= a["mde_abs"] + 1e-6
+        assert a["rho2"] <= 1.0 + 1e-9

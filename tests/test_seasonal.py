@@ -7,6 +7,8 @@ import datetime as dt
 import math
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from proyecto_final_de_big_data_spark.operators.seasonal import (
     seasonal_decompose,
@@ -123,3 +125,42 @@ def test_hour_season_slots(spark):
     idx = {r["slot"]: r["seasonal_index"] for r in out}
     # the 6am slot sits ~3 units above the 6pm slot after detrending
     assert idx[6] - idx[18] == pytest.approx(3.0, abs=1e-6)
+
+
+_SETTINGS = dict(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+metric = st.floats(min_value=-1e4, max_value=1e4, allow_nan=False, allow_infinity=False)
+
+
+@given(
+    ys=st.lists(metric, min_size=10, max_size=28),
+    shift=st.floats(min_value=-1e3, max_value=1e3, allow_nan=False),
+)
+@settings(**_SETTINGS)
+def test_seasonal_shift_equivariance(spark, ys, shift):
+    # y -> y + c shifts the intercept by c and leaves slope, seasonal
+    # indices and strength untouched (all depend on centered residuals).
+    epoch = dt.datetime(1970, 1, 1)
+
+    def _df(delta):
+        rows = [
+            ("k", epoch + dt.timedelta(days=i, hours=12), float(v) + delta)
+            for i, v in enumerate(ys)
+        ]
+        return spark.createDataFrame(rows, "key string, ts timestamp, y double")
+
+    base = {r["slot"]: r for r in seasonal_decompose(_df(0.0), ["key"], "ts", "y").collect()}
+    shifted = {r["slot"]: r for r in seasonal_decompose(_df(shift), ["key"], "ts", "y").collect()}
+    assert base.keys() == shifted.keys()
+    for slot, r in base.items():
+        s = shifted[slot]
+        assert s["slope"] == pytest.approx(r["slope"], abs=1e-4)
+        assert s["intercept"] == pytest.approx(r["intercept"] + shift, abs=1e-4)
+        assert s["seasonal_index"] == pytest.approx(r["seasonal_index"], abs=1e-4)
+        assert s["seasonal_strength"] == pytest.approx(
+            r["seasonal_strength"], abs=1e-4
+        )
