@@ -5,7 +5,8 @@ join key. Writing each table bucketed on that key (same bucket count)
 pays the shuffle ONCE at write time; every subsequent join on the key
 is then exchange-free — Spark's bucketed scan exposes the hash
 clustering, so SortMergeJoin runs with no Exchange on either side
-(asserted in ``tests/test_plan_quality.py``).
+(``test_bucketed_join_has_no_exchange`` in ``tests/test_plan_quality.py``
+reads it from the executed plan).
 
 Native (non-Hive) bucketing: ``bucketBy`` requires ``saveAsTable``;
 tables are registered in the session catalog with an explicit external

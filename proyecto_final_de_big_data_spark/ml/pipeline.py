@@ -23,8 +23,10 @@ from pyspark.ml.pipeline import PipelineSharedReadWrite
 from pyspark.ml.util import DefaultParamsReader
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ..utils.caching import pin, scope
+from ..utils.rows import literal_rows
 from ..utils.threads import run_concurrently
 
 
@@ -171,9 +173,12 @@ def train_and_evaluate(df: DataFrame, cfg: TrainConfig) -> tuple[PipelineModel, 
 
 
 def metrics_frame(spark: SparkSession, metrics: dict, **tags: str) -> DataFrame:
-    """One-row metrics record (reference's resumen dict → JSON sink)."""
+    """One-row metrics record (reference's resumen dict → JSON sink):
+    metrics as doubles, tags as strings, columns in name order."""
     row = {**{k: float(v) for k, v in metrics.items()}, **tags}
-    return spark.createDataFrame([row])
+    names = sorted(row)
+    schema = StructType([StructField(k, DoubleType() if isinstance(row[k], float) else StringType()) for k in names])
+    return literal_rows(spark, [[row[k] for k in names]], schema)
 
 
 def save_model(model: PipelineModel, path: str) -> None:
@@ -198,8 +203,8 @@ def save_model(model: PipelineModel, path: str) -> None:
     independent, so after the overwrite's delete the pipeline metadata
     and every stage are written concurrently
     (``utils/threads.run_concurrently``). The metadata row is built in
-    the JVM (``spark.range``), not with ``createDataFrame`` from a
-    Python list, whose write needs a Python worker.
+    the JVM (``spark.range``), not from a Python list, whose write needs
+    a Python worker.
     """
     spark = SparkSession.active()
     _delete_path(spark, path)

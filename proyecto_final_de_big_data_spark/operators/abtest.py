@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.rows import literal_rows
+
 
 def two_proportion_ztest(
     units: DataFrame,
@@ -779,7 +781,8 @@ def srm_check(
     crit = float(chi2_crit) if chi2_crit is not None else chi2_critical_approx(df_)
 
     spark = units.sparkSession
-    exp_df = spark.createDataFrame(
+    exp_df = literal_rows(
+        spark,
         [(str(arm), float(f_i)) for arm, f_i in sorted(expected.items())],
         "group string, expected_frac double",
     )

@@ -57,8 +57,8 @@ def asof_join(
     rows at equal ts when inclusive, AFTER when exclusive — and a
     running ``last(payload, ignorenulls=True)`` window carries the
     newest right payload onto each left row. One Exchange total; no
-    nested-loop join in the plan (asserted in
-    ``tests/test_plan_quality.py``).
+    nested-loop join in the plan (claimed on ``events_asof_last_order``,
+    ``queries/temporal.py``).
 
     NULL-key semantics follow SQL equality (``NULL = NULL`` is not
     true): NULL-key right rows are dropped before the union, so a

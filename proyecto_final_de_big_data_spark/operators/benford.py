@@ -19,6 +19,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..utils.rows import literal_rows
+
 BENFORD_P = {d: math.log10(1.0 + 1.0 / d) for d in range(1, 10)}
 
 
@@ -61,7 +63,8 @@ def benford_profile(
         .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    spine = spark.createDataFrame(
+    spine = literal_rows(
+        spark,
         [(d, BENFORD_P[d]) for d in range(1, 10)],
         "digit int, expected_frac double",
     )

@@ -71,9 +71,9 @@ def bm25_scores(
     avgdl = doclen.agg(F.avg("dl").alias("avgdl"))
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
 
-    # Query-term occurrences (the IN-filter pushes below the explode,
-    # plan-asserted in tests/test_plan_quality.py). Deliberately NOT
-    # pinned: the tf and df aggs each re-run the map-only tokenize —
+    # Query-term occurrences (the IN-filter pushes below the explode:
+    # bm25_relevance_contract claims has("word#", "IN (")). Deliberately
+    # NOT pinned: the tf and df aggs each re-run the map-only tokenize —
     # two scans of a projection — and keeping the subtree visible in
     # explain() is worth more than collapsing them here (bm25 queries
     # are ~1 s; contrast the pinned index frames in setsim/dedup where

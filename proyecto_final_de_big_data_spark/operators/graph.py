@@ -312,7 +312,7 @@ def pagerank(
     # the per-iteration `nodes LEFT JOIN contribs` dangling-node repair
     # join is gone: ONE join + ONE agg per round instead of two joins +
     # one agg (guide §2.4 — 10 data-keyed joins removed over 10 rounds;
-    # plan diff in plans/r11/pagerank_contract_{before,after}.txt).
+    # plan diff: git show a266533:plans/r11/pagerank_contract_{before,after}.txt).
     # Values are untouched: rank/outdeg is NULL on the loop rows, SUM
     # skips NULLs, and an all-NULL (message-less) group coalesces to the
     # same base mass the left join produced.

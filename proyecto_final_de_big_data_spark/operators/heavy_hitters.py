@@ -85,9 +85,7 @@ def heavy_hitters(
     # materializes no columns.
     total = df.count()
     if total == 0:
-        schema = df.select(*keys).schema
-        empty = df.sparkSession.createDataFrame([], schema)
-        return empty.select(
+        return df.select(*keys).limit(0).select(
             *keys,
             F.lit(0).cast("long").alias("cnt"),
             F.lit(0.0).alias("share"),

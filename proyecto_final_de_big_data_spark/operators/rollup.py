@@ -12,14 +12,13 @@ shuffle by the partition key, no global sort.
 
 from __future__ import annotations
 
-import contextlib
-import io
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..utils.logging import get_logger
+from ..utils.plans import plan_text
 
 
 def _warn_if_unaggregated(df: DataFrame, op: str) -> None:
@@ -32,10 +31,7 @@ def _warn_if_unaggregated(df: DataFrame, op: str) -> None:
     Lineage comes from the public ``explain("extended")`` string (the
     analyzed-plan section) — no private ``_jdf`` access, stable across
     Spark versions."""
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="extended")
-    plan = buf.getvalue()
+    plan = plan_text(df, "extended")
     if "Aggregate" not in plan and "GlobalLimit" not in plan:
         get_logger("rollup").warning(
             "%s applies an unpartitioned window to an input with no upstream "

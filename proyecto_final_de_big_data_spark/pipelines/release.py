@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.expectations import Rule, validate
 from ..operators.profile import profile_columns
 from ..operators.snapshot import release_manifest
+from ..utils.rows import literal_rows
 
 
 def publish_release(
@@ -68,8 +69,8 @@ def publish_release(
         # and the failure summary (writing the lazy frame AND collecting
         # it would run the corpus aggregation twice).
         report_rows = validate(back, rules).collect()
-        spark.createDataFrame(
-            report_rows, "check string, n_violations long, passed boolean"
+        literal_rows(
+            spark, report_rows, "check string, n_violations long, passed boolean"
         ).coalesce(1).write.mode("overwrite").json(f"{out_root}/_quality")
         failed = [r["check"] for r in report_rows if not r["passed"]]
         summary["quality_failed"] = failed

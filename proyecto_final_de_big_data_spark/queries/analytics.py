@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.rollup import argmax_per_group, with_cumulative_share, with_share_of_total
 from ..utils.caching import pin
+from ..utils.plans import count, has, has_any, lacks
 from .registry import register
 
 # D1 — re-aggregation across months
@@ -200,6 +201,11 @@ def q_priority_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "customer_region_decode",
+    claims=(
+        # the dimension decode is a broadcast join
+        has("BroadcastHashJoin"),
+        lacks("SortMergeJoin"),  # dims must not shuffle the fact side
+    ),
     oracle="""
     SELECT r_name AS region_name, n_name AS nation_name,
            count(*) AS n_customers,
@@ -256,6 +262,11 @@ def q_weekend_night_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "salted_event_type_stats",
+    claims=(
+        # phase 1 groupBy (key, salt) + phase 2 groupBy key, each with
+        # map-side partial aggregation -> at least 3 HashAggregate nodes.
+        count("HashAggregate", lo=3),
+    ),
     oracle="""
     SELECT event_type,
            count(*) AS n_events,
@@ -283,6 +294,11 @@ def q_salted_event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "salted_nation_customer_counts",
+    claims=(
+        # the replicated small side broadcasts
+        has("BroadcastHashJoin"),
+        lacks("SortMergeJoin"),  # the big (salted) side must not shuffle
+    ),
     oracle="""
     SELECT n.n_name AS nation_name,
            count(*) AS n_customers,
@@ -384,6 +400,12 @@ def q_approx_distinct_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rolling_user_zscore",
+    claims=(
+        # One shuffle for the user_id window, one for the final event_type
+        # agg — no third Exchange from accidental repartitioning.
+        count("Window", lo=1),
+        count("Exchange (", hi=2),  # tree lines only: "Exchange (n)"
+    ),
     oracle="""
     WITH w AS (
         SELECT user_id, event_type, value,
@@ -466,6 +488,14 @@ def q_hourly_counts_gapfilled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "interpolated_user_series",
+    claims=(
+        # Both IGNORE-NULLS carry directions fuse into ONE Window node (same
+        # partitioning + ordering), and the bucket-scale grid joins by
+        # broadcast — the corpus-scale shuffle is the bucket aggregation alone.
+        count(") Window", lo=1, hi=1),
+        has("BroadcastHashJoin"),
+        lacks("CartesianProduct"),
+    ),
     oracle="""
     WITH obs AS (
         SELECT user_id, date_trunc('hour', ts) AS bucket, avg(value) AS observed
@@ -614,6 +644,13 @@ def q_variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "decile_profile_contract",
+    claims=(
+        # No ntile or global sort anywhere: the plan aggregates a
+        # comparison-chain projection.
+        lacks("ntile"),
+        lacks("rangepartitioning"),
+        count(") Exchange", lo=1, hi=1),  # only the profile agg
+    ),
     oracle="""
     WITH b AS (
         SELECT quantile_cont(l_extendedprice,
@@ -982,6 +1019,13 @@ def q_pagerank_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "event_transition_matrix",
+    claims=(
+        lacks("CartesianProduct"),
+        lacks("BroadcastNestedLoopJoin"),
+        # exactly one data-scale window (the user-keyed lead); the
+        # normalization window runs over the types^2 matrix after the agg.
+        count("(user_id", lo=1),
+    ),
     oracle="""
     WITH pairs AS (
         SELECT event_type AS from_type,
@@ -1018,6 +1062,14 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "session_path_profile",
+    claims=(
+        # The path build is collect_list+array_sort INSIDE the session agg:
+        # the only Window nodes belong to sessionize (lag + running sum,
+        # sharing one sort); the path stage itself must be agg-only.
+        lacks("CartesianProduct"),
+        count("Window (", hi=2),  # sessionize's two passes share a sort
+        has("array_sort"),
+    ),
     oracle="""
     WITH us AS (
         SELECT user_id, event_id, event_type, ts, epoch_us(ts) AS t
@@ -1229,6 +1281,14 @@ def q_cmh_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "effect_size_contract",
+    claims=(
+        # Six sufficient sums in ONE conditional agg + closed-form
+        # projection: no window, no join, no Python anywhere.
+        lacks("CartesianProduct"),
+        lacks("PythonUDF"),
+        lacks("Window"),
+        lacks("SortMergeJoin", "BroadcastHashJoin"),
+    ),
     oracle="""
     WITH ev AS (
         SELECT event_type,
@@ -1376,8 +1436,25 @@ def q_ab_test_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _names_fit_blocking_zones(cu: DataFrame) -> DataFrame:
+    """``cu`` with a raising filter on every ``c_name`` that is not 18
+    characters long. The filter reads ``c_name``, which the join keys
+    need anyway, so column pruning cannot drop it; a NULL name passes
+    (it joins nothing)."""
+    n = F.length("c_name")
+    msg = F.concat(F.lit("fuzzy_name_match_profile: blocking zones assume 18-char names: got "), n.cast("string"))
+    return cu.filter(F.when(n != 18, F.raise_error(msg).cast("boolean")).otherwise(F.lit(True)))
+
+
 @register(
     "fuzzy_name_match_profile",
+    claims=(
+        # Candidates form by equi-join on block keys — never an all-pairs
+        # product, which is what the blocking exists to prevent.
+        lacks("CartesianProduct"),
+        lacks("BroadcastNestedLoopJoin"),
+        has("blocking zones assume 18-char names"),  # the length guard is in the plan
+    ),
     oracle="""
     WITH names AS (
         SELECT c_name FROM customer WHERE c_custkey % 4 = 1
@@ -1426,7 +1503,13 @@ def q_ab_test_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_fuzzy_name_match_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.fuzzyjoin import multipass_edit_distance_self_join
 
-    cu = (
+    # The three blocking zones below are fixed character positions of
+    # the fixture's 18-character ``Customer#000xxxxxx`` names: 1-9 the
+    # prefix, 10-12 the constant '000', 13-18 the varying digits. Their
+    # union covers every distance-1 substitution only in that shape, so
+    # a name of another length fails the query at action time instead
+    # of silently losing pairs.
+    cu = _names_fit_blocking_zones(
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") % 4 == 1)
         .select("c_name")
@@ -1499,6 +1582,14 @@ def q_event_type_trend_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mann_kendall_contract",
+    claims=(
+        # The O(n^2) pair stage is a KEY-equi self-join over the
+        # pre-aggregated day grid (never a cartesian); Sen's median is the
+        # percentile AGGREGATE, so no window appears at all.
+        lacks("CartesianProduct"),
+        lacks("PythonUDF"),
+        lacks("Window"),
+    ),
     oracle="""
     WITH daily AS (
         SELECT event_type,
@@ -1727,6 +1818,14 @@ def q_survival_km_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "nelson_aalen_contract",
+    claims=(
+        # Cumulative hazard windows run over the duration grid (the KM
+        # answer-scale posture); the only nested-loop is the 1-row tmax
+        # frame; no Python.
+        lacks("CartesianProduct"),
+        lacks("PythonUDF"),
+        has("Window"),
+    ),
     oracle="""
     WITH life AS (
         SELECT user_id, min(ts) AS f, max(ts) AS l FROM events GROUP BY 1
@@ -2033,6 +2132,13 @@ def q_robust_outlier_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "categorical_association_contract",
+    claims=(
+        # Missing-cell chi2 mass is folded in algebraically: no |A|x|B|
+        # cross product and no global window — cells, marginals and totals
+        # are all hash aggregations + equi-joins.
+        lacks("CartesianProduct"),
+        lacks("Window ("),
+    ),
     oracle="""
     WITH base AS (
         SELECT year(o_orderdate) AS order_year,
@@ -2110,6 +2216,14 @@ def q_categorical_association_contract(
 
 @register(
     "ewma_anomaly_contract",
+    claims=(
+        # The sequential recursion is localized to one array fold per key:
+        # no Window operator (a running-state window would single-partition
+        # under by=[] misuse), no cartesian; residual scale is a keyed agg.
+        lacks("Window ("),
+        lacks("CartesianProduct"),
+        has("aggregate("),  # the higher-order-function fold
+    ),
     oracle="""
     WITH daily AS (
         SELECT event_type,
@@ -2194,6 +2308,13 @@ def q_ewma_anomaly_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "holt_forecast_contract",
+    claims=(
+        # One exchange for the daily grid agg, one for the per-key collect,
+        # one for the sigma join-back — nothing at raw-event scale after the
+        # first, and no all-pairs join.
+        lacks("CartesianProduct"),
+        lacks("BroadcastNestedLoopJoin"),
+    ),
     oracle="""
     WITH daily AS (
         SELECT event_type,
@@ -2445,6 +2566,14 @@ def q_holt_winters_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "autocorrelation_contract",
+    claims=(
+        # The lag fan-out is a tiny broadcast spine (BNLJ against 7 rows is
+        # fine); the series self-join itself must be an equi-join on
+        # (event_type, day+lag) — never a cartesian product.
+        lacks("CartesianProduct"),
+        lacks("Window ("),
+        has_any("BroadcastHashJoin", "SortMergeJoin"),
+    ),
     oracle="""
     WITH daily AS (
         SELECT event_type,
@@ -2509,6 +2638,15 @@ def q_autocorrelation_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ccf_lead_lag_contract",
+    claims=(
+        # The x15 lag spine and the 1-row sufficient-stats frame both reach
+        # the join side broadcast; raw-moment arithmetic means no window and
+        # no Python anywhere.
+        lacks("CartesianProduct"),
+        lacks("PythonUDF"),
+        lacks("Window"),
+        has_any("BroadcastNestedLoopJoin", "BroadcastHashJoin"),
+    ),
     oracle="""
     WITH daily AS (
         SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
@@ -2588,6 +2726,14 @@ def q_ccf_lead_lag_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pacf_contract",
+    claims=(
+        # The D-L recursion is a projection over the 4-value ACF pivot: one
+        # conditional agg + a 4-literal posexplode (Generate); the only
+        # joins are the ACF stage's keyed self-join + broadcast spine.
+        lacks("CartesianProduct"),
+        lacks("PythonUDF"),
+        has("Generate"),
+    ),
     oracle="""
     WITH daily AS (
         SELECT event_type,
@@ -2691,6 +2837,13 @@ def q_pacf_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "attribution_contract",
+    claims=(
+        # Group formation is the reverse cumulative window, never a
+        # touch-x-conversion range join (BNLJ/cartesian at event scale).
+        lacks("CartesianProduct"),
+        lacks("BroadcastNestedLoopJoin"),
+        count("Window (", hi=2),
+    ),
     oracle="""
     WITH ev AS (
         SELECT user_id AS u, ts, event_type AS channel, event_id AS eid,
@@ -2770,6 +2923,12 @@ def q_attribution_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "jackknife_ratio_contract",
+    claims=(
+        # The S leave-one-out replicates are algebra on per-stratum sums —
+        # one data-scale groupBy, no window, no shuffle join, no S scans.
+        lacks("SortMergeJoin", "Join"),
+        count("Scan parquet", hi=2),  # one scan; tree + detail
+    ),
     oracle="""
     WITH per AS (
         SELECT l_suppkey % 16 AS st,
@@ -2833,6 +2992,11 @@ def q_jackknife_ratio_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "benford_profile_contract",
+    claims=(
+        # digit groupBy, joined to the literal spine without a shuffle
+        lacks("SortMergeJoin", "CartesianProduct"),
+        count("Scan parquet", hi=2),  # one scan; tree + detail
+    ),
     oracle="""
     WITH vals AS (
         SELECT abs(CAST(l_extendedprice AS DOUBLE)) AS x
@@ -2886,6 +3050,13 @@ def q_benford_profile_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cusum_changepoint_contract",
+    claims=(
+        # The recursion lives in an array fold after ONE groupBy collect —
+        # no row-window over the series, no self-join, no iteration loop.
+        lacks("Window ("),
+        lacks("Join"),
+        has("Generate"),  # posexplode back to series cardinality
+    ),
     oracle="""
     WITH daily AS (
         SELECT event_type,
@@ -2981,6 +3152,14 @@ def q_cusum_changepoint_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lorenz_gini_contract",
+    claims=(
+        # The exact Gini needs every row ranked; the operator instead
+        # aggregates to <=n_buckets cells (one data-scale shuffle) and walks
+        # the curve on answer-scale windows.
+        lacks("Join"),
+        count("Scan parquet", hi=2),  # one scan; tree + detail
+        has("HashAggregate"),
+    ),
     oracle="""
     WITH cells AS (
         SELECT LEAST(GREATEST(CAST(floor((CAST(l_extendedprice AS DOUBLE)
@@ -3124,6 +3303,14 @@ def q_basket_size_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "triangle_count_contract",
+    claims=(
+        # Degree orientation is a struct-key comparison, per-vertex counts
+        # are groupBys — a Window here would mean a global vertex rank
+        # sneaked back in (the single-partition hazard the operator exists
+        # to avoid).
+        lacks("Window"),
+        lacks("CartesianProduct"),
+    ),
     oracle="""
     WITH e0 AS (
         SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -3524,6 +3711,14 @@ def _bfs_oracle(hops: int = 6) -> str:
 
 @register(
     "bfs_distances_contract",
+    claims=(
+        # Six expansion rounds: frontier semi-joins + anti-joins keyed on
+        # node id — never a cartesian, never a Python worker, never a window
+        # (the census is a plain groupBy).
+        lacks("CartesianProduct"),
+        lacks("PythonUDF", "ArrowEval"),
+        lacks("Window"),
+    ),
     oracle=_bfs_oracle(6),
     description="Multi-source BFS hop distances (operators/graph.py:"
     "bfs_distances, CLRS §22.2 / Malewicz et al. SIGMOD'10 Pregel) "
@@ -3578,6 +3773,17 @@ def q_bfs_distances_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "adamic_adar_contract",
+    claims=(
+        # Candidate pairs exclude real edges via LeftAnti; top-25 is
+        # TakeOrderedAndProject; the ONLY window is the final rank
+        # row_number over the already-limited frame — never a pair-scale
+        # window, cartesian, or Python worker.
+        lacks("CartesianProduct"),
+        lacks("PythonUDF"),
+        has("LeftAnti"),
+        has("TakeOrderedAndProject"),
+        count("Window (", hi=1),
+    ),
     oracle="""
     WITH e0 AS MATERIALIZED (
         SELECT DISTINCT
@@ -3671,6 +3877,12 @@ def q_adamic_adar_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rfm_segment_profile",
+    claims=(
+        # Quintile scores come from quantile BOUNDS + comparisons; ntile (a
+        # global customer sort) must never appear.
+        lacks("Window"),
+        lacks("ntile"),
+    ),
     oracle="""
     WITH pc AS (
         SELECT o_custkey AS customer,
@@ -4186,6 +4398,15 @@ def q_bootstrap_ci_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rater_agreement_contract",
+    claims=(
+        # kappa reduces a label CONTINGENCY: the only joins are over
+        # k-cardinality marginal frames (broadcast NL join of aggregates),
+        # never a corpus-scale CartesianProduct, and the whole chain stays
+        # JVM-side.
+        lacks("CartesianProduct"),
+        lacks("BatchEvalPython"),
+        lacks("ArrowEvalPython"),
+    ),
     oracle="""
     WITH base AS (
         SELECT event_id,
@@ -4427,6 +4648,14 @@ def q_experiment_power_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "seasonal_decomposition_contract",
+    claims=(
+        # Pass 2 joins the key-cardinality trend frame onto the series via
+        # broadcast — never a shuffle of the fact side on the key — and the
+        # slot-level strength window partitions by key.
+        has("BroadcastHashJoin"),
+        lacks("SortMergeJoin"),
+        lacks("SinglePartition"),
+    ),
     oracle="""
     WITH daily AS (
         SELECT event_type,
@@ -4516,6 +4745,15 @@ def q_seasonal_decomposition_contract(
 
 @register(
     "anova_oneway_contract",
+    claims=(
+        # Sufficient statistics: per-group agg + group-cardinality reduce;
+        # the deviations-from-mean restatement would need a second scan or
+        # a window — neither may appear.
+        lacks("Window"),
+        lacks("BatchEvalPython"),
+        lacks("ArrowEvalPython"),
+        lacks("Join"),
+    ),
     oracle="""
     WITH g AS (
         SELECT l_returnflag AS grp,
@@ -4877,6 +5115,13 @@ def q_neyman_allocation_contract(
 
 @register(
     "fs_linkage_contract",
+    claims=(
+        # The u fits reach the scorer as plan literals, so the only joins
+        # left are the blocked-candidate equi-joins, which must broadcast;
+        # nothing may cartesian.
+        has_any("BroadcastNestedLoopJoin", "BroadcastHashJoin"),
+        lacks("CartesianProduct"),
+    ),
     oracle="""
     WITH cust AS (
         SELECT c_custkey AS k, c_nationkey AS nat, c_custkey // 100 AS blk,
@@ -5052,6 +5297,14 @@ def q_seq_patterns_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "msprt_contract",
+    claims=(
+        # The cumulative/running-max windows sort DAY-cardinality rows (30 at
+        # any SF): a single-partition window over the daily frame is the
+        # intended answer-scale shape, reached through a partial-aggregated
+        # groupBy, not a raw sort.
+        count("HashAggregate", lo=2),  # map-side combine on units
+        lacks("CartesianProduct"),
+    ),
     oracle="""
     WITH units AS (
         SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,

@@ -23,6 +23,8 @@ from ..io.export import export_table, read_exported
 from ..operators.canonicalize import canonicalize
 from ..operators.features import with_duration_minutes
 from ..utils.caching import pin
+from ..utils.plans import count, has, lacks
+from ..utils.rows import literal_rows
 from .registry import register
 
 # One shared small aggregate for the round-trip family: stable, typed
@@ -275,7 +277,8 @@ def q_approx_quantile_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "itself needs NO exchange — the one-time write shuffle replaces every "
     "subsequent join shuffle (the 100-TB fact-fact join strategy). The "
     "oracle pins that the bucketed write+join round-trip loses nothing; "
-    "the exchange-free plan shape is asserted in tests/test_plan_quality.py.",
+    "the exchange-free plan shape is asserted on the executed plan by "
+    "test_bucketed_join_has_no_exchange in tests/test_plan_quality.py.",
 )
 def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _bucketed_orders_customer_join(spark, sf_dir)
@@ -387,7 +390,8 @@ def q_compaction_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(frag, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
-    return spark.createDataFrame(
+    return literal_rows(
+        spark,
         [
             (
                 row["n_rows"],
@@ -697,6 +701,13 @@ def q_media_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hll_mergeable_rollup_contract",
+    claims=(
+        # Both the sketch build and the union-merge run partial-then-final
+        # (map-side combine), so only pre-combined sketch bytes cross each
+        # exchange. "HashAggregate" also matches ObjectHashAggregate.
+        count("HashAggregate", lo=2),
+        lacks("CartesianProduct"),
+    ),
     oracle="""
     SELECT count(DISTINCT date_trunc('day', ts)) AS n_days,
            count(DISTINCT user_id) AS exact_distinct_users,
@@ -913,6 +924,14 @@ def q_python_datasource_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "zorder_cells_contract",
+    claims=(
+        # The layout's only shuffle is the range partitioning that IS the
+        # layout; the Morton key is a codegen'd projection and the sort
+        # stays within partitions.
+        has("rangepartitioning"),
+        lacks("CartesianProduct", "Join"),
+        count(") Exchange", lo=2, hi=2),  # the range layout + the cell-profile agg
+    ),
     oracle="""
     WITH b AS (
         SELECT min(l_quantity) AS q0, max(l_quantity) AS q1,
@@ -1023,6 +1042,12 @@ def q_schema_evolution_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "incremental_agg_contract",
+    claims=(
+        # union-and-reaggregate at grain cardinality: no join anywhere,
+        # one Union of the two snapshot branches.
+        lacks("Join"),
+        has("Union"),
+    ),
     oracle="""
     SELECT event_type,
            CAST(count(value) AS BIGINT) AS n,

@@ -15,6 +15,7 @@ from ..operators.similarity import cosine_topk
 from ..operators.similarity_ivf import ivf_cosine_topk
 from ..operators.text import LANG_MARKERS, fingerprint, lang_guess, quality_score, token_count
 from ..utils.caching import pin
+from ..utils.plans import count, has, lacks
 from .registry import register
 
 # --------------------------------------------------------------------------
@@ -57,6 +58,11 @@ def q_dedup_exact_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ngram_jaccard_pairs",
+    claims=(
+        # exact Jaccard pairs form by equi-join, never all pairs
+        lacks("CartesianProduct"),
+        lacks("BroadcastNestedLoopJoin"),
+    ),
     oracle=r"""
     WITH toks AS (
         SELECT doc_id, text,
@@ -520,6 +526,12 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "media_resize",
+    claims=(
+        # scan -> encode -> mapInPandas, no wide transform: binary payloads
+        # must reach the Python workers without an Exchange in between.
+        lacks("Exchange"),
+        has("MapInPandas"),
+    ),
     oracle="""
     SELECT doc_id,
            16 AS width, 16 AS height,
@@ -542,6 +554,12 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "media_frame_sample",
+    claims=(
+        # scan -> encode -> mapInPandas, no wide transform: binary payloads
+        # must reach the Python workers without an Exchange in between.
+        lacks("Exchange"),
+        has("MapInPandas"),
+    ),
     oracle="""
     WITH f AS (
         SELECT doc_id, (octet_length(encode(text)) // 64)::INT AS n_frames
@@ -606,6 +624,12 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "knn_ann_ivf",
+    claims=(
+        # corpus side: cell assignment is a projection (no shuffle before the
+        # join); candidates form by broadcasting the tiny exploded query side.
+        has("BroadcastHashJoin"),
+        lacks("CartesianProduct"),
+    ),
     oracle=None,  # approximate by construction → rows-only check; recall
     # is quantified by knn_ann_ivf_recall below.
     description="IVF (inverted-file) approximate cosine top-5: deterministic "
@@ -1040,6 +1064,12 @@ def _cluster_split_oracle() -> str:
 
 @register(
     "cluster_safe_split_profile",
+    claims=(
+        # Component labels attach to the corpus by an equi-join on the id;
+        # the split itself stays a projection (no extra Exchange after it).
+        lacks("CartesianProduct"),
+        lacks("BroadcastNestedLoopJoin"),
+    ),
     oracle=_cluster_split_oracle(),
     description="Leakage-safe train/eval split (operators/split.py "
     "cluster_safe_split): the word-3-gram Jaccard pair graph (threshold "
@@ -1108,6 +1138,13 @@ def q_stratified_sample_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pack_chunks_profile",
+    claims=(
+        # Sharded window: exactly one Exchange before the window (the shard
+        # hashpartitioning) on the packing side; never a global
+        # single-partition sort.
+        has("Window"),
+        lacks("SinglePartition"),
+    ),
     oracle=r"""
     WITH toks AS (
         SELECT lang, doc_id,
@@ -1156,6 +1193,12 @@ def q_pack_chunks_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "decontamination_profile",
+    claims=(
+        # The benchmark shingle set must broadcast (eval sets are tiny); a
+        # SortMergeJoin here would shuffle the full corpus shingle explode.
+        has("BroadcastHashJoin"),
+        lacks("CartesianProduct"),
+    ),
     oracle=r"""
     WITH corpus AS (
         SELECT * FROM documents WHERE doc_id < 500 AND doc_id % 97 != 0
@@ -1223,6 +1266,9 @@ def q_decontamination_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "incremental_dedup_profile",
+    claims=(
+        lacks("CartesianProduct"),  # incremental dedup never all pairs
+    ),
     oracle="""
     WITH hist AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
     batch AS (
@@ -1318,6 +1364,12 @@ def _mix_oracle() -> str:
 
 @register(
     "temperature_mix_profile",
+    claims=(
+        # Per-stratum rates must reach the corpus as a broadcast, never by
+        # shuffling the fact side on the stratum key.
+        has("BroadcastHashJoin"),
+        lacks("SortMergeJoin"),
+    ),
     oracle=_mix_oracle(),
     description="Temperature-alpha=0.5 language resampling (keep rate "
     "(n_lang/n_min)^(alpha-1), rarest language keeps 100%) — the standard "
@@ -1376,6 +1428,13 @@ def _epoch_oracle() -> str:
 
 @register(
     "epoch_upsample_profile",
+    claims=(
+        # Stratum weights reach the corpus as a broadcast; the copies come
+        # from a Generate (explode) — never a shuffle of the fact side.
+        has("BroadcastHashJoin"),
+        lacks("SortMergeJoin"),
+        has("Generate"),
+    ),
     oracle=_epoch_oracle(),
     description="Temperature-alpha=0.5 EPOCH UPSAMPLING "
     "(operators/mixing.py epoch_upsample): repeat factor "
@@ -1676,6 +1735,14 @@ def _manifest_oracle() -> str:
 
 @register(
     "release_manifest_contract",
+    claims=(
+        # One partial+final aggregation over a pure projection: no joins, no
+        # windows, exactly one Exchange (the grouped final agg). Count
+        # detail headers "(n) Node", which appear exactly once per node.
+        count(") HashAggregate", lo=2, hi=2),
+        count(") Exchange", lo=1, hi=1),
+        lacks("Join", "Window"),
+    ),
     oracle=_manifest_oracle(),
     description="Content-addressed release manifest (operators/snapshot.py "
     "release_manifest): per (lang, source) group, row count, id checksum, "
@@ -1880,6 +1947,14 @@ def q_token_budget_selection_profile(spark: SparkSession, sf_dir: str) -> DataFr
 
 @register(
     "chunk_overlap_profile",
+    claims=(
+        # Chunking is map-only (Generate + slice projection): every exchange
+        # belongs to the profile aggregation (two, because count_distinct
+        # plans as a two-phase expand-agg), none to the chunk expansion.
+        has("Generate"),
+        count(") Exchange", lo=2, hi=2),
+        lacks("Join", "rangepartitioning"),
+    ),
     oracle=r"""
     WITH w AS (
         SELECT doc_id, lang,
@@ -1945,6 +2020,13 @@ def q_chunk_overlap_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "weighted_sample_profile",
+    claims=(
+        # The cumulative-weight window must be PARTITIONED (per-stratum
+        # budgets) — an unpartitioned window would funnel the corpus
+        # through one task.
+        has("Window"),
+        has("hashpartitioning(lang"),  # the window's exchange carries the stratum key
+    ),
     oracle="""
     WITH c AS (
         SELECT doc_id, lang, n_chars,
@@ -2040,6 +2122,14 @@ def q_embedding_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bm25_relevance_contract",
+    claims=(
+        # The query-term IN-filter sits below the tf/df aggregations (pushed
+        # into the exploded token stream), and per-term idf joins broadcast
+        # — never a shuffle join keyed on the full vocabulary.
+        lacks("CartesianProduct"),
+        count("BroadcastHashJoin", lo=1),
+        has("word#", "IN ("),  # the literal IN-list filter on the exploded token column
+    ),
     oracle="""
     WITH tok AS (
         SELECT doc_id,
@@ -2259,6 +2349,14 @@ def q_knn_ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "knn_ann_ivf_pq_refine_recall",
+    claims=(
+        # The exact re-rank broadcasts the answer-scale candidate and query
+        # frames onto the corpus scan — never a cartesian product and never
+        # a sort-merge shuffle of the float vectors.
+        has("BroadcastHashJoin"),
+        lacks("CartesianProduct"),
+        lacks("SortMergeJoin"),
+    ),
     oracle="""
     WITH q AS (
         SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
@@ -2317,6 +2415,11 @@ def q_knn_ann_ivf_pq_refine_recall(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "hybrid_search_rrf",
+    claims=(
+        # Fusion aggregates a Union of two windowed top-N legs; the corpus
+        # scan feeds the legs (bm25/cosine), not the fused region.
+        has("Union"),
+    ),
     oracle=r"""
     WITH tok AS (
         SELECT doc_id,
@@ -2421,6 +2524,13 @@ def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "negative_sampling_contract",
+    claims=(
+        # Exactly one anti-join operator (the positives exclusion), a hash
+        # or sort-merge one: "Join type" prints once per join node.
+        count("Join type: LeftAnti", lo=1, hi=1),
+        lacks("BroadcastNestedLoopJoin LeftAnti"),
+        lacks("CartesianProduct"),  # never user x item
+    ),
     oracle="""
     WITH pos AS (
         SELECT DISTINCT o_custkey AS u, l_partkey AS it
@@ -2579,6 +2689,15 @@ def q_weighted_ksample_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "winnowing_fingerprint_contract",
+    claims=(
+        # Fingerprint selection is a higher-order-function projection: one
+        # Generate(explode) fed by the scan, no join, no Python eval; the
+        # only exchange belongs to the per-doc profile aggregation.
+        has("Generate"),
+        lacks("BatchEvalPython"),
+        lacks("ArrowEvalPython"),
+        lacks("Join"),
+    ),
     oracle="""
     WITH sub AS (
         SELECT doc_id,
@@ -2945,6 +3064,14 @@ def q_curate_span_strip_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cosine_allpairs_contract",
+    claims=(
+        # Candidate generation is the prefix-term equi-join (hash join on
+        # the term), never a cartesian product over documents, and nothing
+        # in the pipeline drops to Python.
+        lacks("CartesianProduct"),
+        lacks("BatchEvalPython"),
+        lacks("ArrowEvalPython"),
+    ),
     oracle=r"""
     WITH d AS (
         SELECT doc_id, text FROM documents WHERE doc_id < 500
@@ -3004,6 +3131,15 @@ def q_cosine_allpairs_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dsir_selection_contract",
+    claims=(
+        # Feature hashing is a HOF projection (no Python), the log-ratio
+        # table (<= 1024 rows) broadcasts onto the per-doc feature frame,
+        # and the final selection is a top-k — never a cartesian product.
+        lacks("BatchEvalPython"),
+        lacks("ArrowEvalPython"),
+        lacks("CartesianProduct"),
+        has("BroadcastHashJoin"),
+    ),
     oracle=r"""
     WITH ws AS (
         SELECT doc_id, lang,
@@ -3084,6 +3220,12 @@ def q_dsir_selection_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "gopher_rules_contract",
+    claims=(
+        # Every Gopher signal is a HOF projection: the only exchange is the
+        # final per-lang rollup's — nothing shuffles documents to score them.
+        count("Exchange (", hi=1),  # tree nodes "Exchange (n)", not the detail section
+        lacks("CartesianProduct"),
+    ),
     oracle=r"""
     WITH sig AS (
         SELECT lang,
@@ -3213,6 +3355,11 @@ def q_gopher_rules_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "jl_projection_contract",
+    claims=(
+        # Projection is map-only; the audit's pair join is over the bounded
+        # 30-row sample (broadcast NL over id_a < id_b is the right shape).
+        lacks("SortMergeJoin"),
+    ),
     oracle="""
     WITH sample AS (
         SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 30
@@ -3278,6 +3425,17 @@ def q_jl_projection_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pmi_collocations_contract",
+    claims=(
+        # The bigram stream comes from a per-document arrays_zip projection
+        # (Generate over the scan), never a token-scale self-join; totals
+        # reach the scorer as broadcast 1-row frames.
+        lacks("CartesianProduct"),
+        has("TakeOrderedAndProject"),
+        lacks("PythonUDF"),
+        # the ONLY window is the final rank row_number over the already
+        # 20-row-limited frame (rank after the limit, the keyness shape)
+        count("Window (", hi=2),
+    ),
     oracle=r"""
     WITH toks AS (
         SELECT list_filter(string_split_regex(lower(text), '\s+'),

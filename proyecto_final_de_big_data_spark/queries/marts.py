@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.binning import with_bin
 from ..operators.clean import clip_to_quantiles
+from ..utils.plans import count, has, lacks
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -33,6 +34,9 @@ from .registry import register
 
 @register(
     "kpis",
+    claims=(
+        count("HashAggregate", lo=2),  # map-side combine before the shuffle
+    ),
     oracle="""
     SELECT count(*) AS total_rows,
            avg(l_quantity) AS avg_qty,
@@ -119,6 +123,9 @@ def _topk_by_count(df: DataFrame, key: str, alias: str, k: int) -> DataFrame:
 
 @register(
     "top_suppliers",
+    claims=(
+        has("TakeOrderedAndProject"),  # top-k: no materialized global sort
+    ),
     oracle="""
     SELECT l_suppkey AS supplier_key,
            count(*) AS total_rows,
@@ -365,6 +372,15 @@ def q_outlier_clipped_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "grouped_outlier_clip_profile",
+    claims=(
+        # The per-group bounds frame broadcasts back onto the fact scan — no
+        # sort-merge join, no second corpus shuffle. eqNullSafe compiles to
+        # a hash-joinable key, so null-safety costs no plan quality: still a
+        # BroadcastHashJoin, never a nested loop.
+        has("BroadcastHashJoin"),
+        lacks("BroadcastNestedLoopJoin"),
+        lacks("SortMergeJoin"),
+    ),
     oracle="""
     WITH bounds AS (
         SELECT l_returnflag,

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..ml.pipeline import TrainConfig, build_pipeline, metrics_frame, train_and_evaluate
 from ..utils.caching import pin, scope
+from ..utils.plans import count, has, lacks
+from ..utils.rows import literal_rows
 from .registry import register
 
 
@@ -157,7 +159,8 @@ def q_ml_train_linear_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics = evaluate(model.transform(test), "l_extendedprice")
     rows_train = train.count()
     coef = list(lr_model.coefficients)
-    return spark.createDataFrame(
+    return literal_rows(
+        spark,
         [
             (
                 round(float(lr_model.intercept), 2),
@@ -249,7 +252,8 @@ def q_ml_tree_ensemble_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
                     int(metrics["r2"] >= r2_band),
                 )
             )
-    return spark.createDataFrame(
+    return literal_rows(
+        spark,
         frames,
         "algorithm string, n_test long, n_importances int, "
         "importances_sum_ok int, top_feature_is_quantity int, "
@@ -482,6 +486,16 @@ def q_text_quality_classifier_contract(spark: SparkSession, sf_dir: str) -> Data
 
 @register(
     "ml_cv_contract",
+    claims=(
+        # The k fold models must NOT cost k training passes: one groupBy
+        # shuffle collects per-fold sufficient statistics, the solve runs
+        # at k-cardinality, and the scoring join broadcasts the k
+        # coefficient rows — never a shuffle join keyed on the fold.
+        lacks("CartesianProduct"),
+        lacks("SortMergeJoin"),
+        count("BroadcastHashJoin", lo=1),
+        lacks("Window ("),
+    ),
     oracle="""
     WITH base AS (
         SELECT l_orderkey % 4 AS fold,
@@ -598,6 +612,14 @@ _EVAL_BASE_SQL = """
 
 @register(
     "ml_auc_contract",
+    claims=(
+        # AUC comes from the bucket aggregation (map-side combined), never
+        # the rank-sum global sort of scored rows: the only Sort allowed is
+        # the answer-scale one feeding the <=n_buckets window.
+        lacks("SortMergeJoin", "CartesianProduct"),
+        count("Window (", lo=1, hi=1),
+        has("HashAggregate"),  # partial+final bucket counts
+    ),
     oracle=f"""
     WITH base AS ({_EVAL_BASE_SQL}),
     cells AS (
@@ -642,6 +664,12 @@ def q_ml_auc_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_classification_report_contract",
+    claims=(
+        # k thresholds = k conditional sums in ONE aggregation; adding a
+        # threshold must never add a scan or any join.
+        lacks("Join", "Window ("),
+        count("Scan parquet", hi=2),  # one scan; tree + detail
+    ),
     oracle=f"""
     WITH base AS ({_EVAL_BASE_SQL}),
     t(threshold) AS (VALUES (-0.2), (0.0), (0.2)),
@@ -689,6 +717,10 @@ def q_ml_classification_report_contract(
 
 @register(
     "ml_lift_table_contract",
+    claims=(
+        # answer-scale totals ride a window, never a shuffle join
+        lacks("SortMergeJoin", "CartesianProduct"),
+    ),
     oracle=f"""
     WITH base AS ({_EVAL_BASE_SQL}),
     b AS (
@@ -735,6 +767,12 @@ def q_ml_lift_table_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "woe_iv_contract",
+    claims=(
+        # class totals ride a window over the aggregate, not a second scan
+        lacks("Join"),
+        count("Scan parquet", hi=2),  # one scan; tree + detail
+        has("HashAggregate"),
+    ),
     oracle="""
     WITH per AS (
         SELECT o_orderpriority AS category,
@@ -943,6 +981,16 @@ def q_conformal_interval_contract(
 
 @register(
     "learning_curve_contract",
+    claims=(
+        # One groupBy(slice) + one test-side agg: the nested training sets
+        # come from a cumulative window over the 5-row per-slice frame,
+        # never a refit scan per fraction; no Python.
+        lacks("BatchEvalPython"),
+        lacks("ArrowEvalPython"),
+        # the 4-row model frame rides a broadcast nested-loop by design; a
+        # CartesianProduct (non-broadcast) must never appear
+        lacks("CartesianProduct"),
+    ),
     oracle="""
     WITH base AS (
         SELECT l_orderkey % 5 AS slc,
@@ -1037,6 +1085,20 @@ def q_learning_curve_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ranking_metrics_contract",
+    claims=(
+        # Both windows (system rank, ideal ordering) partition per query
+        # over answer-scale frames: no global unpartitioned sort of the
+        # joined frame, no cartesian, no Python.
+        lacks("CartesianProduct"),
+        lacks("PythonUDF"),
+        lacks("SinglePartition"),
+        # system top-10 + ideal ordering; a WindowGroupLimit always sits
+        # under the rank Window it pre-filters for
+        count("Window (", lo=2),
+        count("windowspecdefinition(custkey", lo=2),  # both specs partition on the query key
+        count("hashpartitioning(custkey", lo=1),
+        has("explode"),  # the 2-literal k-frame
+    ),
     oracle="""
     WITH j AS (
         SELECT CAST(o.o_custkey AS BIGINT) AS custkey,

@@ -20,6 +20,7 @@ from ..operators.quality import with_repetition_stats
 from ..operators.tfidf import top_terms_by_tfidf
 from ..utils.caching import pin
 from ..utils.settings import STREAM_STATE_PARTITIONS, overridden
+from ..utils.plans import count, has, lacks
 from .registry import register
 
 
@@ -194,6 +195,10 @@ def q_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tfidf_top_terms",
+    claims=(
+        count("HashAggregate", lo=4),  # tf and df aggs, each 2-phase
+        lacks("CartesianProduct"),
+    ),
     oracle=r"""
     WITH tok AS (
         SELECT doc_id, lang,
@@ -791,6 +796,12 @@ def q_l_diversity_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ccnet_bucket_contract",
+    claims=(
+        # Scoring joins the 20-row vocab and the per-lang bounds by
+        # broadcast; the corpus token stream must not sort-merge anywhere.
+        lacks("SortMergeJoin"),
+        has("BroadcastHashJoin"),
+    ),
     oracle=r"""
     WITH toks AS (
         SELECT doc_id, lang,

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.rollup import argmax_per_group
+from ..utils.plans import count, has, has_any, lacks
 from .registry import register
 
 # --------------------------------------------------------------------------
@@ -370,6 +371,13 @@ def _pivot_priorities_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "priority_pivot_by_year",
+    claims=(
+        # The literal value list means no distinct-discovery pass: pivot is
+        # two chained aggregations, (yr, priority) then yr, so exactly two
+        # exchanges, the second over group-cardinality rows only. No join.
+        count(") Exchange", lo=2, hi=2),
+        lacks("Join"),
+    ),
     oracle="""
     SELECT year(o_orderdate) AS yr,
            count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS p_urgent,
@@ -401,6 +409,13 @@ def q_priority_pivot_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "priority_unpivot_round_trip",
+    claims=(
+        # Unpivot is a projection-time expansion (Expand/Generate): the
+        # round trip shuffles only for the upstream pivot's two aggregations.
+        has_any("Expand", "Generate"),
+        count(") Exchange", lo=2, hi=2),
+        lacks("Join"),
+    ),
     oracle="""
     SELECT year(o_orderdate) AS yr,
            CASE o_orderpriority
@@ -436,6 +451,20 @@ def q_priority_unpivot_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "bloom_pruned_join_contract",
+    claims=(
+        # The bitmap probe sits in a plain Filter fused into the big side's
+        # scan (xxhash64 arithmetic, no Python eval, no extra join or
+        # exchange for the membership test): the orders stream shrinks
+        # BEFORE the join's shuffle/broadcast.
+        has("xxhash64"),
+        lacks("BatchEvalPython"),
+        lacks("ArrowEvalPython"),
+        # exactly one join (the real customer join, broadcast — tree line +
+        # detail block = 2 mentions); membership is a Filter, not a join
+        count("BroadcastHashJoin", lo=2, hi=2),
+        lacks("SortMergeJoin"),
+        lacks("CartesianProduct"),
+    ),
     oracle="""
     SELECT o_orderpriority,
            CAST(count(*) AS BIGINT) AS n_orders,

@@ -13,11 +13,18 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.asof import asof_join, interval_join
+from ..utils.plans import has, has_any, lacks
 from .registry import register
 
 
 @register(
     "events_asof_last_order",
+    claims=(
+        # as-of join: no nested loop, one key shuffle
+        lacks("BroadcastNestedLoopJoin"),
+        lacks("CartesianProduct"),
+        has("Window"),  # carry-forward is a window, not a join
+    ),
     oracle="""
     WITH day_orders AS (
         SELECT o_custkey AS user_id, o_orderdate,
@@ -61,6 +68,12 @@ def q_events_asof_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_in_first_day_window",
+    claims=(
+        lacks("BroadcastNestedLoopJoin"),
+        lacks("CartesianProduct"),
+        # bucketing turned the range predicate into an equi-join
+        has_any("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"),
+    ),
     oracle="""
     WITH win AS (
         SELECT user_id, min(ts) AS w_start,
@@ -268,6 +281,12 @@ def q_time_weighted_avg_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rolling_active_users",
+    claims=(
+        # The sliding distinct comes from a map-side sequence/explode
+        # (Generate), never a cartesian/range join of days x events.
+        has("Generate"),
+        lacks("CartesianProduct"),
+    ),
     oracle="""
     WITH ud AS (
         SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d

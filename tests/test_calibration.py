@@ -10,6 +10,7 @@ from proyecto_final_de_big_data_spark.ml.calibration import (
     isotonic_calibrate,
     pav_fit,
 )
+from proyecto_final_de_big_data_spark.utils.plans import plan_text
 
 
 def test_pav_already_monotone_is_identity():
@@ -108,9 +109,6 @@ def test_calibrate_empty_input_raises(spark):
 
 
 def test_calibrate_application_is_projection_no_join(spark, sf_dir):
-    import contextlib
-    import io
-
     from proyecto_final_de_big_data_spark.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -118,11 +116,7 @@ def test_calibrate_application_is_projection_no_join(spark, sf_dir):
         (F.col("label") % 2 == 1).alias("y"),
     )
     out = isotonic_calibrate(emb, "s", "y", lo=-1.0, hi=1.0, n_buckets=64)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "Join" not in plan  # literal-array lookup, not a join
+    assert "Join" not in plan_text(out)  # literal-array lookup, not a join
     # calibrated values are monotone in score
     rows = sorted(out.collect(), key=lambda r: r["s"])
     cal = [r["calibrated"] for r in rows if r["calibrated"] is not None]

@@ -7,6 +7,8 @@ from __future__ import annotations
 import random
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from proyecto_final_de_big_data_spark.operators.graph import (
@@ -533,3 +535,36 @@ def test_bfs_validation(spark):
 
     with pytest.raises(ValueError, match="max_hops"):
         bfs_distances(e, s, max_hops=0)
+
+
+_SETTINGS = dict(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@given(
+    edges=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=7),
+            st.integers(min_value=0, max_value=7),
+        ),
+        min_size=1,
+        max_size=20,
+    )
+)
+@settings(**_SETTINGS)
+def test_triangle_count_invariants(spark, edges):
+    # Sum of per-vertex triangle counts is divisible by 3 (each
+    # triangle counted at all three corners), and clustering stays in
+    # [0, 1] — for ANY multigraph with loops and repeats.
+    from proyecto_final_de_big_data_spark.operators.graph import triangle_stats
+
+    df = spark.createDataFrame(edges, "src long, dst long")
+    rows = triangle_stats(df).collect()
+    total = sum(r["n_triangles"] for r in rows)
+    assert total % 3 == 0
+    for r in rows:
+        assert 0.0 <= r["clustering"] <= 1.0
+        assert r["n_triangles"] >= 0 and r["degree"] >= 1

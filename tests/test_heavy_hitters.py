@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from proyecto_final_de_big_data_spark.operators.heavy_hitters import heavy_hitters
+from proyecto_final_de_big_data_spark.utils.plans import plan_text
 
 
 def _skewed(spark, n=300_000):
@@ -73,14 +74,8 @@ def test_empty_input_returns_empty_with_schema(spark):
 
 
 def test_sampled_path_plan_broadcasts_candidates(spark):
-    import contextlib
-    import io
-
     out = heavy_hitters(_skewed(spark), "k", 0.01, sample_on=["id"])
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(out)
     # Candidate set broadcasts back; the corpus never sort-merge-joins
     # or shuffles on the raw key domain for the semi join.
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan

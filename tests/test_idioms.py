@@ -11,7 +11,11 @@
   ``scope``);
 - threads start only in ``utils/threads.run_concurrently``, which hands
   the caller's job group and local properties to every task, so no
-  fan-out of driver-side Spark calls loses its jobs' attribution.
+  fan-out of driver-side Spark calls loses its jobs' attribution;
+- plan text is read only through ``utils/plans.plan_text``;
+- rows are built JVM-side (``utils/rows.literal_rows``), never with
+  ``createDataFrame``, whose Python-side rows start a Python worker
+  when an action reads them.
 """
 
 from __future__ import annotations
@@ -37,6 +41,8 @@ RULES = {
         re.compile(r"ThreadPoolExecutor|threading\.Thread|InheritableThread"),
         {"utils/threads.py"},
     ),
+    "plan text": (re.compile(r"\.explain\(|redirect_stdout"), {"utils/plans.py"}),
+    "python rows": (re.compile(r"createDataFrame"), set()),
 }
 
 

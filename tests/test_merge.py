@@ -4,8 +4,6 @@ and batch validation."""
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import re
 import shutil
@@ -15,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from proyecto_final_de_big_data_spark.io.merge import merge_changes
+from proyecto_final_de_big_data_spark.utils.plans import plan_text
 
 _SCHEMA = "id long, p string, val double"
 _CHANGE_SCHEMA = "id long, p string, val double, op string"
@@ -215,10 +214,7 @@ def test_pruned_base_read_plan(spark, base):
         spark.createDataFrame([(1,)], "id long")
     )
     plan_df = pruned.join(keys, "id", "left_anti")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        plan_df.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(plan_df)
     assert re.search(r"PartitionFilters: \[p#\d+ IN \(a,b\)\]", plan), plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan

@@ -18,6 +18,7 @@ from proyecto_final_de_big_data_spark.ml.pipeline import (
     save_model,
     train_and_evaluate,
 )
+from proyecto_final_de_big_data_spark.utils.plans import plan_text
 
 
 def test_lr_train_evaluate_score_roundtrip(spark, sf_dir, tmp_path):
@@ -108,9 +109,6 @@ def test_text_classifier_separates_planted_spam(spark):
 
 
 def test_text_classifier_scoring_is_map_only(spark):
-    import contextlib
-    import io
-
     from proyecto_final_de_big_data_spark.ml.text_classifier import (
         TextClassifierConfig,
         score_quality,
@@ -125,11 +123,8 @@ def test_text_classifier_scoring_is_map_only(spark):
         df, TextClassifierConfig(n_features=64, max_iter=5)
     )
     scored = score_quality(model, df)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        scored.explain("formatted")
     # the 100-TB scoring path must be a pure projection over the scan
-    assert "Exchange" not in buf.getvalue()
+    assert "Exchange" not in plan_text(scored)
 
 
 def test_evaluate_matches_regression_evaluator(spark):

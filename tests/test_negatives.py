@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from proyecto_final_de_big_data_spark.operators.negatives import (
     hash_negative_samples,
@@ -63,3 +65,36 @@ def test_validation(spark):
         _run(spark, [(1, 0)], range(3), k=0)
     with pytest.raises(ValueError, match="oversample"):
         _run(spark, [(1, 0)], range(3), k=1, oversample=0)
+
+
+_SETTINGS = dict(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@given(
+    pos=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=5),
+            st.integers(min_value=0, max_value=9),
+        ),
+        min_size=1,
+        max_size=25,
+    ),
+    k=st.integers(min_value=1, max_value=3),
+)
+@settings(**_SETTINGS)
+def test_negative_sampling_never_emits_positives(spark, pos, k):
+    from proyecto_final_de_big_data_spark.operators.negatives import (
+        hash_negative_samples,
+    )
+
+    pdf = spark.createDataFrame(list(set(pos)), "u long, it long")
+    items = spark.createDataFrame([(i,) for i in range(10)], "it long")
+    out = hash_negative_samples(pdf, "u", "it", items, k=k, oversample=6)
+    pos_set = set(pos)
+    for r in out.collect():
+        assert (r["user"], r["item"]) not in pos_set
+        assert 1 <= r["draw_rank"] <= k

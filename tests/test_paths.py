@@ -215,6 +215,21 @@ def test_multipass_blocking_recovers_cross_block_pairs(spark):
     assert got == [("ab", "ac"), ("ab", "bb")]
 
 
+@pytest.mark.parametrize("odd", ["Customer#00012345", "Customer#0001234567"])
+def test_fuzzy_name_match_guard_raises_on_other_name_length(spark, odd):
+    # fuzzy_name_match_profile's blocking zones are fixed positions of
+    # 18-character names; a 17- or 19-character name fails at action
+    # time, even when only the count is asked for.
+    from proyecto_final_de_big_data_spark.queries.analytics import _names_fit_blocking_zones
+
+    df = spark.createDataFrame([("Customer#000123456",), (odd,)], "c_name string")
+    guarded = _names_fit_blocking_zones(df)
+    with pytest.raises(Exception, match=f"blocking zones assume 18-char names: got {len(odd)}"):
+        guarded.count()
+    ok = _names_fit_blocking_zones(df.limit(1))
+    assert ok.collect() == df.limit(1).collect()
+
+
 # -- per-key linear trend (operators/trend.py) --------------------------
 
 from proyecto_final_de_big_data_spark.operators.trend import (  # noqa: E402

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from proyecto_final_de_big_data_spark.operators.profile import profile_columns
+from proyecto_final_de_big_data_spark.utils.plans import plan_text
 
 SF = "/root/testdata/sf0.001"
 
@@ -47,15 +48,9 @@ def test_profile_subset_and_approx_mode(spark):
 def test_profile_single_aggregation_pass(spark):
     # The whole profile must be ONE partial+final aggregation: a second
     # scan or a join would show up as extra Exchanges/Joins.
-    import contextlib
-    import io
     import re
 
-    df = profile_columns(_frame(spark), ["id", "s"])
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(profile_columns(_frame(spark), ["id", "s"]))
     assert "Join" not in plan
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
 

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from proyecto_final_de_big_data_spark.operators.rrf import rrf_fuse
 
@@ -66,3 +68,38 @@ def test_top_n_cut(spark):
     a = _rank(spark, [(i, i) for i in range(1, 20)])
     out = rrf_fuse([a], ["doc_id"], top_n=5).collect()
     assert len(out) == 5 and {r["fused_rank"] for r in out} == set(range(1, 6))
+
+
+_SETTINGS = dict(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@given(
+    ranks_a=st.permutations(list(range(1, 7))),
+    ranks_b=st.permutations(list(range(1, 7))),
+)
+@settings(**_SETTINGS)
+def test_rrf_is_rank_only(spark, ranks_a, ranks_b):
+    # RRF must depend on RANKS alone: feeding the same rankings with
+    # any doc-id relabeling permutes the output identically (scores
+    # multiset invariant).
+    from proyecto_final_de_big_data_spark.operators.rrf import rrf_fuse
+
+    a = spark.createDataFrame(
+        [(i, r) for i, r in enumerate(ranks_a)], "doc_id long, rank int"
+    )
+    b = spark.createDataFrame(
+        [(i, r) for i, r in enumerate(ranks_b)], "doc_id long, rank int"
+    )
+    out = rrf_fuse([a, b], ["doc_id"]).collect()
+    scores = sorted(r["rrf_score"] for r in out)
+    want = sorted(
+        round(1 / (60 + ra) + 1 / (60 + rb), 6)
+        for ra, rb in zip(ranks_a, ranks_b)
+    )
+    import pytest
+
+    assert scores == pytest.approx(want, abs=2e-6)

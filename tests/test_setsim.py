@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from proyecto_final_de_big_data_spark.operators.dedup import jaccard_pairs_index
@@ -137,3 +139,43 @@ def test_containment_threshold_validated(spark):
     df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     with pytest.raises(ValueError, match="threshold"):
         containment_pairs(df, "doc_id", "text", threshold=0.0)
+
+
+_SETTINGS = dict(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+_word = st.text(alphabet="abcde", min_size=1, max_size=3)
+_doc = st.lists(_word, min_size=1, max_size=10).map(" ".join)
+
+
+@given(
+    docs=st.lists(_doc, min_size=2, max_size=10, unique=True),
+    tau=st.sampled_from([0.3, 0.6, 0.9]),
+)
+@settings(**_SETTINGS)
+def test_prefix_filter_lossless_for_any_corpus(spark, docs, tau):
+    # The prefix-filter theorem, exercised adversarially: tiny vocab
+    # ("abcde"^<=3) forces heavy shingle sharing — exactly the regime
+    # where a broken prefix would lose pairs.
+    from proyecto_final_de_big_data_spark.operators.dedup import (
+        jaccard_pairs_index,
+    )
+    from proyecto_final_de_big_data_spark.operators.setsim import (
+        jaccard_prefix_pairs,
+    )
+
+    df = spark.createDataFrame(
+        list(enumerate(docs)), "doc_id long, text string"
+    )
+    full = sorted(
+        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
+        for r in jaccard_pairs_index(df, "doc_id", "text", 2, tau).collect()
+    )
+    pref = sorted(
+        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
+        for r in jaccard_prefix_pairs(df, "doc_id", "text", 2, tau).collect()
+    )
+    assert pref == full

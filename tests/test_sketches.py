@@ -14,6 +14,7 @@ from proyecto_final_de_big_data_spark.operators.sketches import (
     theta_partials,
     theta_rollup,
 )
+from proyecto_final_de_big_data_spark.utils.plans import plan_text
 
 
 def _df(spark):
@@ -193,13 +194,7 @@ def test_cm_absent_key_estimates_zero_or_collision(spark):
 
 
 def test_cm_build_is_partial_plus_final_agg(spark):
-    import contextlib
-    import io
-
     df = spark.range(0, 100).select((F.col("id") % 7).alias("k"))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        cm_build(df, "k").explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(cm_build(df, "k"))
     assert plan.count("HashAggregate") >= 2, plan  # map-side combine
     assert "Generate" in plan  # depth expansion is map-side, pre-shuffle

@@ -8,7 +8,6 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 
-
 # -- systematic weighted sampling --------------------------------------
 
 from proyecto_final_de_big_data_spark.operators.split import (  # noqa: E402
@@ -170,3 +169,25 @@ def test_cluster_safe_split_never_splits_a_component(spark, edges):
         assert splits[a] == splits[b] or find(a) != find(b)
     for x in range(26):
         assert splits[x] == splits[find(x)]
+
+
+@given(
+    weights=st.lists(
+        st.integers(min_value=1, max_value=9), min_size=3, max_size=12
+    ),
+    k=st.integers(min_value=1, max_value=4),
+)
+@settings(**{**_SETTINGS, "max_examples": 8})
+def test_weighted_sample_k_set_properties(spark, weights, k):
+    from proyecto_final_de_big_data_spark.operators.split import (
+        weighted_sample_k,
+    )
+
+    df = spark.createDataFrame(
+        [(i, float(w)) for i, w in enumerate(weights)], "id long, w double"
+    )
+    got = [r["id"] for r in weighted_sample_k(df, "id", "w", k).collect()]
+    assert len(got) == min(k, len(weights))      # exactly k (or all)
+    assert len(set(got)) == len(got)             # without replacement
+    again = [r["id"] for r in weighted_sample_k(df, "id", "w", k).collect()]
+    assert sorted(got) == sorted(again)          # deterministic

@@ -9,6 +9,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from proyecto_final_de_big_data_spark.operators.asof import asof_join, interval_join
+from proyecto_final_de_big_data_spark.utils.plans import plan_text
 
 
 def _ts(s: str) -> dt.datetime:
@@ -63,20 +64,10 @@ def test_asof_plan_has_single_exchange_no_nested_loop(spark):
     out = asof_join(
         _mk_left(spark), _mk_right(spark), "k", "ts", "rts", ["payload"]
     )
-    plan = _explain(out)
+    plan = plan_text(out)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "Window" in plan  # the carry-forward is a window, not a join
-
-
-def _explain(df) -> str:
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    return buf.getvalue()
 
 
 def test_interval_join_basic_and_boundaries(spark):
@@ -194,7 +185,7 @@ def test_interval_join_plan_has_no_nested_loop(spark):
         ["k", "s", "e", "name"],
     )
     out = interval_join(left, right, "k", "ts", "s", "e", bucket="1 day")
-    plan = _explain(out)
+    plan = plan_text(out)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
